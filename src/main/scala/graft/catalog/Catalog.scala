@@ -1,8 +1,5 @@
 package graft.catalog
 
-import java.sql.{Connection, DriverManager}
-import java.util.Properties
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.Endpoint
@@ -112,24 +109,19 @@ final class ParquetCatalog(dir: String) extends FileCatalog(dir, "parquet")
 final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     extends Catalog {
 
-  private def withConn[A](f: Connection => A): A = {
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    val conn = DriverManager.getConnection(endpoint.url, props)
-    try f(conn)
-    finally conn.close()
-  }
-
-  override protected def allTables: Seq[String] = withConn { conn =>
+  /** Lower-cased names of every object of one `getTables` type. */
+  private def objects(kind: String): Seq[String] = endpoint.withConnection { conn =>
     val rs = conn.getMetaData
-      .getTables(null, schema.orNull, "%", Array("TABLE"))
+      .getTables(null, schema.orNull, "%", Array(kind))
     val buf = scala.collection.mutable.ArrayBuffer[String]()
     while (rs.next()) buf += rs.getString("TABLE_NAME").toLowerCase
     rs.close()
     buf.sorted.toSeq
   }
 
-  override def primaryKey(table: String): Seq[String] = withConn { conn =>
+  override protected def allTables: Seq[String] = objects("TABLE")
+
+  override def primaryKey(table: String): Seq[String] = endpoint.withConnection { conn =>
     // Derby/H2 store identifiers upper-case, MySQL as-created: probe both.
     val meta = conn.getMetaData
     val names = Seq(table, table.toUpperCase, table.toLowerCase).distinct
@@ -146,21 +138,14 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
       .getOrElse(Seq.empty)
   }
 
-  override def read(spark: SparkSession, table: String): DataFrame = {
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    spark.read.jdbc(endpoint.url, table, props)
-  }
+  override def read(spark: SparkSession, table: String): DataFrame =
+    spark.read.jdbc(endpoint.url, table, endpoint.properties)
 
-  override def rowCount(spark: SparkSession, table: String): Long = {
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    spark.read.jdbc(endpoint.url, s"(SELECT COUNT(*) AS c FROM $table) ct", props)
-      .head().get(0) match {
+  override def rowCount(spark: SparkSession, table: String): Long =
+    read(spark, s"(SELECT COUNT(*) AS c FROM $table) ct").head().get(0) match {
       case n: Number => n.longValue()
       case other => throw new IllegalStateException(s"unexpected count: $other")
     }
-  }
 
   /** JDBC reads route through the PK-range partitioned extract, so a
     * plain `sync` gets task-per-slice parallelism (the reference's
@@ -176,14 +161,9 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     * object-migration surface (readme.md:10,81 advertises view
     * migration; cmd/root.go:166-180 left it commented out). Same
     * DatabaseMetaData route as [[allTables]] with type=VIEW. */
-  def listViews(exclude: Seq[String] = Seq.empty): Seq[String] = withConn { conn =>
-    val rs = conn.getMetaData
-      .getTables(null, schema.orNull, "%", Array("VIEW"))
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    while (rs.next()) buf += rs.getString("TABLE_NAME").toLowerCase
-    rs.close()
+  def listViews(exclude: Seq[String] = Seq.empty): Seq[String] = {
     val ex = exclude.map(_.toLowerCase).toSet
-    buf.sorted.toSeq.filterNot(ex.contains)
+    objects("VIEW").filterNot(ex.contains)
   }
 
   /** The view's CREATE statement, normalized to a replayable
@@ -194,7 +174,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     * text), and standard INFORMATION_SCHEMA.VIEWS (H2/PostgreSQL —
     * usually just the SELECT body, wrapped here). None => the dialect
     * hides view text; the caller reports it skipped. */
-  def viewDefinition(view: String): Option[String] = withConn { conn =>
+  def viewDefinition(view: String): Option[String] = endpoint.withConnection { conn =>
     def rows(sql: String, col: Int): Option[String] = {
       val st = conn.createStatement()
       try {
@@ -227,7 +207,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
 
   /** Run DDL/SQL directly on the endpoint (truncate, CREATE TABLE
     * replay — the reference's S11/S12 driver-side statements). */
-  def execute(sql: String): Unit = withConn { conn =>
+  def execute(sql: String): Unit = endpoint.withConnection { conn =>
     val st = conn.createStatement()
     try st.execute(sql)
     finally st.close()
@@ -236,7 +216,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
   /** All statements on one connection inside one transaction: commit
     * on success, rollback + rethrow on any failure — the reference's
     * per-table Begin/Commit/Rollback (cmd/tablemeta.go:56,93-95). */
-  def executeTxn(statements: Seq[String]): Unit = withConn { conn =>
+  def executeTxn(statements: Seq[String]): Unit = endpoint.withConnection { conn =>
     conn.setAutoCommit(false)
     try {
       val st = conn.createStatement()
@@ -251,11 +231,13 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     }
   }
 
-  /** Catalog-level existence via JDBC metadata, pattern-escaped (same
-    * rationale as JdbcSink.exists: never error-driven, `_`/`%` in the
-    * name must not wildcard). */
-  def tableExists(table: String): Boolean = withConn { conn =>
+  /** Catalog-level existence via JDBC metadata — never error-driven
+    * (see `Sink.exists`). */
+  def tableExists(table: String): Boolean = endpoint.withConnection { conn =>
     val md = conn.getMetaData
+    // getTables takes a PATTERN: escape '_'/'%' or `inc_t` would
+    // match `incat` in any schema and a missing table could report
+    // present (skipping the verified-missing full-load path)
     val esc = Option(md.getSearchStringEscape).getOrElse("\\")
     def escaped(n: String): String =
       n.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")

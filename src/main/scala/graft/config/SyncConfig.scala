@@ -3,8 +3,27 @@ package graft.config
 /** Connection half of the reference's yml config (example.yml:1-12,
   * connect/connect.go:3-14): one endpoint per side. For JDBC endpoints
   * `url` is a full JDBC URL; `props` carries user/password/driver.
+  * Every raw JDBC connection and every Spark JDBC read or write of the
+  * sync layer goes through [[properties]] / [[withConnection]].
   */
-final case class Endpoint(url: String, props: Map[String, String] = Map.empty)
+final case class Endpoint(url: String, props: Map[String, String] = Map.empty) {
+
+  /** `props` as the `java.util.Properties` JDBC APIs take. */
+  def properties: java.util.Properties = {
+    val p = new java.util.Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    p
+  }
+
+  /** Run `f` on a fresh connection, closed afterwards. A `driver` prop
+    * is loaded first, for drivers that do not self-register. */
+  def withConnection[A](f: java.sql.Connection => A): A = {
+    props.get("driver").foreach(Class.forName)
+    val conn = java.sql.DriverManager.getConnection(url, properties)
+    try f(conn)
+    finally conn.close()
+  }
+}
 
 /** Mirror of the reference's viper yml surface (cmd/app.go:19-32,
   * cmd/root.go:646-672, example.yml):

@@ -2,6 +2,7 @@ package graft.sync
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 import graft.catalog.Catalog
 import graft.partition.KeyRangeSlicer
@@ -35,6 +36,9 @@ object DeltaSync {
       rowsCopied: Long,
       ok: Boolean,
       error: Option[String] = None)
+
+  /** The slice key's column while checksumming. */
+  private val KeyCol = "__sk"
 
   /** Slice id of a key under sorted cut values: the number of cuts at
     * or below it; NULL keys land in slice 0 (the unbounded-below
@@ -91,6 +95,7 @@ object DeltaSync {
       pageSize: Long = 100000L,
       maxSlices: Int = 60): DeltaReport = {
     try Jobs.tagged(spark, s"graft-delta-$table") {
+      val pk = catalog.primaryKey(table)
       // ONE planning pass: JDBC sources derive cuts from pushed-down
       // histograms (the source DB computes them over its PK index) and
       // REUSE them as the read predicates, so delta planning costs the
@@ -98,22 +103,12 @@ object DeltaSync {
       // Spark-side pre-scan, no second histogram pass
       val jdbcPlan = catalog match {
         case j: graft.catalog.JdbcCatalog =>
-          j.primaryKey(table).headOption.map { lead =>
-            (lead, PartitionedReader.pushedCuts(j.endpoint, table, numSlices))
-          }.collect { case (lead, cs) if cs.nonEmpty => (j.endpoint, lead, cs) }
+          PartitionedReader.readFixed(spark, j.endpoint, table, pk.headOption, numSlices)
         case _ => None
       }
-      val src = jdbcPlan match {
-        case Some((ep, lead, cs)) =>
-          PartitionedReader.readSliced(spark, ep, table, lead, cs)
-        case None =>
-          Normalize.lowercaseColumns(
-            catalog.readPartitioned(spark, table, pageSize, maxSlices))
-      }
-      val pks = catalog.primaryKey(table).map(_.toLowerCase)
-        .filter(src.columns.contains)
-      val numericLead = pks.headOption
-        .filter(c => src.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+      val src = jdbcPlan.fold(Normalize.lowercaseColumns(
+        catalog.readPartitioned(spark, table, pageSize, maxSlices)))(_._1)
+      val pks = pk.map(_.toLowerCase).filter(src.columns.contains)
 
       def fullLoad(): DeltaReport = {
         sink.overwrite(src, table)
@@ -121,63 +116,43 @@ object DeltaSync {
         DeltaReport(table, 1, 1, n, ok = true)
       }
 
-      // shared checksum-diff-repair walk, abstracted over the slice
-      // key: the numeric path keys on the lead PK itself (range DELETE
-      // rides the PK index on any dialect); the hash path keys on the
-      // 60-bit md5 key of the full PK tuple ([[HashKey]] — fixed cuts,
-      // no planning scan, works for string AND composite keys)
-      def runDelta(
-          keyName: String,
-          srcK: DataFrame,
-          dstK: DataFrame,
-          cuts: Seq[Long],
-          cols: Seq[String],
-          repairRange: (Option[Long], Option[Long]) => Unit): DeltaReport = {
-        val k = cuts.length + 1
-        def bySlice(d: DataFrame) =
-          rangeChecksums(d, keyName, cuts, cols).collect()
-            .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
-        val s = bySlice(srcK)
-        val d = bySlice(dstK)
-        val changed = (0 until k).filter(i => s.get(i) != d.get(i))
-        if (changed.isEmpty)
-          DeltaReport(table, k, 0, 0L, ok = true)
-        else if (changed.size.toDouble / k > maxChangedFraction) fullLoad()
-        else {
-          mergeRanges(changed, cuts).foreach { case (lo, hi) => repairRange(lo, hi) }
-          val copied = changed.flatMap(i => s.get(i))
-            .map(_.head.asInstanceOf[Long]).sum
-          DeltaReport(table, k, changed.size, copied, ok = true)
-        }
-      }
-
       if (!sink.exists(spark, table)) fullLoad()
       else if (pks.isEmpty) fullLoad() // nothing sliceable: behave like syncTable
       else {
         val dst = Normalize.lowercaseColumns(sink.readBack(spark, table))
         val cols = src.columns.sorted.toIndexedSeq
-        numericLead match {
-          case Some(pk) =>
-            // checksum slices = the read slices when the pushed plan
-            // produced them (1:1 alignment — one planning pass covers
-            // both); file sources estimate quantiles from the data
-            val cuts = jdbcPlan match {
-              case Some((_, _, cs)) => cs
-              case None => KeyRangeSlicer.quantileCuts(src, pk, numSlices)
-            }
-            runDelta(pk, src, dst, cuts, cols, (lo, hi) =>
-              sink.replaceRange(spark,
-                src.filter(RangeBounds.column(col(pk), lo, hi)), table, pk, lo, hi))
-          case None =>
-            // string/composite PK: slice the md5 key space — uniform by
-            // construction, so the fixed cuts balance with NO data scan
-            val hk = HashKey.column(pks.map(col))
-            val cuts = HashKey.cuts(numSlices)
-            runDelta("__hk",
-              src.withColumn("__hk", hk), dst.withColumn("__hk", hk), cuts, cols,
-              (lo, hi) =>
-                sink.replaceKeyRange(spark,
-                  src.filter(RangeBounds.column(hk, lo, hi)), table, pks, lo, hi))
+        val (key, cuts) =
+          if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
+            // numeric lead PK: slice on the key itself (the range DELETE
+            // rides the PK index on any dialect). Checksum slices = the
+            // read slices when the pushed plan produced them (1:1
+            // alignment — one planning pass covers both); file sources
+            // estimate quantiles from the data
+            (SliceKey.Lead(pks.head),
+              jdbcPlan.fold(KeyRangeSlicer.quantileCuts(src, pks.head, numSlices))(_._2))
+          else
+            // string/composite PK: slice the 60-bit md5 key space of the
+            // full PK tuple — uniform by construction, so the fixed cuts
+            // balance with NO data scan
+            (SliceKey.Hashed(pks), HashKey.cuts(numSlices))
+        val k = cuts.length + 1
+        def bySlice(d: DataFrame) =
+          rangeChecksums(d.withColumn(KeyCol, key.column), KeyCol, cuts, cols).collect()
+            .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
+        val s = bySlice(src)
+        val d = bySlice(dst)
+        val changed = (0 until k).filter(i => s.get(i) != d.get(i))
+        if (changed.isEmpty)
+          DeltaReport(table, k, 0, 0L, ok = true)
+        else if (changed.size.toDouble / k > maxChangedFraction) fullLoad()
+        else {
+          mergeRanges(changed, cuts).foreach { case (lo, hi) =>
+            sink.replaceRange(spark,
+              src.filter(RangeBounds.column(key.column, lo, hi)), table, key, lo, hi)
+          }
+          val copied = changed.flatMap(i => s.get(i))
+            .map(_.head.asInstanceOf[Long]).sum
+          DeltaReport(table, k, changed.size, copied, ok = true)
         }
       }
     } catch {

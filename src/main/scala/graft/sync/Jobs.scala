@@ -103,12 +103,7 @@ object Jobs {
     * (PostgreSQL would need pg_cancel_backend, Derby has nothing). */
   def killTagged(endpoint: Endpoint, allRuns: Boolean = false): Seq[String] =
     if (!isMySqlWire(endpoint.url)) Seq.empty
-    else {
-      val p = new java.util.Properties()
-      endpoint.props.foreach { case (k, v) => p.setProperty(k, v) }
-      val conn = java.sql.DriverManager.getConnection(endpoint.url, p)
-      try killTagged(conn, allRuns) finally conn.close()
-    }
+    else endpoint.withConnection(killTagged(_, allRuns))
 
   private val armedHooks =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()

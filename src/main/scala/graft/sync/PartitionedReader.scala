@@ -1,8 +1,5 @@
 package graft.sync
 
-import java.sql.DriverManager
-import java.util.Properties
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.JdbcCatalog
@@ -39,40 +36,60 @@ object PartitionedReader {
       endpoint: Endpoint,
       table: String,
       pageSize: Long = 100000L,
-      maxSlices: Int = 60): DataFrame = {
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    def fullScan =
-      Normalize.lowercaseColumns(spark.read.jdbc(endpoint.url, table, props))
+      maxSlices: Int = 60): DataFrame =
+    // no PK = no split key: one full scan (reference S6)
+    scan(spark, endpoint, table,
+      plan(endpoint, table, new JdbcCatalog(endpoint).primaryKey(table).headOption)(
+        KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
 
-    val pk = new JdbcCatalog(endpoint).primaryKey(table)
-    if (pk.isEmpty) return fullScan // reference S6: no split key
-    val lead = pk.head
+  /** [[DeltaSync]]'s read: a FIXED `numSlices`, skipped for tables under
+    * 2·numSlices rows (too few rows per slice to gain anything). The
+    * cuts come back with the read, so the caller checksums exactly the
+    * read's slices instead of paying a second planning pass. None when
+    * the table does not slice. */
+  def readFixed(
+      spark: SparkSession,
+      endpoint: Endpoint,
+      table: String,
+      lead: Option[String],
+      numSlices: Int): Option[(DataFrame, Seq[Long])] =
+    plan(endpoint, table, lead)(rows => if (rows < 2L * numSlices) 1 else numSlices)
+      .map { case p @ (_, cuts) => scan(spark, endpoint, table, Some(p)) -> cuts }
 
-    // one planning connection for all pushed-down statistics (bounds +
-    // histograms, including adaptive refinement rounds)
-    val conn = DriverManager.getConnection(endpoint.url, props)
-    try {
-      queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table")
-        .headOption match {
-        case Some(Seq(cnt: Number, mn: Number, mx: Number)) =>
-          val rowCount = cnt.longValue()
-          val n = KeyRangeSlicer.numSlices(rowCount, pageSize, maxSlices)
-          val (mnL, mxL) = (mn.longValue(), mx.longValue())
-          if (n <= 1 || mxL <= mnL) return fullScan
-
-          val nBuckets = math.max(64, n * 8)
-          val cuts = KeyRangeSlicer.adaptiveCuts(
-            histFetcher(conn, lead, table), mnL, mxL, n, nBuckets)
-          if (cuts.isEmpty) fullScan
-          else
-            Normalize.lowercaseColumns(
-              spark.read.jdbc(
-                endpoint.url, table, KeyRangeSlicer.predicatesFromCuts(lead, cuts), props))
-        case _ => fullScan // empty table or non-numeric PK
+  /** The slice planner: one `COUNT(*), MIN, MAX` round trip, then
+    * adaptive histogram cuts for `slices(rowCount)` slices, all on one
+    * planning connection. The lead key with its cuts, or None when
+    * there is no lead key, the key is non-numeric, the table is empty
+    * or spans a single key, or one slice suffices. */
+  private def plan(endpoint: Endpoint, table: String, lead: Option[String])(
+      slices: Long => Int): Option[(String, Seq[Long])] =
+    lead.flatMap { lead =>
+      endpoint.withConnection { conn =>
+        queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table")
+          .headOption match {
+          case Some(Seq(cnt: Number, mn: Number, mx: Number)) =>
+            val n = slices(cnt.longValue())
+            val (lo, hi) = (mn.longValue(), mx.longValue())
+            if (n <= 1 || hi <= lo) None
+            else Some(KeyRangeSlicer.adaptiveCuts(
+              histFetcher(conn, lead, table), lo, hi, n, math.max(64, n * 8)))
+              .filter(_.nonEmpty).map(lead -> _)
+          case _ => None // empty table or non-numeric PK
+        }
       }
-    } finally conn.close()
-  }
+    }
+
+  /** One JDBC read: a task per slice of `slicing`, else one full scan. */
+  private def scan(
+      spark: SparkSession,
+      endpoint: Endpoint,
+      table: String,
+      slicing: Option[(String, Seq[Long])]): DataFrame =
+    Normalize.lowercaseColumns(slicing match {
+      case Some((lead, cuts)) => spark.read.jdbc(
+        endpoint.url, table, KeyRangeSlicer.predicatesFromCuts(lead, cuts), endpoint.properties)
+      case None => spark.read.jdbc(endpoint.url, table, endpoint.properties)
+    })
 
   /** Pushed-down histogram of [lo, hi]; the adaptive planner calls
     * this again on any bucket too hot to split in one pass. */
@@ -89,51 +106,6 @@ object PartitionedReader {
     queryRows(conn, histSql).collect {
       case Seq(b: Number, c: Number) => (b.intValue(), c.longValue())
     }
-  }
-
-  /** Equal-count cut values for a FIXED slice count, all statistics
-    * pushed to the source database (bounds + adaptive histograms, no
-    * row transfer) — the planning primitive DeltaSync uses so that its
-    * slicing never costs a Spark-side scan. Empty when the table has
-    * no numeric lead PK, is empty, or spans a single key. */
-  def pushedCuts(endpoint: Endpoint, table: String, numSlices: Int): Seq[Long] = {
-    if (numSlices <= 1) return Seq.empty
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    val pk = new JdbcCatalog(endpoint).primaryKey(table)
-    if (pk.isEmpty) return Seq.empty
-    val lead = pk.head
-    val conn = DriverManager.getConnection(endpoint.url, props)
-    try {
-      queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table")
-        .headOption match {
-        case Some(Seq(cnt: Number, mn: Number, mx: Number)) =>
-          val (mnL, mxL) = (mn.longValue(), mx.longValue())
-          // row-count gate: a table smaller than a couple of rows per
-          // slice gains nothing from slicing — skip the histogram scan
-          if (mxL <= mnL || cnt.longValue() < 2L * numSlices) Seq.empty
-          else KeyRangeSlicer.adaptiveCuts(
-            histFetcher(conn, lead, table), mnL, mxL, numSlices,
-            math.max(64, numSlices * 8))
-        case _ => Seq.empty // empty table or non-numeric PK
-      }
-    } finally conn.close()
-  }
-
-  /** Partitioned read over PRE-COMPUTED cut values — lets a caller that
-    * already derived cuts (DeltaSync) reuse them for read parallelism
-    * instead of paying a second planning pass. */
-  def readSliced(
-      spark: SparkSession,
-      endpoint: Endpoint,
-      table: String,
-      lead: String,
-      cuts: Seq[Long]): DataFrame = {
-    val props = new Properties()
-    endpoint.props.foreach { case (k, v) => props.setProperty(k, v) }
-    Normalize.lowercaseColumns(
-      spark.read.jdbc(
-        endpoint.url, table, KeyRangeSlicer.predicatesFromCuts(lead, cuts), props))
   }
 
   /** Pushed-down planning query on the shared connection: the database

@@ -1,8 +1,7 @@
 package graft.sync
 
-import java.util.Properties
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.catalog.{Catalog, JdbcCatalog}
 import graft.config.{Endpoint, SyncConfig}
@@ -48,30 +47,46 @@ sealed trait Sink {
   def rowCount(spark: SparkSession, table: String): Option[Long] =
     try Some(readBack(spark, table).count())
     catch { case _: Exception => None }
-  /** Replace one half-open key range [lo, hi) of the target with `df`
-    * (already filtered to that range; `lo`/`hi` None = unbounded, and
-    * the unbounded-below range owns NULL keys) — the repair primitive
-    * of [[DeltaSync]]. JDBC sinks DELETE the range server-side then
+  /** Replace one half-open range [lo, hi) of `key` in the target with
+    * `df` (already filtered to that range; `lo`/`hi` None = unbounded,
+    * and the unbounded-below range owns NULL keys) — the repair
+    * primitive of [[DeltaSync]]. JDBC sinks DELETE the range
+    * server-side where the dialect can compute the key, then
     * batch-append; file sinks rewrite. */
   def replaceRange(
       spark: SparkSession,
       df: DataFrame,
       table: String,
-      pkCol: String,
+      key: SliceKey,
       lo: Option[Long],
       hi: Option[Long]): Unit
-  /** Replace one half-open [[HashKey]] range [lo, hi) of the target —
-    * the repair primitive for string/composite PKs, where no numeric
-    * order exists to range over. JDBC sinks with a dialect md5 still
-    * DELETE server-side over the key expression; others fall back to a
-    * bounded PK-batch delete of just the dirty range's rows. */
-  def replaceKeyRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      pkCols: Seq[String],
-      lo: Option[Long],
-      hi: Option[Long]): Unit
+}
+
+/** The key a delta repair slices on and ranges over: the numeric lead
+  * PK itself, or the [[HashKey]] of the whole PK tuple (string and
+  * composite PKs, where no numeric order exists to range over). */
+sealed trait SliceKey {
+  /** The PK columns that identify a range's rows. */
+  def pkCols: Seq[String]
+  def column: Column
+  /** The key as server-side SQL on `url`'s dialect; None when that
+    * dialect cannot compute it. */
+  def sql(url: String): Option[String]
+}
+
+object SliceKey {
+  final case class Lead(pk: String) extends SliceKey {
+    def pkCols: Seq[String] = Seq(pk)
+    def column: Column = col(pk)
+    def sql(url: String): Option[String] = Some(pk)
+  }
+
+  /** Only MySQL-wire dialects have the server-side md5 rendition. */
+  final case class Hashed(pkCols: Seq[String]) extends SliceKey {
+    def column: Column = HashKey.column(pkCols.map(col))
+    def sql(url: String): Option[String] =
+      if (Jobs.isMySqlWire(url)) Some(s"(${HashKey.mysqlSql(pkCols)})") else None
+  }
 }
 
 /** Deterministic 60-bit slice key over ARBITRARY primary keys: the
@@ -125,7 +140,6 @@ private[sync] object RangeBounds {
 
   def column(pk: org.apache.spark.sql.Column, lo: Option[Long], hi: Option[Long])
       : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.lit
     (lo, hi) match {
       case (Some(a), Some(b)) => pk >= lit(a) && pk < lit(b)
       case (Some(a), None)    => pk >= lit(a)
@@ -135,22 +149,23 @@ private[sync] object RangeBounds {
   }
 }
 
-/** The delta-repair DELETE statements as PURE renderers, split out of
-  * the JDBC choreography so both dialect branches are decidable by
-  * unit test (`DeltaSyncSpec`): the live Derby specs exercise the
-  * generic scratch-table branch end-to-end; no second embedded JDBC
-  * engine ships in this environment (zero egress), so the MySQL branch
-  * and the generic statements' SQL-standard shape (CREATE TABLE AS ..
-  * WITH NO DATA + EXISTS-join DELETE — valid on H2/PostgreSQL/Derby)
-  * are pinned here as strings. */
+/** The delta-repair statements as PURE renderers, split out of the
+  * JDBC choreography so every dialect branch is decidable by unit test
+  * (`DeltaSyncSpec`): the live Derby specs exercise the server-side
+  * numeric DELETE and the generic scratch-table branch end-to-end; no
+  * second embedded JDBC engine ships with the build, so the MySQL
+  * hash-key DELETE and the generic statements' SQL-standard shape
+  * (CREATE TABLE AS .. WITH NO DATA + EXISTS-join DELETE — valid on
+  * H2/PostgreSQL/Derby) are pinned there as strings. */
 private[sync] object DeltaRepairSql {
 
-  /** MySQL-wire branch: ONE server-side DELETE over the dialect md5
-    * hash-key rendition — the repair range never leaves the server. */
-  def mysqlHashRangeDelete(
-      table: String, pkCols: Seq[String],
-      lo: Option[Long], hi: Option[Long]): String =
-    s"DELETE FROM $table WHERE ${RangeBounds.predicate(s"(${HashKey.mysqlSql(pkCols)})", lo, hi)}"
+  /** ONE server-side DELETE of the range — the repair range never
+    * leaves the server. None when the dialect cannot compute the key:
+    * the caller takes the scratch-table branch below. */
+  def rangeDelete(
+      url: String, table: String, key: SliceKey,
+      lo: Option[Long], hi: Option[Long]): Option[String] =
+    key.sql(url).map(k => s"DELETE FROM $table WHERE ${RangeBounds.predicate(k, lo, hi)}")
 
   /** Generic branch step 1: clone the PK columns' exact target types
     * (a Spark-CREATED scratch would map strings to CLOB, which the
@@ -211,27 +226,11 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
       spark: SparkSession,
       df: DataFrame,
       table: String,
-      pkCol: String,
+      key: SliceKey,
       lo: Option[Long],
       hi: Option[Long]): Unit = {
-    import org.apache.spark.sql.functions.col
     val keep = readBack(spark, table)
-      .filter(!RangeBounds.column(col(pkCol), lo, hi))
-    val merged = graft.operators.Barrier(keep.unionByName(df))
-    overwrite(merged, table)
-  }
-  /** Same rewrite, keyed on the computed [[HashKey]] (never NULL, so
-    * the unbounded-below NULL convention is vacuous here). */
-  override def replaceKeyRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      pkCols: Seq[String],
-      lo: Option[Long],
-      hi: Option[Long]): Unit = {
-    import org.apache.spark.sql.functions.col
-    val hk = HashKey.column(pkCols.map(col))
-    val keep = readBack(spark, table).filter(!RangeBounds.column(hk, lo, hi))
+      .filter(!RangeBounds.column(key.column, lo, hi))
     val merged = graft.operators.Barrier(keep.unionByName(df))
     overwrite(merged, table)
   }
@@ -291,9 +290,8 @@ final case class JdbcSink(
     batchRowSize: Int = 1000,
     numPartitions: Int = 30)
     extends Sink {
-  private def props: Properties = {
-    val p = new Properties()
-    endpoint.props.foreach { case (k, v) => p.setProperty(k, v) }
+  private def props: java.util.Properties = {
+    val p = endpoint.properties
     p.setProperty("batchsize", batchRowSize.toString)
     // the JDBC writer's own connection cap: it coalesces to at most
     // this many write partitions — the declarative form of a
@@ -312,26 +310,8 @@ final case class JdbcSink(
   override def readBack(spark: SparkSession, table: String): DataFrame =
     Normalize.lowercaseColumns(spark.read.jdbc(endpoint.url, table, props))
   /** Catalog-level existence via JDBC metadata (never error-driven). */
-  override def exists(spark: SparkSession, table: String): Boolean = {
-    endpoint.props.get("driver").foreach(Class.forName)
-    val p = new Properties()
-    endpoint.props.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = java.sql.DriverManager.getConnection(endpoint.url, p)
-    try {
-      val md = conn.getMetaData
-      // getTables takes a PATTERN: escape '_'/'%' or `inc_t` would
-      // match `incat` in any schema and a missing table could report
-      // present (skipping the verified-missing full-load path)
-      val esc = Option(md.getSearchStringEscape).getOrElse("\\")
-      def escaped(n: String): String =
-        n.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
-      def has(n: String): Boolean = {
-        val rs = md.getTables(null, null, escaped(n), null)
-        try rs.next() finally rs.close()
-      }
-      has(table) || has(table.toUpperCase) || has(table.toLowerCase)
-    } finally conn.close()
-  }
+  override def exists(spark: SparkSession, table: String): Boolean =
+    new JdbcCatalog(endpoint).tableExists(table)
   /** Pushed-down watermark: the target database computes MAX itself.
     * Errors propagate — a failed probe must not look like an empty
     * table (see [[Sink.exists]]). */
@@ -349,73 +329,41 @@ final case class JdbcSink(
         case _         => None
       }
     } catch { case _: Exception => None }
-  /** Server-side range DELETE (one statement, rides the PK index) +
-    * batched append of the replacement rows — the target only touches
-    * the changed range, never the whole table. */
+  /** Range repair. Where the dialect computes the key (a numeric PK
+    * anywhere; the md5 [[HashKey]] on MySQL-wire) the DELETE is one
+    * server-side statement per merged range, riding the PK index for a
+    * numeric key. Otherwise (Derby in tests) the target is read back and
+    * filtered to the dirty range in Spark; the doomed KEYS then land in
+    * a scratch table through the executor-side JDBC writer (never
+    * visiting the driver) and ONE server-side keyed DELETE joins them
+    * against the target before the scratch drops. That read-back is a
+    * full target scan per merged range — the price of a dialect with no
+    * server-side md5. The replacement rows are then batch-appended. */
   override def replaceRange(
       spark: SparkSession,
       df: DataFrame,
       table: String,
-      pkCol: String,
+      key: SliceKey,
       lo: Option[Long],
       hi: Option[Long]): Unit = {
-    endpoint.props.get("driver").foreach(Class.forName)
-    val p = new Properties()
-    endpoint.props.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = java.sql.DriverManager.getConnection(endpoint.url, p)
-    try {
+    endpoint.withConnection { conn =>
       val st = conn.createStatement()
-      try st.executeUpdate(
-        s"DELETE FROM $table WHERE ${RangeBounds.predicate(pkCol, lo, hi)}")
-      finally st.close()
-    } finally conn.close()
-    append(df, table)
-  }
-  /** Hash-range repair. On MySQL the DELETE stays server-side — the
-    * predicate is the dialect rendition of the same md5 key, one
-    * statement per merged range. Other dialects (Derby in tests) lack
-    * md5, so the target is read back and filtered to the dirty range
-    * in Spark; the doomed KEYS then land in a scratch table through
-    * the executor-side JDBC writer (never visiting the driver) and ONE
-    * server-side keyed DELETE joins them against the target before the
-    * scratch drops. The read-back is a full target scan per merged
-    * range — the price of a dialect with no server-side md5; the MySQL
-    * path never pays it. */
-  override def replaceKeyRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      pkCols: Seq[String],
-      lo: Option[Long],
-      hi: Option[Long]): Unit = {
-    endpoint.props.get("driver").foreach(Class.forName)
-    val p = new Properties()
-    endpoint.props.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = java.sql.DriverManager.getConnection(endpoint.url, p)
-    try {
-      if (endpoint.url.startsWith("jdbc:mysql")) {
-        val st = conn.createStatement()
-        try st.executeUpdate(DeltaRepairSql.mysqlHashRangeDelete(table, pkCols, lo, hi))
-        finally st.close()
-      } else {
-        import org.apache.spark.sql.functions.col
-        val doomed = readBack(spark, table)
-          .filter(RangeBounds.column(HashKey.column(pkCols.map(col)), lo, hi))
-          .select(pkCols.map(col): _*)
-        val scratch = s"${table}_doomed"
-        val wp = new Properties()
-        endpoint.props.foreach { case (k, v) => wp.setProperty(k, v) }
-        val st = conn.createStatement()
-        try {
+      try DeltaRepairSql.rangeDelete(endpoint.url, table, key, lo, hi) match {
+        case Some(delete) => st.executeUpdate(delete)
+        case None =>
+          val pkCols = key.pkCols
+          val doomed = readBack(spark, table)
+            .filter(RangeBounds.column(key.column, lo, hi))
+            .select(pkCols.map(col): _*)
+          val scratch = s"${table}_doomed"
           try st.executeUpdate(s"DROP TABLE $scratch")
           catch { case _: java.sql.SQLException => () } // leftover from a failed run
           st.executeUpdate(DeltaRepairSql.scratchClone(table, scratch, pkCols))
-          doomed.write.mode("append").jdbc(endpoint.url, scratch, wp)
+          doomed.write.mode("append").jdbc(endpoint.url, scratch, endpoint.properties)
           st.executeUpdate(DeltaRepairSql.scratchKeyedDelete(table, scratch, pkCols))
           st.executeUpdate(s"DROP TABLE $scratch")
-        } finally st.close()
-      }
-    } finally conn.close()
+      } finally st.close()
+    }
     append(df, table)
   }
 }
@@ -437,26 +385,32 @@ final case class TableReport(
   */
 object Sync {
 
+  /** One table's load under job group `group`, reported: the target's
+    * row count after `load` on success; on any failure rows=-1 and the
+    * error, isolated to this table's report. */
+  private def report(spark: SparkSession, sink: Sink, table: String, group: String)(
+      load: => Unit): TableReport = {
+    val t0 = System.nanoTime()
+    def ms = (System.nanoTime() - t0) / 1000000
+    try Jobs.tagged(spark, group) {
+      load
+      TableReport(table, sink.rowCount(spark, table).getOrElse(-1L), ms, ok = true)
+    } catch {
+      case e: Exception => TableReport(table, -1, ms, ok = false, Some(e.getMessage))
+    }
+  }
+
   def syncTable(
       spark: SparkSession,
       catalog: Catalog,
       sink: Sink,
       table: String,
       pageSize: Long = 100000L,
-      maxSlices: Int = 60): TableReport = {
-    val t0 = System.nanoTime()
-    try Jobs.tagged(spark, s"graft-sync-$table") {
-      val df = Normalize.lowercaseColumns(
-        catalog.readPartitioned(spark, table, pageSize, maxSlices))
-      sink.overwrite(df, table)
-      val rows = sink.rowCount(spark, table).getOrElse(-1L)
-      TableReport(table, rows, (System.nanoTime() - t0) / 1000000, ok = true)
-    } catch {
-      case e: Exception =>
-        TableReport(table, -1, (System.nanoTime() - t0) / 1000000, ok = false,
-          Some(e.getMessage))
+      maxSlices: Int = 60): TableReport =
+    report(spark, sink, table, s"graft-sync-$table") {
+      sink.overwrite(Normalize.lowercaseColumns(
+        catalog.readPartitioned(spark, table, pageSize, maxSlices)), table)
     }
-  }
 
   /** Incremental sync: append only source rows whose `watermarkCol`
     * exceeds the target's current maximum. The watermark probe is a
@@ -474,10 +428,8 @@ object Sync {
       table: String,
       watermarkCol: String,
       pageSize: Long = 100000L,
-      maxSlices: Int = 60): TableReport = {
-    val t0 = System.nanoTime()
-    try Jobs.tagged(spark, s"graft-incr-$table") {
-      import org.apache.spark.sql.functions.{col, lit}
+      maxSlices: Int = 60): TableReport =
+    report(spark, sink, table, s"graft-incr-$table") {
       val src = Normalize.lowercaseColumns(
         catalog.readPartitioned(spark, table, pageSize, maxSlices))
       // full-load only on VERIFIED absence/emptiness; a transient probe
@@ -490,14 +442,7 @@ object Sync {
           case None     => src // exists but empty: full load
         }
       sink.append(delta, table)
-      val rows = sink.rowCount(spark, table).getOrElse(-1L)
-      TableReport(table, rows, (System.nanoTime() - t0) / 1000000, ok = true)
-    } catch {
-      case e: Exception =>
-        TableReport(table, -1, (System.nanoTime() - t0) / 1000000, ok = false,
-          Some(e.getMessage))
     }
-  }
 
   /** Continuous replication: a Structured Streaming source appended
     * into any [[Sink]] per micro-batch — the streaming extension of the
@@ -539,22 +484,12 @@ object Sync {
       sink: Sink,
       config: SyncConfig): Seq[TableReport] =
     config.tables.toSeq.map { case (table, sqls) =>
-      val t0 = System.nanoTime()
-      try Jobs.tagged(spark, s"graft-sync-$table") {
+      report(spark, sink, table, s"graft-sync-$table") {
         val dfs = sqls.map { sql =>
-          var r = spark.read.format("jdbc").option("url", src.url)
-            .option("query", Jobs.tagSql(sql))
-          src.props.foreach { case (k, v) => r = r.option(k, v) }
-          Normalize.lowercaseColumns(r.load())
+          Normalize.lowercaseColumns(spark.read.format("jdbc").option("url", src.url)
+            .option("query", Jobs.tagSql(sql)).options(src.props).load())
         }
-        val df = dfs.reduce(_.unionAll(_))
-        sink.overwrite(df, table)
-        val rows = sink.rowCount(spark, table).getOrElse(-1L)
-        TableReport(table, rows, (System.nanoTime() - t0) / 1000000, ok = true)
-      } catch {
-        case e: Exception =>
-          TableReport(table, -1, (System.nanoTime() - t0) / 1000000, ok = false,
-            Some(e.getMessage))
+        sink.overwrite(dfs.reduce(_.unionAll(_)), table)
       }
     }
 
@@ -620,6 +555,11 @@ object Compare {
       dest_is_exist: String,
       is_ok: String)
 
+  private def compareRow(
+      table: String, srcCnt: Long, destCnt: Option[Long], ok: Boolean): CompareRow =
+    CompareRow(table, srcCnt, destCnt.getOrElse(-1L),
+      if (destCnt.isDefined) "YES" else "NO", if (ok) "YES" else "NO")
+
   def countCompare(
       spark: SparkSession,
       src: Catalog,
@@ -630,12 +570,7 @@ object Compare {
       // `select count(*)` runs on each database, cmd/compare.go:112)
       val srcCnt = src.rowCount(spark, t)
       val dest = sink.rowCount(spark, t)
-      CompareRow(
-        t,
-        srcCnt,
-        dest.getOrElse(-1L),
-        if (dest.isDefined) "YES" else "NO",
-        if (dest.contains(srcCnt)) "YES" else "NO")
+      compareRow(t, srcCnt, dest, dest.contains(srcCnt))
     }
 
   /** One replication-freshness finding. */
@@ -780,12 +715,7 @@ object Compare {
             contentChecksum(s, cols).head() == contentChecksum(d, cols).head()
           } catch { case _: Exception => false }
         }
-      CompareRow(
-        t,
-        srcCnt,
-        destCnt.getOrElse(-1L),
-        if (destCnt.isDefined) "YES" else "NO",
-        if (ok) "YES" else "NO")
+      compareRow(t, srcCnt, destCnt, ok)
     }
 
   /** Content equality: both directions of exceptAll are empty. Stronger

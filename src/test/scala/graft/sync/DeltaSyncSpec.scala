@@ -75,6 +75,35 @@ class DeltaSyncSpec extends SparkSpec {
       srcCat.read(spark, "dlt"), sink.readBack(spark, "dlt")))
   }
 
+  test("numeric-PK delta checksums exactly the pushed read plan's slices") {
+    // 300 rows >= 2·numSlices with a sparse tail: the pushed histogram
+    // plan slices the table, and the checksum walk reuses its cuts 1:1
+    DdlReplay.replay(srcCat, Seq("CREATE TABLE plan_t (id BIGINT NOT NULL PRIMARY KEY, v INT)"))
+    val keys = (1L to 250L) ++ (1L to 50L).map(k => 100000L + 1000L * k)
+    JdbcSink(Endpoint(srcUrl)).append(
+      keys.map(k => (k, (k % 7).toInt)).toDF("id", "v"), "plan_t")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "plan_t", numSlices = 12).ok)
+    val idle = DeltaSync.syncDelta(spark, srcCat, sink, "plan_t", numSlices = 12)
+    assert(idle.ok && idle.changedSlices == 0, idle.toString)
+    // the sync read with ceil(300/25) = 12 slices plans the same cuts
+    val read = PartitionedReader.read(spark, Endpoint(srcUrl), "plan_t", pageSize = 25)
+    assert(idle.slices == read.rdd.getNumPartitions)
+    assert(idle.slices == 12, idle.toString) // 11 pushed cuts
+  }
+
+  test("a table under 2·numSlices rows repairs through the quantile fallback") {
+    Seq(srcCat, dstCat).foreach(c => DdlReplay.replay(c, Seq(
+      "CREATE TABLE small_t (id BIGINT NOT NULL PRIMARY KEY, payload VARCHAR(16))")))
+    JdbcSink(Endpoint(srcUrl)).append(
+      (1L to 15L).map(i => (i, s"row_$i")).toDF("id", "payload"), "small_t")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "small_t", numSlices = 10).ok)
+    srcCat.execute("UPDATE small_t SET payload = 'edited' WHERE id = 9")
+    val repair = DeltaSync.syncDelta(spark, srcCat, sink, "small_t", numSlices = 10)
+    assert(repair == DeltaSync.DeltaReport("small_t", 10, 1, 2L, ok = true), repair.toString)
+    assert(Compare.contentEqual(
+      srcCat.read(spark, "small_t"), sink.readBack(spark, "small_t")))
+  }
+
   test("string-PK tables repair one dirty hash slice without full reload") {
     DdlReplay.replay(srcCat, Seq(
       "CREATE TABLE sdlt (sku VARCHAR(24) NOT NULL PRIMARY KEY, payload VARCHAR(32))"))
@@ -131,20 +160,34 @@ class DeltaSyncSpec extends SparkSpec {
     // pin its exact statement so the server-side md5 rendition is
     // decidable; the generic statements are SQL-standard shapes the
     // live Derby specs execute (valid on H2/PostgreSQL too)
-    assert(DeltaRepairSql.mysqlHashRangeDelete(
-      "t", Seq("region", "seq"), Some(100L), Some(200L)) ==
+    val mysql = "jdbc:mysql://db:3306/app"
+    assert(DeltaRepairSql.rangeDelete(mysql,
+      "t", SliceKey.Hashed(Seq("region", "seq")), Some(100L), Some(200L)) == Some(
       "DELETE FROM t WHERE (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', region, seq)), " +
         "1, 15), 16, 10) AS UNSIGNED)) >= 100 AND " +
         "(CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', region, seq)), 1, 15), 16, 10) " +
-        "AS UNSIGNED)) < 200")
+        "AS UNSIGNED)) < 200"))
     // unbounded-below ranges must sweep NULL hash keys too
-    assert(DeltaRepairSql.mysqlHashRangeDelete("t", Seq("k"), None, Some(5L))
-      .endsWith("< 5 OR (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', k)), 1, 15), 16, 10) AS UNSIGNED)) IS NULL"))
+    assert(DeltaRepairSql.rangeDelete(mysql, "t", SliceKey.Hashed(Seq("k")), None, Some(5L))
+      .exists(_.endsWith("< 5 OR (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', k)), 1, 15), 16, 10) AS UNSIGNED)) IS NULL")))
     assert(DeltaRepairSql.scratchClone("t", "t_doomed", Seq("region", "seq")) ==
       "CREATE TABLE t_doomed AS SELECT region, seq FROM t WITH NO DATA")
     assert(DeltaRepairSql.scratchKeyedDelete("t", "t_doomed", Seq("region", "seq")) ==
       "DELETE FROM t WHERE EXISTS (SELECT 1 FROM t_doomed d " +
         "WHERE d.region = t.region AND d.seq = t.seq)")
+  }
+
+  test("the hash-key repair runs server-side on every MySQL-wire URL, MariaDB included") {
+    val key = SliceKey.Hashed(Seq("k"))
+    def delete(url: String) = DeltaRepairSql.rangeDelete(url, "t", key, Some(1L), Some(9L))
+    val mariadb = delete("jdbc:mariadb://db:3306/app")
+    assert(mariadb.exists(_.startsWith("DELETE FROM t WHERE (CAST(CONV(")), mariadb)
+    assert(mariadb == delete("jdbc:mysql://db:3306/app"))
+    // no server-side md5: the scratch-table keyed delete
+    assert(delete("jdbc:derby:memory:x").isEmpty)
+    // a numeric key ranges server-side on every dialect
+    assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t", SliceKey.Lead("id"),
+      Some(1L), Some(9L)) == Some("DELETE FROM t WHERE id >= 1 AND id < 9"))
   }
 
   test("parquet targets repair by rewrite") {

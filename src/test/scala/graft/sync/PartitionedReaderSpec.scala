@@ -31,6 +31,7 @@ class PartitionedReaderSpec extends SparkSpec {
     // every slice non-trivially populated (quantile cuts, not min/max width)
     val sizes = got.rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(sizes.forall(_ > 0), s"empty slice in ${sizes.toSeq}")
+    assert(sizes.toSeq == Seq(305, 305, 305, 304, 281), sizes.toSeq)
   }
 
   test("skewed PK distribution still yields balanced slices (histogram cuts)") {
@@ -55,6 +56,7 @@ class PartitionedReaderSpec extends SparkSpec {
     // balanced to histogram-bucket granularity: no slice hogs the table
     assert(sizes.max <= 600, s"skewed slice sizes: ${sizes.toSeq}")
     assert(sizes.forall(_ > 0), s"empty slice in ${sizes.toSeq}")
+    assert(sizes.toSeq == Seq(239, 238, 239, 284), sizes.toSeq)
   }
 
   test("no-PK table falls back to a single full scan") {
