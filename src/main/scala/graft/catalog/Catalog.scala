@@ -29,8 +29,8 @@ trait Catalog {
   def read(spark: SparkSession, table: String): DataFrame
 
   /** Source row count. Parquet counts from footer metadata (cheap);
-    * JDBC pushes `SELECT COUNT(*)` down so one aggregate row crosses
-    * the wire instead of the whole table. */
+    * JDBC runs `SELECT COUNT(*)` on the database, so one aggregate row
+    * crosses the wire instead of the whole table. */
   def rowCount(spark: SparkSession, table: String): Long =
     read(spark, table).count()
 
@@ -141,9 +141,12 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.jdbc(endpoint.url, table, endpoint.properties)
 
+  /** One tagged raw-JDBC `SELECT COUNT(*)`: no Spark job, and the
+    * shutdown `KILL QUERY` finds it by its tag. */
   override def rowCount(spark: SparkSession, table: String): Long =
-    read(spark, s"(SELECT COUNT(*) AS c FROM $table) ct").head().get(0) match {
-      case n: Number => n.longValue()
+    endpoint.withConnection(
+      graft.sync.PartitionedReader.queryRows(_, s"SELECT COUNT(*) FROM $table")) match {
+      case Seq(Seq(n: Number)) => n.longValue()
       case other => throw new IllegalStateException(s"unexpected count: $other")
     }
 

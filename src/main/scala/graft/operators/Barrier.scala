@@ -88,6 +88,7 @@ object Barrier {
     * stream itself. A single-consumer frame should keep its one
     * downstream exchange instead. */
   def keyed(df: DataFrame, cols: String*): DataFrame = {
+    require(cols.nonEmpty, "Barrier.keyed needs at least one key column")
     // explicit count = the session's shuffle parallelism: what a
     // downstream exchange on these keys would have used, conf-driven
     // (scales with the cluster, stays comparable at local core

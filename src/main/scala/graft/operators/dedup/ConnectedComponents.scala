@@ -62,10 +62,10 @@ object ConnectedComponents {
     // rounds (partition coalescing, broadcast conversion) — qd37 ran
     // 3.8 s → 7.7 s with keyed barriers at the session parallelism.
     // The plain Barrier still SURFACES whatever layout the executed
-    // plan produced (checkpointWithLayout), so a round whose output
-    // really is node-partitioned passes that fact to the next round
-    // for free, without forcing a layout the data is too small to
-    // want.
+    // plan produced (PlanBridge.checkpointCounting), so a round whose
+    // output really is node-partitioned passes that fact to the next
+    // round for free, without forcing a layout the data is too small
+    // to want.
     val sym = edges
       .select(col(edgeA).as("a"), col(edgeB).as("b"))
       .unionByName(edges.select(col(edgeB).as("a"), col(edgeA).as("b")))

@@ -3,22 +3,22 @@ package graft.partition
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** PK-range partition planner — the Spark-native replacement for the
-  * reference's keyset pagination (cmd/root.go:321-372). The reference
-  * emits one `ORDER BY pk LIMIT off,n` deferred-join SQL per page; we
-  * emit half-open key-range predicates instead, which (a) are O(1) per
-  * slice on a PK index (no deep OFFSET walk), (b) feed straight into
+/** Cut points for PK-range slicing — the Spark-native replacement for
+  * the reference's keyset pagination (cmd/root.go:321-372). The
+  * reference emits one `ORDER BY pk LIMIT off,n` deferred-join SQL per
+  * page; we cut the key space into half-open ranges instead
+  * (`graft.sync.Slices` renders them), which (a) are O(1) per slice on a
+  * PK index (no deep OFFSET walk), (b) feed straight into
   * `spark.read.jdbc(url, table, predicates, props)` so each slice is one
   * Spark task, and (c) form an exact partition of the keyspace — no
   * duplicate/lost rows, unlike the reference's deliberately-one-extra
   * empty page (`i <= totalPageNum`, cmd/root.go:367).
   *
   * Two ways to derive the cut points:
-  *   - [[histogramCuts]] from a pushed-down bucket histogram (one
-  *     aggregate the source database computes over its own PK index —
-  *     no key data crosses the wire; the JDBC path, see
-  *     `sync.PartitionedReader`);
-  *   - [[slicePredicates]] from approximate quantiles of a DataFrame
+  *   - [[adaptiveCuts]] from pushed-down bucket histograms (aggregates
+  *     the source database computes over its own PK index — no key data
+  *     crosses the wire; the JDBC path, see `sync.PartitionedReader`);
+  *   - [[quantileCuts]] from approximate quantiles of a DataFrame
   *     already at hand (the file-source path).
   * Both give near-equal slice sizes under key skew — equal-width
   * min/max splitting would not. Composite PKs (cmd/root.go:334-357)
@@ -27,59 +27,6 @@ import org.apache.spark.sql.functions._
   * range logic in SQL.
   */
 object KeyRangeSlicer {
-
-  /** Half-open range predicates from sorted cut values. Always an exact
-    * partition of the keyspace regardless of where the cuts came from:
-    * first slice is unbounded below (and absorbs NULLs), last unbounded
-    * above, so rows outside the sampled range are never dropped. */
-  def predicatesFromCuts(lead: String, cuts: Seq[Long]): Array[String] = {
-    val bounds = cuts.distinct.sorted
-    if (bounds.isEmpty) return Array("1=1")
-    val first = s"$lead < ${bounds.head} OR $lead IS NULL"
-    val middle = bounds.sliding(2).collect { case Seq(a, b) if a != b =>
-      s"$lead >= $a AND $lead < $b"
-    }.toSeq
-    val last = s"$lead >= ${bounds.last}"
-    (first +: middle :+ last).toArray
-  }
-
-  /** Equal-count cut points from a bucket histogram over [min, max]:
-    * `hist` maps bucket index (0-based, equal-width) to row count.
-    * Walks the cumulative histogram and cuts at each bucket upper bound
-    * where the running total crosses k·total/numSlices. Cut precision is
-    * bucket-width — fine, since slice-balance is best-effort while
-    * partition-exactness is guaranteed by [[predicatesFromCuts]]. */
-  def histogramCuts(
-      hist: Seq[(Int, Long)],
-      min: Long,
-      max: Long,
-      nBuckets: Int,
-      numSlices: Int): Seq[Long] = {
-    val total = hist.map(_._2).sum
-    if (total == 0 || numSlices <= 1 || max <= min) return Seq.empty
-    val counts = Array.fill(nBuckets)(0L)
-    hist.foreach { case (b, c) =>
-      counts(math.min(math.max(b, 0), nBuckets - 1)) += c
-    }
-    val span = BigInt(max) - BigInt(min) + 1
-    def bucketUpper(i: Int): Long = {
-      val cut = BigInt(min) + (BigInt(i + 1) * span + nBuckets - 1) / nBuckets
-      cut.min(BigInt(max)).max(BigInt(min) + 1).toLong
-    }
-    val cuts = scala.collection.mutable.ArrayBuffer[Long]()
-    var cum = 0L
-    var k = 1
-    var i = 0
-    while (i < nBuckets && k < numSlices) {
-      cum += counts(i)
-      while (k < numSlices && cum * numSlices >= k.toLong * total) {
-        cuts += bucketUpper(i)
-        k += 1
-      }
-      i += 1
-    }
-    cuts.distinct.sorted.toSeq
-  }
 
   /** Equal-count cuts from adaptively refined pushed-down histograms.
     * One equal-width histogram can't split a hot bucket (a bucket
@@ -158,14 +105,6 @@ object KeyRangeSlicer {
       .approxQuantile(lead, probs, 0.001)
       .map(math.floor(_).toLong)
       .toSeq
-  }
-
-  /** Quantile-derived predicates for a DataFrame already at hand (file
-    * sources; for JDBC prefer the pushed-down histogram path). */
-  def slicePredicates(df: DataFrame, pkCols: Seq[String], numSlices: Int): Array[String] = {
-    if (pkCols.isEmpty || numSlices <= 1) return Array("1=1")
-    val cuts = quantileCuts(df, pkCols.head, numSlices)
-    if (cuts.isEmpty) Array("1=1") else predicatesFromCuts(pkCols.head, cuts)
   }
 
   /** Slice count for a table: ceil(rowCount / pageSize), mirroring the

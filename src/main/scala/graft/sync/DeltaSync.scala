@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
@@ -37,43 +37,22 @@ object DeltaSync {
       ok: Boolean,
       error: Option[String] = None)
 
-  /** The slice key's column while checksumming. */
+  /** The slice key's column while checksumming: computed once per row,
+    * not once per cut. */
   private val KeyCol = "__sk"
 
-  /** Slice id of a key under sorted cut values: the number of cuts at
-    * or below it; NULL keys land in slice 0 (the unbounded-below
-    * slice, same convention as KeyRangeSlicer.predicatesFromCuts). */
-  private[sync] def sliceId(pk: Column, cuts: Seq[Long]): Column =
-    cuts.foldLeft(lit(0)) { (acc, c) =>
-      acc + when(pk >= lit(c), 1).otherwise(0)
-    }
+  /** A full reload replaces a delta repair once more than this share of
+    * the slices changed. */
+  private val MaxChangedFraction = 0.5
 
   /** Per-slice row count + per-column content checksums — the grouped
     * form of [[Compare.contentChecksum]]: one aggregation pass, k rows
     * out. */
-  private[sync] def rangeChecksums(
-      df: DataFrame, pkCol: String, cuts: Seq[Long], cols: Seq[String]): DataFrame = {
+  private def rangeChecksums(df: DataFrame, slices: Slices, cols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("n") +: Compare.checksumExprs(df, cols)
-    df.groupBy(sliceId(col(pkCol), cuts).as("slice"))
+    df.withColumn(KeyCol, slices.key.column)
+      .groupBy(slices.id(col(KeyCol)).as("slice"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The half-open bounds of slice `i` under `cuts` (k cuts → k+1
-    * slices). */
-  private def bounds(i: Int, cuts: Seq[Long]): (Option[Long], Option[Long]) =
-    (if (i == 0) None else Some(cuts(i - 1)),
-     if (i == cuts.length) None else Some(cuts(i)))
-
-  /** Merge adjacent changed slice ids into maximal repair ranges. */
-  private[sync] def mergeRanges(
-      changed: Seq[Int], cuts: Seq[Long]): Seq[(Option[Long], Option[Long])] = {
-    if (changed.isEmpty) return Seq.empty
-    val sorted = changed.distinct.sorted
-    val runs = sorted.foldLeft(List.empty[(Int, Int)]) {
-      case ((s, e) :: rest, i) if i == e + 1 => (s, i) :: rest
-      case (acc, i)                          => (i, i) :: acc
-    }.reverse
-    runs.map { case (s, e) => (bounds(s, cuts)._1, bounds(e, cuts)._2) }
   }
 
   /** Compare per-slice checksums between source and target and repair
@@ -83,7 +62,7 @@ object DeltaSync {
     * server-side via the dialect md5). Falls back to a full
     * truncate-reload only when the target is verifiably missing, when
     * the table has no PK at all, or when the target is so diverged
-    * that a full reload is cheaper (`maxChangedFraction`).
+    * that a full reload is cheaper ([[MaxChangedFraction]]).
     */
   def syncDelta(
       spark: SparkSession,
@@ -91,9 +70,7 @@ object DeltaSync {
       sink: Sink,
       table: String,
       numSlices: Int = 64,
-      maxChangedFraction: Double = 0.5,
-      pageSize: Long = 100000L,
-      maxSlices: Int = 60): DeltaReport = {
+      pageSize: Long = 100000L): DeltaReport = {
     try Jobs.tagged(spark, s"graft-delta-$table") {
       val pk = catalog.primaryKey(table)
       // ONE planning pass: JDBC sources derive cuts from pushed-down
@@ -107,7 +84,7 @@ object DeltaSync {
         case _ => None
       }
       val src = jdbcPlan.fold(Normalize.lowercaseColumns(
-        catalog.readPartitioned(spark, table, pageSize, maxSlices)))(_._1)
+        catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)))(_._1)
       val pks = pk.map(_.toLowerCase).filter(src.columns.contains)
 
       def fullLoad(): DeltaReport = {
@@ -121,34 +98,33 @@ object DeltaSync {
       else {
         val dst = Normalize.lowercaseColumns(sink.readBack(spark, table))
         val cols = src.columns.sorted.toIndexedSeq
-        val (key, cuts) =
+        val slices =
           if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
             // numeric lead PK: slice on the key itself (the range DELETE
             // rides the PK index on any dialect). Checksum slices = the
             // read slices when the pushed plan produced them (1:1
             // alignment — one planning pass covers both); file sources
             // estimate quantiles from the data
-            (SliceKey.Lead(pks.head),
-              jdbcPlan.fold(KeyRangeSlicer.quantileCuts(src, pks.head, numSlices))(_._2))
+            jdbcPlan.fold(new Slices(SliceKey.Lead(pks.head),
+              KeyRangeSlicer.quantileCuts(src, pks.head, numSlices)))(_._2)
           else
             // string/composite PK: slice the 60-bit md5 key space of the
             // full PK tuple — uniform by construction, so the fixed cuts
             // balance with NO data scan
-            (SliceKey.Hashed(pks), HashKey.cuts(numSlices))
-        val k = cuts.length + 1
+            new Slices(SliceKey.Hashed(pks), HashKey.cuts(numSlices))
+        val k = slices.count
         def bySlice(d: DataFrame) =
-          rangeChecksums(d.withColumn(KeyCol, key.column), KeyCol, cuts, cols).collect()
+          rangeChecksums(d, slices, cols).collect()
             .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
         val s = bySlice(src)
         val d = bySlice(dst)
         val changed = (0 until k).filter(i => s.get(i) != d.get(i))
         if (changed.isEmpty)
           DeltaReport(table, k, 0, 0L, ok = true)
-        else if (changed.size.toDouble / k > maxChangedFraction) fullLoad()
+        else if (changed.size.toDouble / k > MaxChangedFraction) fullLoad()
         else {
-          mergeRanges(changed, cuts).foreach { case (lo, hi) =>
-            sink.replaceRange(spark,
-              src.filter(RangeBounds.column(key.column, lo, hi)), table, key, lo, hi)
+          slices.ranges(changed).foreach { range =>
+            sink.replaceRange(spark, src.filter(range.column), table, range)
           }
           val copied = changed.flatMap(i => s.get(i))
             .map(_.head.asInstanceOf[Long]).sum

@@ -26,17 +26,20 @@ import graft.partition.KeyRangeSlicer
   *      across MySQL-wire targets and Derby (the test sink).
   *
   * Scale behavior: slice count = ceil(rows / pageSize) capped at
-  * `maxSlices`, which doubles as the connection ceiling per table
-  * (the reference's maxOpen=60 pool, cmd/app.go:53).
+  * [[MaxSlices]], which doubles as the connection ceiling per table.
   */
 object PartitionedReader {
+
+  /** Most slices one table's read fans out to: the reference's
+    * maxOpen=60 pool (cmd/app.go:53). */
+  val MaxSlices = 60
 
   def read(
       spark: SparkSession,
       endpoint: Endpoint,
       table: String,
       pageSize: Long = 100000L,
-      maxSlices: Int = 60): DataFrame =
+      maxSlices: Int = MaxSlices): DataFrame =
     // no PK = no split key: one full scan (reference S6)
     scan(spark, endpoint, table,
       plan(endpoint, table, new JdbcCatalog(endpoint).primaryKey(table).headOption)(
@@ -44,25 +47,25 @@ object PartitionedReader {
 
   /** [[DeltaSync]]'s read: a FIXED `numSlices`, skipped for tables under
     * 2·numSlices rows (too few rows per slice to gain anything). The
-    * cuts come back with the read, so the caller checksums exactly the
-    * read's slices instead of paying a second planning pass. None when
-    * the table does not slice. */
+    * slices come back with the read, so the caller checksums exactly
+    * the read's slices instead of paying a second planning pass. None
+    * when the table does not slice. */
   def readFixed(
       spark: SparkSession,
       endpoint: Endpoint,
       table: String,
       lead: Option[String],
-      numSlices: Int): Option[(DataFrame, Seq[Long])] =
+      numSlices: Int): Option[(DataFrame, Slices)] =
     plan(endpoint, table, lead)(rows => if (rows < 2L * numSlices) 1 else numSlices)
-      .map { case p @ (_, cuts) => scan(spark, endpoint, table, Some(p)) -> cuts }
+      .map(s => scan(spark, endpoint, table, Some(s)) -> s)
 
   /** The slice planner: one `COUNT(*), MIN, MAX` round trip, then
     * adaptive histogram cuts for `slices(rowCount)` slices, all on one
-    * planning connection. The lead key with its cuts, or None when
-    * there is no lead key, the key is non-numeric, the table is empty
-    * or spans a single key, or one slice suffices. */
+    * planning connection. None when there is no lead key, the key is
+    * non-numeric, the table is empty or spans a single key, or one
+    * slice suffices. */
   private def plan(endpoint: Endpoint, table: String, lead: Option[String])(
-      slices: Long => Int): Option[(String, Seq[Long])] =
+      slices: Long => Int): Option[Slices] =
     lead.flatMap { lead =>
       endpoint.withConnection { conn =>
         queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table")
@@ -73,21 +76,21 @@ object PartitionedReader {
             if (n <= 1 || hi <= lo) None
             else Some(KeyRangeSlicer.adaptiveCuts(
               histFetcher(conn, lead, table), lo, hi, n, math.max(64, n * 8)))
-              .filter(_.nonEmpty).map(lead -> _)
+              .filter(_.nonEmpty).map(new Slices(SliceKey.Lead(lead), _))
           case _ => None // empty table or non-numeric PK
         }
       }
     }
 
-  /** One JDBC read: a task per slice of `slicing`, else one full scan. */
+  /** One JDBC read: a task per slice, else one full scan. */
   private def scan(
       spark: SparkSession,
       endpoint: Endpoint,
       table: String,
-      slicing: Option[(String, Seq[Long])]): DataFrame =
-    Normalize.lowercaseColumns(slicing match {
-      case Some((lead, cuts)) => spark.read.jdbc(
-        endpoint.url, table, KeyRangeSlicer.predicatesFromCuts(lead, cuts), endpoint.properties)
+      slices: Option[Slices]): DataFrame =
+    Normalize.lowercaseColumns(slices match {
+      case Some(s) => spark.read.jdbc(
+        endpoint.url, table, s.predicates(endpoint.url), endpoint.properties)
       case None => spark.read.jdbc(endpoint.url, table, endpoint.properties)
     })
 
@@ -108,9 +111,11 @@ object PartitionedReader {
     }
   }
 
-  /** Pushed-down planning query on the shared connection: the database
-    * computes, one result set of aggregates comes back. */
-  private def queryRows(conn: java.sql.Connection, sql: String): Seq[Seq[Any]] = {
+  /** A pushed-down aggregate query, tagged with [[Jobs.tagSql]], on an
+    * open connection: the database computes, one small result set comes
+    * back, and no Spark job runs. The slice planner's and the catalog's
+    * row-count probe. */
+  private[graft] def queryRows(conn: java.sql.Connection, sql: String): Seq[Seq[Any]] = {
     val st = conn.createStatement()
     try {
       val rs = st.executeQuery(Jobs.tagSql(sql))

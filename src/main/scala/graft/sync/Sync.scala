@@ -1,9 +1,9 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.catalog.{Catalog, JdbcCatalog}
+import graft.catalog.{Catalog, FileCatalog, JdbcCatalog}
 import graft.config.{Endpoint, SyncConfig}
 
 /** Column-name normalization, mirroring the reference's forced
@@ -47,106 +47,11 @@ sealed trait Sink {
   def rowCount(spark: SparkSession, table: String): Option[Long] =
     try Some(readBack(spark, table).count())
     catch { case _: Exception => None }
-  /** Replace one half-open range [lo, hi) of `key` in the target with
-    * `df` (already filtered to that range; `lo`/`hi` None = unbounded,
-    * and the unbounded-below range owns NULL keys) — the repair
-    * primitive of [[DeltaSync]]. JDBC sinks DELETE the range
-    * server-side where the dialect can compute the key, then
-    * batch-append; file sinks rewrite. */
-  def replaceRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      key: SliceKey,
-      lo: Option[Long],
-      hi: Option[Long]): Unit
-}
-
-/** The key a delta repair slices on and ranges over: the numeric lead
-  * PK itself, or the [[HashKey]] of the whole PK tuple (string and
-  * composite PKs, where no numeric order exists to range over). */
-sealed trait SliceKey {
-  /** The PK columns that identify a range's rows. */
-  def pkCols: Seq[String]
-  def column: Column
-  /** The key as server-side SQL on `url`'s dialect; None when that
-    * dialect cannot compute it. */
-  def sql(url: String): Option[String]
-}
-
-object SliceKey {
-  final case class Lead(pk: String) extends SliceKey {
-    def pkCols: Seq[String] = Seq(pk)
-    def column: Column = col(pk)
-    def sql(url: String): Option[String] = Some(pk)
-  }
-
-  /** Only MySQL-wire dialects have the server-side md5 rendition. */
-  final case class Hashed(pkCols: Seq[String]) extends SliceKey {
-    def column: Column = HashKey.column(pkCols.map(col))
-    def sql(url: String): Option[String] =
-      if (Jobs.isMySqlWire(url)) Some(s"(${HashKey.mysqlSql(pkCols)})") else None
-  }
-}
-
-/** Deterministic 60-bit slice key over ARBITRARY primary keys: the
-  * first 15 hex chars of `md5(concat_ws('|', pk...))` as a bigint in
-  * [0, 2^60) — the qt07/qt10 hash-bucket trick applied to sync
-  * slicing. md5 is uniform, so FIXED equal-width cuts balance slices
-  * with no data scan (no quantile pass, no histogram — the plan is
-  * free), and the key is engine-portable: MySQL computes the identical
-  * value server-side ([[HashKey.mysqlSql]]), so range DELETEs stay on
-  * the server. Composite keys join on '|' after string casts —
-  * int/string PKs (the real-world population) render identically on
-  * both engines; a float PK would not, and has no business being a PK.
-  */
-object HashKey {
-  val Bits = 60
-  val Space: Long = 1L << Bits
-
-  def column(pks: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    conv(substring(md5(concat_ws("|", pks.map(_.cast("string")): _*)), 1, 15), 16, 10)
-      .cast("bigint")
-  }
-
-  /** k-1 equal-width cuts over the 60-bit space → k slices. */
-  def cuts(numSlices: Int): Seq[Long] = {
-    require(numSlices > 0, s"bad numSlices=$numSlices")
-    (1 until numSlices).map(i => i * (Space / numSlices))
-  }
-
-  /** The server-side MySQL rendition (the reference's target dialect —
-    * same md5, same 15-hex-char prefix, same base-16→10 conversion).
-    * CONV returns a STRING, and a bare string in a numeric comparison
-    * coerces to DOUBLE (53-bit mantissa) — rows whose 60-bit key lies
-    * within ~2^7 of a slice cut would then classify differently than
-    * Spark's exact bigint filter (lost rows or duplicate-key repair
-    * failures). The CAST keeps the comparison in exact integers. */
-  def mysqlSql(pkCols: Seq[String]): String =
-    s"CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', ${pkCols.mkString(", ")})), 1, 15), 16, 10) AS UNSIGNED)"
-}
-
-private[sync] object RangeBounds {
-  /** SQL predicate for the half-open range (NULLs live in the
-    * unbounded-below slice, mirroring KeyRangeSlicer's first slice). */
-  def predicate(pkCol: String, lo: Option[Long], hi: Option[Long]): String =
-    (lo, hi) match {
-      case (Some(a), Some(b)) => s"$pkCol >= $a AND $pkCol < $b"
-      case (Some(a), None)    => s"$pkCol >= $a"
-      case (None, Some(b))    => s"$pkCol < $b OR $pkCol IS NULL"
-      case (None, None)       => "1=1"
-    }
-
-  def column(pk: org.apache.spark.sql.Column, lo: Option[Long], hi: Option[Long])
-      : org.apache.spark.sql.Column = {
-    (lo, hi) match {
-      case (Some(a), Some(b)) => pk >= lit(a) && pk < lit(b)
-      case (Some(a), None)    => pk >= lit(a)
-      case (None, Some(b))    => pk < lit(b) || pk.isNull
-      case (None, None)       => lit(true)
-    }
-  }
+  /** Replace one key range of the target with `df` (already filtered
+    * to that range) — the repair primitive of [[DeltaSync]]. JDBC sinks
+    * DELETE the range server-side where the dialect can compute the
+    * key, then batch-append; file sinks rewrite. */
+  def replaceRange(spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit
 }
 
 /** The delta-repair statements as PURE renderers, split out of the
@@ -162,10 +67,8 @@ private[sync] object DeltaRepairSql {
   /** ONE server-side DELETE of the range — the repair range never
     * leaves the server. None when the dialect cannot compute the key:
     * the caller takes the scratch-table branch below. */
-  def rangeDelete(
-      url: String, table: String, key: SliceKey,
-      lo: Option[Long], hi: Option[Long]): Option[String] =
-    key.sql(url).map(k => s"DELETE FROM $table WHERE ${RangeBounds.predicate(k, lo, hi)}")
+  def rangeDelete(url: String, table: String, range: Slices.Range): Option[String] =
+    range.sql(url).map(p => s"DELETE FROM $table WHERE $p")
 
   /** Generic branch step 1: clone the PK columns' exact target types
     * (a Spark-CREATED scratch would map strings to CLOB, which the
@@ -201,10 +104,6 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     case "csv" => Map("header" -> "true")
     case _     => Map.empty
   }
-  private def readOpts: Map[String, String] = format match {
-    case "csv" => Map("header" -> "true", "inferSchema" -> "true")
-    case _     => Map.empty
-  }
   override def overwrite(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).options(writeOpts)
       .format(format).save(path(table))
@@ -212,7 +111,7 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     df.write.mode(SaveMode.Append).options(writeOpts)
       .format(format).save(path(table))
   override def readBack(spark: SparkSession, table: String): DataFrame =
-    spark.read.options(readOpts).format(format).load(path(table))
+    new FileCatalog(dir, format).read(spark, table)
   override def exists(spark: SparkSession, table: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path(table))
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
@@ -223,14 +122,8 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     * A table format with row-level ops (Iceberg/Delta) would replace
     * just the affected files; this sink is the fixture/test path. */
   override def replaceRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      key: SliceKey,
-      lo: Option[Long],
-      hi: Option[Long]): Unit = {
-    val keep = readBack(spark, table)
-      .filter(!RangeBounds.column(key.column, lo, hi))
+      spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit = {
+    val keep = readBack(spark, table).filter(!range.column)
     val merged = graft.operators.Barrier(keep.unionByName(df))
     overwrite(merged, table)
   }
@@ -320,15 +213,10 @@ final case class JdbcSink(
     val r = spark.read.jdbc(endpoint.url, q, props).head()
     if (r.isNullAt(0)) None else Some(r.get(0))
   }
-  /** Pushed-down count: one aggregate row crosses the wire. */
+  /** The catalog's pushed-down count; None when the table is missing. */
   override def rowCount(spark: SparkSession, table: String): Option[Long] =
-    try {
-      val q = s"(SELECT COUNT(*) AS c FROM $table) ct"
-      spark.read.jdbc(endpoint.url, q, props).head().get(0) match {
-        case n: Number => Some(n.longValue())
-        case _         => None
-      }
-    } catch { case _: Exception => None }
+    try Some(new JdbcCatalog(endpoint).rowCount(spark, table))
+    catch { case _: Exception => None }
   /** Range repair. Where the dialect computes the key (a numeric PK
     * anywhere; the md5 [[HashKey]] on MySQL-wire) the DELETE is one
     * server-side statement per merged range, riding the PK index for a
@@ -340,20 +228,15 @@ final case class JdbcSink(
     * full target scan per merged range — the price of a dialect with no
     * server-side md5. The replacement rows are then batch-appended. */
   override def replaceRange(
-      spark: SparkSession,
-      df: DataFrame,
-      table: String,
-      key: SliceKey,
-      lo: Option[Long],
-      hi: Option[Long]): Unit = {
+      spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit = {
     endpoint.withConnection { conn =>
       val st = conn.createStatement()
-      try DeltaRepairSql.rangeDelete(endpoint.url, table, key, lo, hi) match {
+      try DeltaRepairSql.rangeDelete(endpoint.url, table, range) match {
         case Some(delete) => st.executeUpdate(delete)
         case None =>
-          val pkCols = key.pkCols
+          val pkCols = range.key.pkCols
           val doomed = readBack(spark, table)
-            .filter(RangeBounds.column(key.column, lo, hi))
+            .filter(range.column)
             .select(pkCols.map(col): _*)
           val scratch = s"${table}_doomed"
           try st.executeUpdate(s"DROP TABLE $scratch")
@@ -405,11 +288,10 @@ object Sync {
       catalog: Catalog,
       sink: Sink,
       table: String,
-      pageSize: Long = 100000L,
-      maxSlices: Int = 60): TableReport =
+      pageSize: Long = 100000L): TableReport =
     report(spark, sink, table, s"graft-sync-$table") {
       sink.overwrite(Normalize.lowercaseColumns(
-        catalog.readPartitioned(spark, table, pageSize, maxSlices)), table)
+        catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)), table)
     }
 
   /** Incremental sync: append only source rows whose `watermarkCol`
@@ -427,11 +309,10 @@ object Sync {
       sink: Sink,
       table: String,
       watermarkCol: String,
-      pageSize: Long = 100000L,
-      maxSlices: Int = 60): TableReport =
+      pageSize: Long = 100000L): TableReport =
     report(spark, sink, table, s"graft-incr-$table") {
       val src = Normalize.lowercaseColumns(
-        catalog.readPartitioned(spark, table, pageSize, maxSlices))
+        catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices))
       // full-load only on VERIFIED absence/emptiness; a transient probe
       // error propagates to the report (ok=false) instead of silently
       // re-appending every existing row

@@ -39,28 +39,22 @@ object PlanBridge {
     * within-partition row order. Stats and constraints are rewritten
     * onto the checkpoint output via the same helper
     * `Dataset.checkpoint` uses, so broadcast-size estimation behaves
-    * identically to a plain checkpoint. */
-  def checkpointWithLayout(df: DataFrame, reliable: Boolean): DataFrame =
-    checkpointCounting(df, reliable, None)._1
-
-  /** [[checkpointWithLayout]] whose MATERIALIZING action also counts —
-    * all rows (`boolCol` None) or rows where the named boolean column
-    * is true — so an iterative caller (ConnectedComponents' per-round
-    * convergence test, GraphExpand's frontier-drained test) reads its
-    * loop condition from the checkpoint job itself instead of paying a
-    * second job to re-scan the frame it just materialized. The count
-    * is computed from the same rows the checkpoint writes, in the same
-    * pass a bare `rdd.count()` would have made. */
+    * identically to a plain checkpoint.
+    *
+    * The MATERIALIZING action also counts — all rows (`boolCol` None)
+    * or rows where the named boolean column is true — so an iterative
+    * caller (ConnectedComponents' per-round convergence test,
+    * GraphExpand's frontier-drained test) reads its loop condition from
+    * the checkpoint job itself instead of paying a second job to
+    * re-scan the frame it just materialized. The count is computed
+    * from the same rows the checkpoint writes, in the same pass a bare
+    * `rdd.count()` would have made. */
   def checkpointCounting(
       df: DataFrame,
       reliable: Boolean,
       boolCol: Option[String]): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
-    // kill switch for A/B isolation and emergencies: false restores
-    // the UnknownPartitioning behavior of a plain Dataset.checkpoint
-    val surface = session.conf.getOption("spark.graft.barrier.surfaceLayout")
-      .forall(_.toBoolean)
     val qe = ds.queryExecution
     // mirror Dataset.checkpoint: execute the plan (with AQE this
     // materializes every query stage and fixes the final plan), copy
@@ -68,18 +62,19 @@ object PlanBridge {
     // then an eager count to materialize checkpoint blocks/files
     val rdd = qe.toRdd.map(_.copy())
     if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
+    val phys = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // final, post-execution
+      case p => p
+    }
+    val logicalOut = ds.logicalPlan.output
+    val attrMap = positional(phys.output, logicalOut)
     // the eager materialization action, counting as it goes; the
     // checkpoint (reliable or local) triggers on this job's completion
     // exactly as it would for Dataset.checkpoint's bare count()
     val count = boolCol match {
       case None => rdd.count()
       case Some(name) =>
-        val i = ds.logicalPlan.output.indexWhere(_.name == name)
-        require(i >= 0 &&
-          ds.logicalPlan.output(i).dataType ==
-            org.apache.spark.sql.types.BooleanType,
-          s"checkpointCounting: no boolean column '$name' in " +
-            ds.logicalPlan.output.map(_.name).mkString(", "))
+        val i = boolColumnIndex(logicalOut, name)
         rdd.mapPartitions { it =>
           var c = 0L
           while (it.hasNext) {
@@ -89,22 +84,10 @@ object PlanBridge {
           Iterator.single(c)
         }.fold(0L)(_ + _)
     }
-    val phys = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan // final, post-execution
-      case p => p
-    }
     @tailrec def firstLeaf(p: Partitioning): Partitioning = p match {
       case c: PartitioningCollection => firstLeaf(c.partitionings.head)
       case other => other
     }
-    val logicalOut = ds.logicalPlan.output
-    // physical output attrs map positionally onto the logical output
-    // (same association Dataset.checkpoint relies on for stats)
-    val attrMap: Map[Expression, Expression] =
-      if (phys.output.size == logicalOut.size)
-        phys.output.zip(logicalOut)
-          .map { case (p, l) => (p: Expression) -> (l: Expression) }.toMap
-      else Map.empty
     val outSet = AttributeSet(logicalOut)
     def rewriteHash(hp: HashPartitioning): Option[HashPartitioning] = {
       val r = hp.transformUp { case a: Attribute =>
@@ -112,9 +95,7 @@ object PlanBridge {
       if (r.references.subsetOf(outSet)) Some(r) else None
     }
     val n = rdd.getNumPartitions
-    val surfaced: Partitioning = (if (surface)
-      firstLeaf(phys.outputPartitioning)
-    else UnknownPartitioning(n)) match {
+    val surfaced: Partitioning = firstLeaf(phys.outputPartitioning) match {
       case hp: HashPartitioning if hp.numPartitions == n =>
         rewriteHash(hp).getOrElse(UnknownPartitioning(n))
       case chp: CoalescedHashPartitioning if chp.numPartitions == n =>
@@ -133,6 +114,28 @@ object PlanBridge {
       LogicalRDD(logicalOut, rdd, surfaced, ordering, isStreaming = false)(
         session, stats, constraints).newInstance()),
       count)
+  }
+
+  /** Physical output attributes mapped positionally onto the logical
+    * output (the association `Dataset.checkpoint` relies on for stats).
+    * A checkpoint's rows are physical and its schema logical, and both
+    * the counted column and the surfaced layout are read by position,
+    * so unequal arity is refused. */
+  def positional(phys: Seq[Attribute], logical: Seq[Attribute]): Map[Expression, Expression] = {
+    require(phys.size == logical.size,
+      s"checkpointCounting: physical arity ${phys.size} != logical ${logical.size}")
+    phys.zip(logical).map { case (p, l) => (p: Expression) -> (l: Expression) }.toMap
+  }
+
+  /** The position of boolean column `name` in `out`, which must hold
+    * exactly one column of that name: the count reads rows by position,
+    * so a duplicate name would silently count the wrong column. */
+  def boolColumnIndex(out: Seq[Attribute], name: String): Int = {
+    val at = out.indices.filter(out(_).name == name)
+    require(at.size == 1 && out(at.head).dataType == org.apache.spark.sql.types.BooleanType,
+      s"checkpointCounting: need exactly one boolean column '$name' in " +
+        out.map(_.name).mkString(", "))
+    at.head
   }
 
   /** The exact number of scan partitions the plan's leaves will

@@ -2,7 +2,14 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{BooleanType, LongType}
+
 import graft.SparkSpec
+import graft.sync.Compare
 
 class BarrierSpec extends SparkSpec {
   import spark.implicits._
@@ -104,5 +111,75 @@ class BarrierSpec extends SparkSpec {
         s"GraphExpand checkpoint accounting changed: $afterHops")
       assert(reach.count() == 4) // 0 + hops 1..3
     } finally spark.conf.unset(Barrier.ConfKey)
+  }
+
+  // The layout contract: a barrier surfaces the executed plan's hash
+  // partitioning to Catalyst, so keyed consumers plan no exchange, and
+  // results equal the un-keyed form. Each check runs in both modes.
+
+  private lazy val grouped = (1 to 20000).map(i => (i.toLong % 997, i.toLong)).toDF("g", "v")
+
+  private def exchanges(df: DataFrame): Int =
+    "Exchange (?!SinglePartition)".r.findAllIn(df.queryExecution.executedPlan.toString).size
+
+  private def inBothModes(body: => Unit): Unit = {
+    body
+    spark.conf.set(Barrier.ConfKey, Files.createTempDirectory("graft_ckpt_layout").toString)
+    try body finally spark.conf.unset(Barrier.ConfKey)
+  }
+
+  test("a keyed barrier's groupBy on the key plans no exchange and equals the un-keyed form") {
+    inBothModes {
+      val agg = Barrier.keyed(grouped, "g").groupBy("g").count()
+      assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+      assert(Compare.contentEqual(agg, grouped.groupBy("g").count()))
+    }
+  }
+
+  test("a keyed barrier's layout satisfies a groupBy on a superset of its key") {
+    inBothModes {
+      val agg = Barrier.keyed(grouped, "g").groupBy("g", "v").count()
+      assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("two barriers keyed the same way join with no shuffle") {
+    inBothModes {
+      val sums = grouped.groupBy("g").agg(sum("v").as("s"))
+      val j = Barrier.keyed(grouped, "g").join(Barrier.keyed(sums, "g"), Seq("g"))
+      val plan = j.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(plan).isEmpty, plan)
+      assert(Compare.contentEqual(j, grouped.join(sums, Seq("g"))))
+    }
+  }
+
+  test("a plain barrier after a co-partitioned join re-surfaces the join's layout") {
+    inBothModes {
+      val sums = grouped.groupBy("g").agg(sum("v").as("s"))
+      def weights(l: DataFrame, r: DataFrame) =
+        l.join(r, Seq("g")).select(col("g"), (col("v") + col("s")).as("w"))
+      val agg = Barrier(weights(Barrier.keyed(grouped, "g"), Barrier.keyed(sums, "g")))
+        .groupBy("g").count()
+      assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+      assert(Compare.contentEqual(agg, weights(grouped, sums).groupBy("g").count()))
+    }
+  }
+
+  test("Barrier.keyed refuses an empty key list") {
+    intercept[IllegalArgumentException](Barrier.keyed(grouped))
+  }
+
+  test("a counting barrier refuses a count column that is not exactly one boolean column") {
+    val twoB = Seq((true, false), (true, true)).toDF("b", "b")
+    intercept[IllegalArgumentException](Barrier.counting(twoB, Some("b")))
+    intercept[IllegalArgumentException](Barrier.counting(grouped, Some("v")))
+    assert(Barrier.counting(twoB.toDF("a", "b"), Some("b"))._2 == 1)
+  }
+
+  test("the checkpoint refuses physical and logical outputs of unequal arity") {
+    val a = AttributeReference("a", LongType)()
+    val b = AttributeReference("b", BooleanType)()
+    assert(PlanBridge.positional(Seq(a, b), Seq(a, b)).size == 2)
+    intercept[IllegalArgumentException](PlanBridge.positional(Seq(a, b), Seq(a)))
   }
 }

@@ -3,6 +3,7 @@ package graft.partition
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sync.{SliceKey, Slices}
 
 /** The property the reference's pagination flirts with losing
   * (cmd/root.go:367's extra empty page): slices must be an exact
@@ -10,9 +11,15 @@ import graft.SparkSpec
 class KeyRangeSlicerSpec extends SparkSpec {
   import spark.implicits._
 
+  private val url = "jdbc:derby:memory:slicer"
+
+  /** The read predicates of `lead` cut at `cuts`. */
+  private def predicates(lead: String, cuts: Seq[Long]): Array[String] =
+    new Slices(SliceKey.Lead(lead), cuts).predicates(url)
+
   private def checkExactPartition(keys: Seq[Long], slices: Int): Unit = {
     val df = keys.toDF("k")
-    val preds = KeyRangeSlicer.slicePredicates(df, Seq("k"), slices)
+    val preds = predicates("k", KeyRangeSlicer.quantileCuts(df, "k", slices))
     val total = preds.map(p => df.filter(expr(p)).count()).sum
     assert(total == keys.size, s"rows covered once: $preds")
   }
@@ -36,21 +43,21 @@ class KeyRangeSlicerSpec extends SparkSpec {
 
   test("no PK or single slice => one full-scan predicate") {
     val df = (1L to 10L).toDF("k")
-    assert(KeyRangeSlicer.slicePredicates(df, Seq.empty, 8).sameElements(Array("1=1")))
-    assert(KeyRangeSlicer.slicePredicates(df, Seq("k"), 1).sameElements(Array("1=1")))
+    assert(predicates("k", Seq.empty).sameElements(Array("1=1")))
+    assert(predicates("k", KeyRangeSlicer.quantileCuts(df, "k", 1)).sameElements(Array("1=1")))
   }
 
   test("empty table => one predicate") {
     val df = spark.emptyDataset[Long].toDF("k")
-    assert(KeyRangeSlicer.slicePredicates(df, Seq("k"), 4).length == 1)
+    assert(predicates("k", KeyRangeSlicer.quantileCuts(df, "k", 4)).length == 1)
   }
 
   test("histogram cuts: uniform histogram gives balanced exact partition") {
     // 64 equal-width buckets over keys 0..6399, 100 rows each
     val hist = (0 until 64).map(b => (b, 100L))
-    val cuts = KeyRangeSlicer.histogramCuts(hist, 0L, 6399L, 64, 4)
+    val cuts = KeyRangeSlicer.adaptiveCuts((_, _, _) => hist, 0L, 6399L, 4, 64)
     assert(cuts.size == 3)
-    val preds = KeyRangeSlicer.predicatesFromCuts("k", cuts)
+    val preds = predicates("k", cuts)
     assert(preds.length == 4)
     val df = (0L until 6400L).toDF("k")
     val sizes = preds.map(p => df.filter(expr(p)).count())
@@ -61,17 +68,19 @@ class KeyRangeSlicerSpec extends SparkSpec {
   test("histogram cuts: heavy skew still partitions exactly, cuts within bounds") {
     // everything piles into bucket 0 except a tail
     val hist = Seq((0, 10000L), (63, 10L))
-    val cuts = KeyRangeSlicer.histogramCuts(hist, 0L, 6399L, 64, 4)
+    val cuts = KeyRangeSlicer.adaptiveCuts((_, _, _) => hist, 0L, 6399L, 4, 64)
     val df = ((0L until 100L) ++ Seq.fill(50)(6399L)).toDF("k")
-    val preds = KeyRangeSlicer.predicatesFromCuts("k", cuts)
+    val preds = predicates("k", cuts)
     assert(preds.map(p => df.filter(expr(p)).count()).sum == df.count())
     assert(cuts.forall(c => c > 0L && c <= 6399L))
   }
 
   test("histogram cuts: empty or degenerate input gives no cuts") {
-    assert(KeyRangeSlicer.histogramCuts(Seq.empty, 0, 100, 64, 4).isEmpty)
-    assert(KeyRangeSlicer.histogramCuts(Seq((0, 5L)), 7, 7, 64, 4).isEmpty)
-    assert(KeyRangeSlicer.histogramCuts(Seq((0, 5L)), 0, 100, 64, 1).isEmpty)
+    def cuts(hist: Seq[(Int, Long)], lo: Long, hi: Long, slices: Int) =
+      KeyRangeSlicer.adaptiveCuts((_, _, _) => hist, lo, hi, slices, 64)
+    assert(cuts(Seq.empty, 0, 100, 4).isEmpty)
+    assert(cuts(Seq((0, 5L)), 7, 7, 4).isEmpty)
+    assert(cuts(Seq((0, 5L)), 0, 100, 1).isEmpty)
   }
 
   test("adaptive cuts split a hyper-clustered keyspace with bounded round trips") {
@@ -87,7 +96,7 @@ class KeyRangeSlicerSpec extends SparkSpec {
         .view.mapValues(_.size.toLong).toSeq
     }
     val cuts = KeyRangeSlicer.adaptiveCuts(fetchHist, 0L, 1000000000000L, 8)
-    val preds = KeyRangeSlicer.predicatesFromCuts("k", cuts)
+    val preds = predicates("k", cuts)
     val df = keys.toDF("k")
     val sizes = preds.map(p => df.filter(expr(p)).count())
     assert(sizes.sum == keys.size, "exact partition")
@@ -104,7 +113,7 @@ class KeyRangeSlicerSpec extends SparkSpec {
 
   test("fixture lineitem slices cover every row exactly once") {
     val li = graft.Tables.load(spark, sf0001, "lineitem")
-    val preds = KeyRangeSlicer.slicePredicates(li, Seq("l_orderkey", "l_linenumber"), 8)
+    val preds = predicates("l_orderkey", KeyRangeSlicer.quantileCuts(li, "l_orderkey", 8))
     val total = preds.map(p => li.filter(expr(p)).count()).sum
     assert(total == li.count())
   }

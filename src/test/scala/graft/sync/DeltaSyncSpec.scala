@@ -28,13 +28,14 @@ class DeltaSyncSpec extends SparkSpec {
       "dlt")
   }
 
-  test("mergeRanges folds adjacent changed slices into maximal ranges") {
-    val cuts = Seq(10L, 20L, 30L, 40L) // 5 slices
-    assert(DeltaSync.mergeRanges(Seq.empty, cuts) == Seq.empty)
-    assert(DeltaSync.mergeRanges(Seq(0), cuts) == Seq((None, Some(10L))))
-    assert(DeltaSync.mergeRanges(Seq(4), cuts) == Seq((Some(40L), None)))
-    assert(DeltaSync.mergeRanges(Seq(1, 2), cuts) == Seq((Some(10L), Some(30L))))
-    assert(DeltaSync.mergeRanges(Seq(0, 2, 3), cuts) ==
+  test("Slices.ranges folds adjacent changed slices into maximal ranges") {
+    val slices = new Slices(SliceKey.Lead("id"), Seq(10L, 20L, 30L, 40L)) // 5 slices
+    def ranges(changed: Seq[Int]) = slices.ranges(changed).map(r => (r.lo, r.hi))
+    assert(ranges(Seq.empty) == Seq.empty)
+    assert(ranges(Seq(0)) == Seq((None, Some(10L))))
+    assert(ranges(Seq(4)) == Seq((Some(40L), None)))
+    assert(ranges(Seq(1, 2)) == Seq((Some(10L), Some(30L))))
+    assert(ranges(Seq(0, 2, 3)) ==
       Seq((None, Some(10L)), (Some(20L), Some(40L))))
   }
 
@@ -162,13 +163,13 @@ class DeltaSyncSpec extends SparkSpec {
     // live Derby specs execute (valid on H2/PostgreSQL too)
     val mysql = "jdbc:mysql://db:3306/app"
     assert(DeltaRepairSql.rangeDelete(mysql,
-      "t", SliceKey.Hashed(Seq("region", "seq")), Some(100L), Some(200L)) == Some(
+      "t", Slices.Range(SliceKey.Hashed(Seq("region", "seq")), Some(100L), Some(200L))) == Some(
       "DELETE FROM t WHERE (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', region, seq)), " +
         "1, 15), 16, 10) AS UNSIGNED)) >= 100 AND " +
         "(CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', region, seq)), 1, 15), 16, 10) " +
         "AS UNSIGNED)) < 200"))
     // unbounded-below ranges must sweep NULL hash keys too
-    assert(DeltaRepairSql.rangeDelete(mysql, "t", SliceKey.Hashed(Seq("k")), None, Some(5L))
+    assert(DeltaRepairSql.rangeDelete(mysql, "t", Slices.Range(SliceKey.Hashed(Seq("k")), None, Some(5L)))
       .exists(_.endsWith("< 5 OR (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', k)), 1, 15), 16, 10) AS UNSIGNED)) IS NULL")))
     assert(DeltaRepairSql.scratchClone("t", "t_doomed", Seq("region", "seq")) ==
       "CREATE TABLE t_doomed AS SELECT region, seq FROM t WITH NO DATA")
@@ -179,15 +180,17 @@ class DeltaSyncSpec extends SparkSpec {
 
   test("the hash-key repair runs server-side on every MySQL-wire URL, MariaDB included") {
     val key = SliceKey.Hashed(Seq("k"))
-    def delete(url: String) = DeltaRepairSql.rangeDelete(url, "t", key, Some(1L), Some(9L))
+    def delete(url: String) =
+      DeltaRepairSql.rangeDelete(url, "t", Slices.Range(key, Some(1L), Some(9L)))
     val mariadb = delete("jdbc:mariadb://db:3306/app")
     assert(mariadb.exists(_.startsWith("DELETE FROM t WHERE (CAST(CONV(")), mariadb)
     assert(mariadb == delete("jdbc:mysql://db:3306/app"))
     // no server-side md5: the scratch-table keyed delete
     assert(delete("jdbc:derby:memory:x").isEmpty)
     // a numeric key ranges server-side on every dialect
-    assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t", SliceKey.Lead("id"),
-      Some(1L), Some(9L)) == Some("DELETE FROM t WHERE id >= 1 AND id < 9"))
+    assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t",
+      Slices.Range(SliceKey.Lead("id"), Some(1L), Some(9L))) ==
+      Some("DELETE FROM t WHERE id >= 1 AND id < 9"))
   }
 
   test("parquet targets repair by rewrite") {

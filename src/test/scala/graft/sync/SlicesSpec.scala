@@ -1,0 +1,53 @@
+package graft.sync
+
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Test.{check, Parameters}
+
+import graft.SparkSpec
+
+/** The one slice model: its read predicates, slice ids and repair
+  * ranges agree with each other and with an independent count of cuts,
+  * for any keys (NULL included) and any cuts (repeated, unsorted). */
+class SlicesSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val url = "jdbc:derby:memory:slices"
+
+  private val gen = for {
+    keys <- Gen.listOf(Gen.option(Gen.choose(-25L, 25L)))
+    cuts <- Gen.listOf(Gen.choose(-20L, 20L)).map(_.take(8))
+    changed <- Gen.listOf(Gen.choose(0, 8))
+  } yield (keys.take(30), cuts, changed)
+
+  test("every row is in exactly one slice, and each merged range selects exactly its slices") {
+    val result = check(Parameters.default.withMinSuccessfulTests(40),
+      Prop.forAll(gen) { case (keys, cuts, changed) =>
+        val slices = new Slices(SliceKey.Lead("k"), cuts)
+        val preds = slices.predicates(url)
+        val ids = changed.filter(_ < slices.count)
+        val ranges = slices.ranges(ids)
+        def hit(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
+        val cols = Seq(col("k"), slices.id(col("k"))) ++
+          preds.map(p => hit(expr(p))) ++
+          ranges.flatMap(r => Seq(hit(expr(r.sql(url).get)), hit(r.column)))
+        val rows = keys.toDF("k").select(cols: _*).collect()
+        // the ids each range must cover: maximal runs of adjacent ids
+        val runs = ids.distinct.sorted.filterNot(i => ids.contains(i - 1))
+          .map(s => (s, Iterator.from(s).takeWhile(ids.contains).toSeq.last))
+        val distinctCuts = cuts.distinct
+        ranges.size == runs.size && rows.forall { r =>
+          val id = r.getInt(1)
+          val expectedId = if (r.isNullAt(0)) 0 else distinctCuts.count(_ <= r.getLong(0))
+          val matched = preds.indices.filter(i => r.getBoolean(2 + i))
+          val inRanges = runs.indices.forall { j =>
+            val want = id >= runs(j)._1 && id <= runs(j)._2
+            val at = 2 + preds.length + 2 * j
+            r.getBoolean(at) == want && r.getBoolean(at + 1) == want
+          }
+          id == expectedId && matched == Seq(id) && inRanges
+        }
+      })
+    assert(result.passed, result.status.toString)
+  }
+}
