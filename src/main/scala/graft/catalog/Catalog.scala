@@ -61,14 +61,19 @@ class FileCatalog(
 
   private def ext = s".$format"
 
+  /** Listed through the session's Hadoop FileSystem, as the sinks
+    * write, so `file:`, `hdfs://` and `s3a://` directories list too. */
   override protected def allTables: Seq[String] = {
-    val d = new java.io.File(dir)
-    Option(d.list())
-      .getOrElse(Array.empty)
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new org.apache.hadoop.conf.Configuration())(_.sessionState.newHadoopConf())
+    val fs = d.getFileSystem(conf)
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).toSeq
+      .map(_.getPath.getName)
       .filter(_.endsWith(ext))
       .map(_.stripSuffix(ext))
       .sorted
-      .toSeq
   }
 
   override def read(spark: SparkSession, table: String): DataFrame = {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.text.PortableHll
 
@@ -65,17 +66,10 @@ object CardinalityIngest {
       text: Column,
       dir: String,
       checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        foldBatch(batch, text, dir)
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      foldBatch(batch, text, dir)
+    }
 
   /** Does the registers sidecar exist? Hadoop-FS based (a
     * java.io.File check would always be false for hdfs:///s3a://

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.dedup.{ConnectedComponents, MinHashLSH}
 
@@ -100,16 +101,9 @@ object CcIngest {
       storeDir: String,
       checkpointDir: String,
       p: MinHashLSH.Params = MinHashLSH.Params(),
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        foldBatch(batch.sparkSession, batch, text, idCol, lshDir, storeDir, p)
-        ()
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      foldBatch(batch.sparkSession, batch, text, idCol, lshDir, storeDir, p)
+      ()
+    }
 }

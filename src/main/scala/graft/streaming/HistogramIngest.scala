@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.PortableHistogram
 
@@ -75,17 +76,10 @@ object HistogramIngest {
       dir: String,
       checkpointDir: String,
       p: Int = 3,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, value, dir, batchId, p)
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, batchId) =>
+      foldBatch(batch, value, dir, batchId, p)
+    }
 
   /** Does the sidecar exist? Hadoop-FS based like everything else in
     * this family (a java.io.File check would always be false for

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.TextOps
 import graft.operators.dedup.MinHashLSH
@@ -72,7 +73,7 @@ object IngestPipeline {
     val fpHinted = graft.operators.similarity.ProbeBatch.hinted(fpRel, fits)
     val effectiveBloom = bloom.orElse(
       if (fits) None
-      else bloomPath.flatMap(readBloom(stream.sparkSession, _)))
+      else bloomPath.flatMap(new BloomSidecar(stream.sparkSession, _).bits))
     val guarded = effectiveBloom match {
       case Some(bf) =>
         // null __fp (null text) must route with the bloom-NEGATIVE
@@ -120,7 +121,10 @@ object IngestPipeline {
     * appends its novel fingerprints to `<table>_fps` through the same
     * sink, so later batches read 32-char digests instead of re-hashing
     * every previously ingested document — per-batch guard cost is one
-    * narrow fingerprint-table read, not a full sink re-scan. */
+    * narrow fingerprint-table read, not a full sink re-scan. With a
+    * `bloom` sidecar, each batch's novel fingerprints fold into it
+    * before anything is appended, so the gate in [[exactGuard]] never
+    * calls an already-ingested document novel. */
   def curateIngest(
       stream: DataFrame,
       sink: Sink,
@@ -132,20 +136,16 @@ object IngestPipeline {
       idCol: String,
       p: MinHashLSH.Params = MinHashLSH.Params(),
       benchmark: Option[MinHashLSH.LshIndex] = None,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val novel =
-          curateBatch(batch, sink, table, index, fingerprints, text, idCol, p, bloom)
-        val (clean, dirty) = benchmark match {
-          case Some(b) => deconSplit(novel, b, text, idCol, p)
-          case None => (novel, novel.limit(0))
-        }
+      trigger: Trigger = Trigger.AvailableNow(),
+      bloom: Option[BloomSidecar] = None): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      val novel =
+        curateBatch(batch, sink, table, index, fingerprints, text, idCol, p, bloom)
+      val (clean, dirty) = benchmark match {
+        case Some(b) => deconSplit(novel, b, text, idCol, p)
+        case None => (novel, novel.limit(0))
+      }
+      commit(bloom, novel, guardFps(sink, table, fingerprints)) {
         sink.append(clean.drop("__fp"), table)
         if (benchmark.isDefined)
           sink.append(dirty.drop("__fp"), s"${table}_quarantine")
@@ -154,8 +154,23 @@ object IngestPipeline {
         // guard instead of re-running the benchmark check
         sink.append(novel.select(col("__fp").as("fp")).distinct(), s"${table}_fps")
       }
-      .trigger(trigger)
-      .start()
+    }
+
+  /** Fold the batch's novel fingerprints into the sidecar, if there is
+    * one, then `append`. */
+  private def commit(bloom: Option[BloomSidecar], novel: DataFrame,
+      guard: => DataFrame)(append: => Unit): Unit =
+    bloom.fold(append)(_.commit(novel.select("__fp"), guard)(append))
+
+  /** Every fingerprint the exact guard rejects: the corpus's plus what
+    * this sink already ingested into `<table>_fps`. */
+  private def guardFps(sink: Sink, table: String, fingerprints: DataFrame): DataFrame = {
+    val spark = fingerprints.sparkSession
+    val fps = fingerprints.select("fp")
+    if (sink.exists(spark, s"${table}_fps"))
+      fps.unionByName(sink.readBack(spark, s"${table}_fps").select("fp"))
+    else fps
+  }
 
   /** Benchmark-contamination gate at ingest — the streaming form of
     * fuzzy decontamination (qd34): documents that are near-duplicates
@@ -188,11 +203,9 @@ object IngestPipeline {
     * `batch` whose fingerprint is NOT in corpus ∪ already-ingested
     * fps, one representative per in-batch fingerprint.
     *
-    * With a `bloom` ([[graft.functions.BloomMightContain]], built over
-    * the SAME fingerprint universe as `fingerprints` ∪ the sink's fp
-    * table), rows the filter rejects are DEFINITELY novel (no false
-    * negatives) and skip the exact-confirmation join entirely — only
-    * bloom-positives probe the guard. That is the 100 TB shape: the
+    * With a `bloom` sidecar over the same fingerprint universe as
+    * `fingerprints` ∪ the sink's fp table, only bloom-positives probe
+    * the guard ([[BloomSidecar.novel]]). That is the 100 TB shape: the
     * guard's raw fingerprints stop being broadcastable around 10⁹ rows
     * (~40 GB of md5 strings) while their bloom bits stay ~1.4 GB at
     * 1% fpp, and the positives (the true-dup fraction plus ~1% noise)
@@ -204,40 +217,13 @@ object IngestPipeline {
       fingerprints: DataFrame,
       text: Column,
       idCol: String,
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame = {
-    val fpTable = s"${table}_fps"
+      bloom: Option[BloomSidecar]): DataFrame = {
     val withFp = batch.withColumn("__fp", md5(TextOps.normalized(text)))
-    val guard =
-      if (sink.exists(batch.sparkSession, fpTable))
-        fingerprints.unionByName(
-          sink.readBack(batch.sparkSession, fpTable).select("fp"))
-      else fingerprints
+    def guard = guardFps(sink, table, fingerprints).select(col("fp").as("__fp"))
     (bloom match {
-      case Some(bf) =>
-        // the 100 TB join shape: the guard is the UNBROADCASTABLE side,
-        // so the bloom-positive fingerprints (true dups + ~fpp noise —
-        // tiny) broadcast INTO one streaming scan of the guard to find
-        // the confirmed dups, which broadcast again for the final
-        // anti-join. The guard is never broadcast and never shuffled.
-        // An ALL-NEGATIVE batch short-circuits before any plan that
-        // touches the guard is built (the MediaIngest admission
-        // pattern): no false negatives means every row is definitely
-        // novel, and the driver-side probe costs one pass over the
-        // BATCH — foreachBatch context, so a job here is legal — vs a
-        // full scan of the corpus-scale fingerprint set per batch.
-        val hit = graft.functions.BloomExprs.mightContain(bf, col("__fp"))
-        val probeFps = withFp.filter(hit).select(col("__fp")).distinct()
-          .transform(graft.operators.Barrier.apply) // read by two joins
-        if (probeFps.isEmpty) withFp
-        else {
-          val dupFps = guard.select(col("fp").as("__fp"))
-            .join(broadcast(probeFps), Seq("__fp"), "left_semi")
-          withFp.join(broadcast(dupFps), Seq("__fp"), "left_anti")
-        }
-      case None =>
-        // small-corpus mode: one guard broadcast, one anti-join
-        withFp.join(broadcast(guard.select(col("fp").as("__fp"))),
-          Seq("__fp"), "left_anti")
+      case Some(b) => b.novel(withFp, "__fp", guard)
+      // small-corpus mode: one guard broadcast, one anti-join
+      case None => withFp.join(broadcast(guard), Seq("__fp"), "left_anti")
     })
       // keep one representative per in-batch fingerprint (lowest id)
       .withColumn("__rn",
@@ -256,96 +242,13 @@ object IngestPipeline {
       text: Column,
       idCol: String,
       p: MinHashLSH.Params,
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame =
+      bloom: Option[BloomSidecar] = None): DataFrame =
     MinHashLSH
       .dedupAgainstIndex(
         index,
         exactGuard(batch, sink, table, fingerprints, text, idCol, bloom),
         text, idCol, p)
       .transform(graft.operators.Barrier.apply)
-
-  /** Persist/load the guard bloom beside the index (Hadoop FS, so any
-    * scheme the session can reach works). */
-  def writeBloom(
-      spark: org.apache.spark.sql.SparkSession,
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // staged publish (round-15): a raw overwrite create left a crash
-    // window where the bloom existed TRUNCATED, and every later fold
-    // then died inside BloomFilter.readFrom
-    graft.operators.StagedSwap.writeSidecarVia(fs, p, bloom.writeTo)
-  }
-
-  def readBloom(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val is = fs.open(p)
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(is))
-      finally is.close()
-    }
-  }
-
-  /** The shared id-bloom rebuild convention (creation, sidecar
-    * adoption, saturation) for every maintenance path — 4× headroom
-    * over the current id count so folds have room before fpp decays.
-    * `ids` must be a single non-null string column named `id`.
-    * Extracted after review: three near-verbatim copies had to agree
-    * on headroom and the BloomMeta contract by hand. */
-  private[graft] def writeIdBloomFrom(
-      spark: org.apache.spark.sql.SparkSession,
-      ids: org.apache.spark.sql.DataFrame,
-      bloomPath: String,
-      metaPath: String,
-      fpp: Double): Unit = {
-    val n = math.max(ids.count() * 4, 4L)
-    writeBloom(spark, ids.stat.bloomFilter("id", n, fpp), bloomPath)
-    writeBloomMeta(spark, BloomMeta(n, fpp), metaPath)
-  }
-
-  /** The bloom's creation params, persisted beside the bits:
-    * `BloomFilter.mergeInPlace` requires identical (numBits,
-    * numHashFunctions), and those derive from (expectedItems, fpp) at
-    * creation — so an increment filter built executor-side is
-    * mergeable into the persisted one exactly when it is created with
-    * the SAME params, which therefore must survive restarts. */
-  private[graft] final case class BloomMeta(expectedItems: Long, fpp: Double)
-
-  private[graft] def writeBloomMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      meta: BloomMeta,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    // ArtifactMeta (round-15 consolidation): the former raw
-    // fs.create(overwrite = true) writer had the torn-write window —
-    // a crash left the meta EXISTING but EMPTY, and every later fold
-    // died parsing it — that StagedSwap.writeSidecar was built to close
-    graft.operators.ArtifactMeta.write(
-      p.getFileSystem(spark.sessionState.newHadoopConf()), p,
-      Seq("items" -> meta.expectedItems.toString, "fpp" -> meta.fpp.toString))
-  }
-
-  private[graft] def readBloomMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[BloomMeta] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.ArtifactMeta.read(fs, p).map { m =>
-      (m.get("items"), m.get("fpp"), m.get("value")) match {
-        case (Some(items), Some(fpp), _) => BloomMeta(items.toLong, fpp.toDouble)
-        case (_, _, Some(legacy)) => // pre-round-15 "items fpp" file
-          val parts = legacy.split(" ")
-          BloomMeta(parts(0).toLong, parts(1).toDouble)
-        case _ => throw new java.io.IOException(
-          s"bloom meta at $path is unreadable: $m — rebuild the index bloom")
-      }
-    }
-  }
 
   /** Build the SELF-CONTAINED index directory the CLI lifecycle works
     * against: the [[MinHashLSH]] docs/hot layout plus the corpus exact
@@ -356,21 +259,15 @@ object IngestPipeline {
       text: Column,
       id: Column,
       dir: String,
-      p: MinHashLSH.Params = MinHashLSH.Params(),
-      bloomFpp: Double = 0.01): Unit = {
+      p: MinHashLSH.Params = MinHashLSH.Params()): Unit = {
     MinHashLSH.writeIndex(MinHashLSH.buildIndex(corpus, text, id, p), dir)
     corpusFingerprints(corpus, text).write.mode("overwrite").parquet(s"$dir/fps")
     // the guard bloom: built from the persisted fps (one narrow read,
     // no corpus re-hash) so increments can reject definite-novels
-    // without touching the raw fingerprint set. Sized 4x the corpus —
-    // increments fold their fingerprints in forever, and a filter
-    // sized exactly for day zero would saturate (fpp -> 1) as the
-    // corpus grows; ingestBatch also rebuilds when saturation shows.
+    // without touching the raw fingerprint set
     val spark = corpus.sparkSession
-    val fps = spark.read.parquet(s"$dir/fps")
-    val n = math.max(fps.count() * 4, 4L)
-    writeBloom(spark, fps.stat.bloomFilter("fp", n, bloomFpp), s"$dir/bloom")
-    writeBloomMeta(spark, BloomMeta(n, bloomFpp), s"$dir/bloom.meta")
+    new BloomSidecar(spark, s"$dir/bloom")
+      .rebuild(spark.read.parquet(s"$dir/fps"))
   }
 
   /** `graft index compact`: refresh the index dir's DERIVED artifacts
@@ -388,8 +285,7 @@ object IngestPipeline {
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       ingestedFps: Option[DataFrame] = None,
-      p: MinHashLSH.Params = MinHashLSH.Params(),
-      bloomFpp: Double = 0.01): (Long, Long, Long) = {
+      p: MinHashLSH.Params = MinHashLSH.Params()): (Long, Long, Long) = {
     // hot refresh: one aggregation over the accumulated docs — the
     // build-time cost, re-paid at compaction cadence, not per append
     val docs = spark.read.parquet(s"$indexDir/docs")
@@ -406,10 +302,8 @@ object IngestPipeline {
       .foldLeft(spark.read.parquet(s"$indexDir/fps").select("fp"))(
         (acc, more) => acc.unionByName(more.select("fp")))
       .distinct()
-    val n = math.max(allFps.count() * 4, 4L)
-    writeBloom(spark, allFps.stat.bloomFilter("fp", n, bloomFpp), s"$indexDir/bloom")
-    writeBloomMeta(spark, BloomMeta(n, bloomFpp), s"$indexDir/bloom.meta")
-    (docs.count(), spark.read.parquet(s"$indexDir/hot").count(), n / 4)
+    val n = new BloomSidecar(spark, s"$indexDir/bloom").rebuild(allFps)
+    (docs.count(), spark.read.parquet(s"$indexDir/hot").count(), n)
   }
 
   /** One BATCH increment through the full curation lifecycle — the
@@ -432,44 +326,14 @@ object IngestPipeline {
       p: MinHashLSH.Params = MinHashLSH.Params()): (Long, Long) = {
     val index = MinHashLSH.readIndex(spark, indexDir)
     val fps = spark.read.parquet(s"$indexDir/fps")
-    val bloom = readBloom(spark, s"$indexDir/bloom")
+    val bloom = Some(new BloomSidecar(spark, s"$indexDir/bloom"))
     val novel = curateBatch(increment, sink, table, index, fps, text, idCol, p, bloom)
-    sink.append(novel.drop("__fp"), table)
-    sink.append(novel.select(col("__fp").as("fp")).distinct(), s"${table}_fps")
-    MinHashLSH.signatures(novel, text, col(idCol), p)
-      .withColumn("bks", MinHashLSH.bandKeys(col("sig"), p.bands, p.rows))
-      .write.mode("append").parquet(s"$indexDir/docs")
-    // fold the survivors' fingerprints into the persisted bloom too,
-    // EXECUTOR-side: build an increment filter with the persisted
-    // creation params (identical numBits/numHashFunctions — the
-    // mergeInPlace compatibility contract) via the distributed
-    // stat.bloomFilter aggregate, then OR it in. No fingerprint ever
-    // crosses to the driver — only the two filters' bits meet there.
-    // A fixed-size filter saturates as folds accumulate (fpp -> 1 =
-    // every row silently pays the exact join again), so when the
-    // filter's own saturation estimate passes 5%, rebuild it from the
-    // full fingerprint universe with fresh 4x headroom.
-    bloom.foreach { bf =>
-      val meta = readBloomMeta(spark, s"$indexDir/bloom.meta")
-      val novelFps = novel.select(col("__fp")).filter(col("__fp").isNotNull)
-      // no sidecar (legacy index dir) = creation params unrecoverable
-      // (numHashFunctions is private to the impl) = not mergeable:
-      // fall through to the full rebuild instead. Zero-row aggregate
-      // yields no filter at all (stat.bloomFilter NPEs) — nothing to
-      // fold then anyway.
-      meta.filter(_ => !novelFps.isEmpty).foreach(m =>
-        bf.mergeInPlace(novelFps.stat.bloomFilter("__fp", m.expectedItems, m.fpp)))
-      val refreshed =
-        if (meta.nonEmpty && bf.expectedFpp() <= 0.05) bf
-        else {
-          val allFps = fps.select("fp")
-            .unionByName(sink.readBack(spark, s"${table}_fps").select("fp"))
-            .distinct()
-          val n = math.max(allFps.count() * 4, 4L)
-          writeBloomMeta(spark, BloomMeta(n, 0.01), s"$indexDir/bloom.meta")
-          allFps.stat.bloomFilter("fp", n, 0.01)
-        }
-      writeBloom(spark, refreshed, s"$indexDir/bloom")
+    commit(bloom, novel, guardFps(sink, table, fps)) {
+      sink.append(novel.drop("__fp"), table)
+      sink.append(novel.select(col("__fp").as("fp")).distinct(), s"${table}_fps")
+      MinHashLSH.signatures(novel, text, col(idCol), p)
+        .withColumn("bks", MinHashLSH.bandKeys(col("sig"), p.bands, p.rows))
+        .write.mode("append").parquet(s"$indexDir/docs")
     }
     (increment.count(), novel.count())
   }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.multimodal.PerceptualHash
 
@@ -19,7 +20,7 @@ import graft.operators.multimodal.PerceptualHash
   * pigeonhole ([[PerceptualHash.pairs]]) says any pair within Hamming
   * `maxHamming <= bands-1` agrees on at least one whole band of the
   * 64-bit hash, so the check needs only band-key EQUALITY:
-  *   1. BLOOM GATE — `build` persists a bloom over the index's
+  *   1. BLOOM GATE — `build` persists a [[BloomSidecar]] over the index's
   *      "band:key" strings and every append folds its survivors
   *      forward; a batch whose band keys are ALL bloom-negative
   *      cannot collide on any band and is admitted without reading
@@ -46,7 +47,8 @@ import graft.operators.multimodal.PerceptualHash
 object MediaIngest {
 
   private def bloomPath(dir: String) = s"$dir/bands.bloom"
-  private def bloomMetaPath(dir: String) = s"$dir/bands.bloom.meta"
+  private def sidecar(spark: SparkSession, dir: String) =
+    new BloomSidecar(spark, bloomPath(dir))
   private def modePath(dir: String) = s"$dir/hash_mode"
 
   val DefaultBands = 4
@@ -133,34 +135,30 @@ object MediaIngest {
     // admit near-duplicates without a scan; a MISSING bloom is the
     // conservative state — admitBatch falls back to the full scan and
     // the next commit adopts a fresh one
-    fs.delete(new org.apache.hadoop.fs.Path(bloomPath(dir)), false)
-    fs.delete(new org.apache.hadoop.fs.Path(bloomMetaPath(dir)), false)
+    sidecar(spark, dir).delete()
     writeMode(spark, dir, audio)
     hashed(media, maxDecodeBytes, audio)
       .write.mode("overwrite").parquet(s"$dir/hashes")
     writeBandBloom(spark, dir, bands)
   }
 
-  /** Rebuild the band-key bloom from the persisted hashes, sized 4×
-    * current so appends fold forward before fpp decays. */
+  /** The band keys of every persisted hash. */
+  private def indexBandKeys(spark: SparkSession, dir: String, bands: Int) =
+    spark.read.parquet(s"$dir/hashes")
+      .select(explode(bandKeyCol(col("dhash"), bands)))
+
+  /** Rebuild the band-key bloom from the persisted hashes. */
   def writeBandBloom(spark: SparkSession, dir: String,
-      bands: Int = DefaultBands, fpp: Double = 0.01): Unit = {
-    val keys = spark.read.parquet(s"$dir/hashes")
-      .select(explode(bandKeyCol(col("dhash"), bands)).as("bk"))
-    val n = math.max(keys.count() * 4, 4L)
-    IngestPipeline.writeBloom(
-      spark, keys.stat.bloomFilter("bk", n, fpp), bloomPath(dir))
-    IngestPipeline.writeBloomMeta(
-      spark, IngestPipeline.BloomMeta(n, fpp), bloomMetaPath(dir))
-  }
+      bands: Int = DefaultBands): Unit =
+    sidecar(spark, dir).rebuild(indexBandKeys(spark, dir, bands))
 
   /** The admission decision split from its index commit: `admitted` is
     * the Barrier'd novel (id, dhash) set; `candidates` is the
     * Barrier'd DECODABLE distinct-hash set the guard evaluated (so
     * callers can report decode failures / within-batch exact-dup
     * collapse separately from perceptual rejections — they differ by
-    * candidates − admitted); `commit()` appends the admitted hashes
-    * to the index and folds the bloom forward. Callers that also
+    * candidates − admitted); `commit()` folds the admitted hashes'
+    * band keys into the bloom, then appends the hashes. Callers that also
     * persist PAYLOADS (the streaming sink, CLI append) must write
     * them BETWEEN the two — sink first, commit second — so an
     * at-least-once replay re-admits at worst a duplicate payload row
@@ -199,10 +197,10 @@ object MediaIngest {
         rows.write.mode("overwrite").parquet(s"$indexDir/hashes")
         writeBandBloom(spark, indexDir, bands)
       })
-    val bloom = IngestPipeline.readBloom(spark, bloomPath(indexDir))
+    val bloom = sidecar(spark, indexDir)
     val batchKeys = rows.select(col("dhash").as("dh_b"),
       explode(bandKeyCol(col("dhash"), bands)).as("bk"))
-    val novel = bloom match {
+    val novel = bloom.bits match {
       case Some(bf) if rows
           // a row is a POSSIBLE collision if ANY of its band keys hits
           .filter(exists(bandKeyCol(col("dhash"), bands),
@@ -221,22 +219,11 @@ object MediaIngest {
         rows.join(broadcast(dupHashes), Seq("dhash"), "left_anti")
     }
     val novelM = graft.operators.Barrier(novel)
-    Admission(novelM, rows, () => {
-      novelM.write.mode("append").parquet(s"$indexDir/hashes")
-      bloom match {
-        case Some(bf) =>
-          val meta = IngestPipeline.readBloomMeta(spark, bloomMetaPath(indexDir))
-          val novelKeys = novelM
-            .select(explode(bandKeyCol(col("dhash"), bands)).as("bk"))
-          meta.filter(_ => !novelKeys.isEmpty).foreach(m =>
-            bf.mergeInPlace(novelKeys.stat.bloomFilter("bk", m.expectedItems, m.fpp)))
-          if (meta.nonEmpty && bf.expectedFpp() <= 0.05)
-            IngestPipeline.writeBloom(spark, bf, bloomPath(indexDir))
-          else writeBandBloom(spark, indexDir, bands)
-        case None =>
-          writeBandBloom(spark, indexDir, bands) // adopt for next append
-      }
-    })
+    Admission(novelM, rows, () =>
+      bloom.commit(novelM.select(explode(bandKeyCol(col("dhash"), bands))),
+          indexBandKeys(spark, indexDir, bands)) {
+        novelM.write.mode("append").parquet(s"$indexDir/hashes")
+      })
   }
 
   /** Admission + immediate commit — the pure-index batch API (no
@@ -282,7 +269,7 @@ object MediaIngest {
       else PerceptualHash.dHash64(payload, maxDecodeBytes)
     probeHash.map { h =>
       val gateMiss = maxHamming < bands &&
-        IngestPipeline.readBloom(spark, bloomPath(dir)).exists(bf =>
+        sidecar(spark, dir).bits.exists(bf =>
           bandKeys(h, bands).forall(k => !bf.mightContainString(k)))
       if (gateMiss) Seq.empty[(Long, Long, Int)].toDF("id", "dhash", "hamming")
       else spark.read.parquet(s"$dir/hashes")
@@ -329,35 +316,28 @@ object MediaIngest {
       maxHamming: Int = DefaultMaxHamming,
       bands: Int = DefaultBands,
       audio: Boolean = false,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // payloads FIRST, hash commit SECOND: a replay after a crash in
-        // between re-admits the batch (its hashes are not yet indexed)
-        // and re-appends at-least-once duplicates to the keyed sink —
-        // never the reverse window, where already-indexed hashes would
-        // reject the replay and drop the payloads forever
-        // admitBatch decodes select("id", "content"), so a custom id
-        // column is renamed into place first — without this the idCol
-        // parameter would advertise support the decode step lacks. A
-        // stray pre-existing "id" column is dropped before the rename
-        // (the caller designated idCol as THE id; keeping both would
-        // make the select ambiguous and fail every micro-batch)
-        val keyed =
-          if (idCol == "id") batch
-          else batch.drop("id").withColumnRenamed(idCol, "id")
-        val a = admitBatch(keyed, indexDir, maxHamming, bands,
-          audio = audio)
-        sink.append(
-          batch.join(broadcast(a.admitted.select(col("id").as(idCol))),
-            Seq(idCol), "left_semi"),
-          table)
-        a.commit()
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      // payloads FIRST, hash commit SECOND: a replay after a crash in
+      // between re-admits the batch (its hashes are not yet indexed)
+      // and re-appends at-least-once duplicates to the keyed sink —
+      // never the reverse window, where already-indexed hashes would
+      // reject the replay and drop the payloads forever
+      // admitBatch decodes select("id", "content"), so a custom id
+      // column is renamed into place first — without this the idCol
+      // parameter would advertise support the decode step lacks. A
+      // stray pre-existing "id" column is dropped before the rename
+      // (the caller designated idCol as THE id; keeping both would
+      // make the select ambiguous and fail every micro-batch)
+      val keyed =
+        if (idCol == "id") batch
+        else batch.drop("id").withColumnRenamed(idCol, "id")
+      val a = admitBatch(keyed, indexDir, maxHamming, bands,
+        audio = audio)
+      sink.append(
+        batch.join(broadcast(a.admitted.select(col("id").as(idCol))),
+          Seq(idCol), "left_semi"),
+        table)
+      a.commit()
+    }
 }

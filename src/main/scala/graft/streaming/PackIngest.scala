@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.text.SequencePack
 
@@ -18,40 +19,23 @@ import graft.operators.text.SequencePack
   * requires each micro-batch's doc_ids to sort after everything
   * already packed in their shard — the append-only id convention
   * every increment path in this repo carries. Replays (foreachBatch
-  * is at-least-once) are guarded exactly like [[VectorIngest]]: a
-  * bloom over assigned id strings folds forward per batch, an
-  * all-bloom-negative batch never reads the assignment at all, and
-  * positives broadcast into ONE ids-only columnar scan for the
-  * confirming anti-join. The assignment table itself is 4 longs per
-  * row — the bloom spares the scan, not a shuffle; the table is never
-  * shuffled or broadcast.
+  * is at-least-once) are guarded exactly like [[VectorIngest]], by an
+  * `ids.bloom` [[BloomSidecar]] over the assigned ids. The assignment
+  * table itself is 4 longs per row — the bloom spares the scan, not a
+  * shuffle; the table is never shuffled or broadcast.
   */
 object PackIngest {
 
   private def asgPath(dir: String) = s"$dir/assignment"
-  private def bloomPath(dir: String) = s"$dir/ids.bloom"
-  private def bloomMetaPath(dir: String) = s"$dir/ids.bloom.meta"
-
-  /** Rebuild the id bloom from the persisted assignment (creation,
-    * adoption, saturation); `extraIds` (single string column `id`)
-    * joins the rebuild for ids that are ABOUT to be appended — a
-    * saturation rebuild mid-batch must cover the in-flight batch or
-    * the bloom-before-append crash discipline breaks. */
-  def writeIdBloom(spark: SparkSession, dir: String,
-      fpp: Double = 0.01,
-      extraIds: Option[DataFrame] = None): Unit = {
-    val persisted = spark.read.parquet(asgPath(dir))
-      .select(col("doc_id").cast("string").as("id"))
-      .filter(col("id").isNotNull)
-    val ids = extraIds.fold(persisted)(persisted.unionByName(_))
-    IngestPipeline.writeIdBloomFrom(
-      spark, ids, bloomPath(dir), bloomMetaPath(dir), fpp)
-  }
+  private def sidecar(spark: SparkSession, dir: String) =
+    new BloomSidecar(spark, s"$dir/ids.bloom")
+  private def docIds(spark: SparkSession, dir: String) =
+    spark.read.parquet(asgPath(dir)).select("doc_id")
 
   /** One maintenance step, also usable for batch increments: dedup
-    * within the batch, bloom-gate the replay check, pack only the
-    * novel rows as a prefix-stable continuation, append, fold the
-    * bloom forward. */
+    * within the batch, bloom-gate the replay check, fold the novel ids
+    * into the bloom, then pack them as a prefix-stable continuation
+    * and append. */
   def appendBatch(
       batch: DataFrame,
       text: Column,
@@ -68,68 +52,24 @@ object PackIngest {
       val first = SequencePack.assign(
         rows, col("__text"), col("doc_id"), capacity, shards)
       first.write.parquet(asgPath(dir))
-      writeIdBloom(spark, dir)
+      sidecar(spark, dir).rebuild(docIds(spark, dir))
       return
     }
-    val bloom = IngestPipeline.readBloom(spark, bloomPath(dir))
-    val novel = bloom match {
-      case Some(bf) =>
-        // nulls can't probe the bloom — route them with the positive
-        // branch so the anti-join decides
-        val hit = coalesce(
-          graft.functions.BloomExprs.mightContain(
-            bf, col("doc_id").cast("string")), lit(true))
-        val hits = rows.filter(hit).select("doc_id")
-        if (hits.isEmpty) rows // all definitely novel: assignment unread
-        else {
-          val confirmed = spark.read.parquet(asgPath(dir))
-            .select("doc_id").join(broadcast(hits), Seq("doc_id"), "left_semi")
-          rows.join(broadcast(confirmed), Seq("doc_id"), "left_anti")
-        }
-      case None =>
-        rows.join(
-          spark.read.parquet(asgPath(dir)).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-    }
+    val bloom = sidecar(spark, dir)
     // barrier BEFORE anything re-reads `novel`: un-materialized
     // lineage would re-run the anti-join against an assignment that
     // may meanwhile contain these rows
-    val novelM = graft.operators.Barrier(novel)
-    // ORDER MATTERS (review finding): the bloom folds BEFORE the
-    // append. A crash between the two then leaves only a FALSE
-    // POSITIVE window (ids in the bloom but not yet appended — the
-    // replay's confirming anti-join sees them absent and appends
-    // correctly). The reverse order left a false NEGATIVE window:
-    // appended ids invisible to a stale bloom, declared novel on
-    // replay, and appendAssign's order guard would crash-loop the
-    // stream with no recovery path.
-    bloom match {
-      case Some(bf) =>
-        val meta = IngestPipeline.readBloomMeta(spark, bloomMetaPath(dir))
-        val novelIds = novelM.select(col("doc_id").cast("string").as("id"))
-          .filter(col("id").isNotNull)
-        meta.filter(_ => !novelIds.isEmpty).foreach(m =>
-          bf.mergeInPlace(novelIds.stat.bloomFilter("id", m.expectedItems, m.fpp)))
-        if (meta.nonEmpty && bf.expectedFpp() <= 0.05)
-          IngestPipeline.writeBloom(spark, bf, bloomPath(dir))
-        else
-          // saturation rebuild happens BEFORE the append, so it must
-          // already cover this batch's ids
-          writeIdBloom(spark, dir, extraIds = Some(novelIds))
-      case None => () // sidecar adopted after the append below
+    val novel = graft.operators.Barrier(bloom.novel(rows, "doc_id", docIds(spark, dir)))
+    bloom.commit(novel.select("doc_id"), docIds(spark, dir)) {
+      // the continuation's tail-state aggregate reads the SAME directory
+      // the append writes into — materialize it first so the write
+      // job's lineage never lists its own output
+      val inc = graft.operators.Barrier(
+        SequencePack.appendAssign(
+          spark.read.parquet(asgPath(dir)), novel,
+          col("__text"), col("doc_id"), capacity, shards))
+      inc.write.mode("append").parquet(asgPath(dir))
     }
-    // the continuation's tail-state aggregate reads the SAME directory
-    // the append writes into — materialize it first so the write job's
-    // lineage never lists its own output
-    val inc = graft.operators.Barrier(
-      SequencePack.appendAssign(
-        spark.read.parquet(asgPath(dir)), novelM,
-        col("__text"), col("doc_id"), capacity, shards))
-    inc.write.mode("append").parquet(asgPath(dir))
-    if (bloom.isEmpty)
-      // adopt the sidecar for the NEXT append (one full ids pass now
-      // buys bloom-gated appends forever after)
-      writeIdBloom(spark, dir)
   }
 
   /** Maintain the assignment from a stream. AvailableNow by default —
@@ -142,17 +82,10 @@ object PackIngest {
       checkpointDir: String,
       capacity: Int,
       shards: Int,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, text, id, dir, capacity, shards)
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      appendBatch(batch, text, id, dir, capacity, shards)
+    }
 
   /** The maintained assignment, read back. */
   def assignment(spark: SparkSession, dir: String): DataFrame =

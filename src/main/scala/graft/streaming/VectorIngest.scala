@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.similarity.{IvfPq, ProductQuantizer}
 
@@ -23,15 +24,10 @@ import graft.operators.similarity.{IvfPq, ProductQuantizer}
   * Within-batch duplicate ids collapse to one arbitrary row (Spark's
   * `dropDuplicates` keeps whichever row its scan sees first).
   *
-  * The novelty check is BLOOM-GATED exactly as [[IngestPipeline]]'s
-  * fingerprint guard: `ann build` persists a bloom over the index's id
-  * strings beside the codes, each append folds its novel ids forward
-  * (executor-side `stat.bloomFilter` + `mergeInPlace` — ids never ride
-  * the driver), and a batch whose ids are ALL bloom-negative is
-  * definitely novel and never reads the ids parquet at all. Only the
-  * bloom-positive rows (true replays + ~fpp noise) probe the index:
-  * they broadcast into ONE ids-only scan, so at 10⁹ vectors a novel
-  * stream costs ~40 bytes of bloom probes per row instead of a
+  * The novelty check is gated by the `ids.bloom` [[BloomSidecar]]
+  * `ann build` persists beside the codes: a batch whose ids are all
+  * bloom-negative never reads the ids parquet, so at 10⁹ vectors a
+  * novel stream costs bloom probes per row instead of a
   * full-index scan per micro-batch. Because cells and codebook are
   * frozen constants, the maintained index stays content-identical to a
   * full rebuild over everything ever ingested (the qs24 contract), and
@@ -39,8 +35,10 @@ import graft.operators.similarity.{IvfPq, ProductQuantizer}
   */
 object VectorIngest {
 
-  private def bloomPath(indexDir: String) = s"$indexDir/ids.bloom"
-  private def bloomMetaPath(indexDir: String) = s"$indexDir/ids.bloom.meta"
+  private def sidecar(spark: SparkSession, indexDir: String) =
+    new BloomSidecar(spark, s"$indexDir/ids.bloom")
+  private def ids(spark: SparkSession, indexDir: String) =
+    spark.read.parquet(s"$indexDir/codes").select("id")
 
   /** Append each micro-batch's novel vectors into `indexDir`.
     * AvailableNow by default: drain what exists, then stop — the batch
@@ -52,39 +50,19 @@ object VectorIngest {
       indexDir: String,
       checkpointDir: String,
       cb: ProductQuantizer.Codebook = ProductQuantizer.DefaultCodebook,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, vec, id, indexDir, cb)
-      }
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      appendBatch(batch, vec, id, indexDir, cb)
+    }
 
   /** Build (or rebuild) the id bloom sidecar from the persisted codes —
-    * called by `ann build`, by the first append into a pre-bloom index
-    * dir, and on saturation. Sized 4× the current ids so appends can
-    * fold forward before fpp decays ([[IngestPipeline.buildIndexDir]]'s
-    * policy). */
-  def writeIdBloom(spark: SparkSession, indexDir: String,
-      fpp: Double = 0.01,
-      extraIds: Option[DataFrame] = None): Unit = {
-    val persisted = spark.read.parquet(s"$indexDir/codes")
-      .select(col("id").cast("string").as("id"))
-      .filter(col("id").isNotNull)
-    val ids = extraIds.fold(persisted)(persisted.unionByName(_))
-    IngestPipeline.writeIdBloomFrom(
-      spark, ids, bloomPath(indexDir), bloomMetaPath(indexDir), fpp)
-  }
+    * called by `ann build` and by the first append into an empty dir. */
+  def writeIdBloom(spark: SparkSession, indexDir: String): Unit =
+    sidecar(spark, indexDir).rebuild(ids(spark, indexDir))
 
   /** One batch of the maintenance loop, also usable standalone for
     * batch increments: dedup within the batch, bloom-gate the novelty
-    * check (bloom-negative rows never touch the index; positives
-    * broadcast into one ids-only scan), append only the novel rows'
-    * codes, fold their ids into the persisted bloom. */
+    * check, fold the novel ids into the bloom, append their codes. */
   def appendBatch(
       batch: DataFrame,
       vec: Column,
@@ -104,64 +82,13 @@ object VectorIngest {
       writeIdBloom(spark, indexDir)
       return
     }
-    val bloom = IngestPipeline.readBloom(spark, bloomPath(indexDir))
-    val novel = bloom match {
-      case Some(bf) =>
-        // null ids can't probe the bloom — route them with the
-        // POSITIVE branch so the anti-join decides (it keeps them,
-        // matching the no-bloom path's null semantics)
-        val hit = coalesce(
-          graft.functions.BloomExprs.mightContain(
-            bf, col("id").cast("string")), lit(true))
-        val hits = rows.filter(hit).select("id")
-        if (hits.isEmpty) rows // all definitely novel: ids never read
-        else {
-          // 100 TB shape: the ids scan is the unbroadcastable side, so
-          // the (tiny) bloom-positive ids broadcast INTO one columnar
-          // ids-only pass; confirmed replays broadcast again for the
-          // final anti-join. The index is never broadcast or shuffled.
-          val confirmed = spark.read.parquet(s"$indexDir/codes")
-            .select("id").join(broadcast(hits), Seq("id"), "left_semi")
-          rows.join(broadcast(confirmed), Seq("id"), "left_anti")
-        }
-      case None =>
-        // legacy index dir without the sidecar: full ids anti-join
-        val existing = spark.read.parquet(s"$indexDir/codes").select("id")
-        rows.join(existing, Seq("id"), "left_anti")
-    }
+    val bloom = sidecar(spark, indexDir)
     // barrier BEFORE anything re-reads `novel` — un-materialized
     // lineage would re-run the anti-join against the index after it
-    // gains these rows (yielding nothing to fold)
-    val novelM = graft.operators.Barrier(novel)
-    // ORDER MATTERS (review finding): the bloom folds BEFORE the
-    // append. A crash between the two leaves a FALSE POSITIVE window
-    // only — ids in the bloom but not the index, so a replay's
-    // confirming anti-join finds them absent and appends correctly.
-    // The old append-first order left a false NEGATIVE window: a
-    // stale bloom declared already-appended ids novel on replay and
-    // the fast path re-appended DUPLICATES silently.
-    bloom match {
-      case Some(bf) =>
-        val meta = IngestPipeline.readBloomMeta(spark, bloomMetaPath(indexDir))
-        val novelIds = novelM.select(col("id").cast("string").as("id"))
-          .filter(col("id").isNotNull)
-        // fold executor-side with the persisted creation params (the
-        // mergeInPlace compatibility contract); zero-row folds skip
-        meta.filter(_ => !novelIds.isEmpty).foreach(m =>
-          bf.mergeInPlace(novelIds.stat.bloomFilter("id", m.expectedItems, m.fpp)))
-        if (meta.nonEmpty && bf.expectedFpp() <= 0.05)
-          IngestPipeline.writeBloom(spark, bf, bloomPath(indexDir))
-        else
-          // saturation rebuild runs pre-append, so it must already
-          // cover this batch's ids
-          writeIdBloom(spark, indexDir, extraIds = Some(novelIds))
-      case None => () // sidecar adopted after the append below
+    // gains these rows (yielding nothing to append)
+    val novel = graft.operators.Barrier(bloom.novel(rows, "id", ids(spark, indexDir)))
+    bloom.commit(novel.select("id"), ids(spark, indexDir)) {
+      IvfPq.appendIndex(novel, col("v"), col("id"), indexDir, cb)
     }
-    IvfPq.appendIndex(novelM, col("v"), col("id"), indexDir, cb)
-    if (bloom.isEmpty)
-      // adopt the sidecar for the NEXT append (one full ids pass now
-      // buys bloom-gated appends forever after; the anti-join path it
-      // replaces has no false negatives, so post-append is safe here)
-      writeIdBloom(spark, indexDir)
   }
 }

@@ -358,13 +358,13 @@ object Sync {
     * arbitrary SELECTs, each pushed verbatim to the source database via
     * the JDBC `query` option (so the source engine executes it — same
     * pushdown-by-construction semantics as the reference), unioned, and
-    * truncate-loaded into the sink. */
+    * truncate-loaded into the sink, `maxParallel` tables at a time. */
   def syncCustom(
       spark: SparkSession,
       src: graft.config.Endpoint,
       sink: Sink,
       config: SyncConfig): Seq[TableReport] =
-    config.tables.toSeq.map { case (table, sqls) =>
+    parMap(config.tables.toSeq, config.maxParallel) { case (table, sqls) =>
       report(spark, sink, table, s"graft-sync-$table") {
         val dfs = sqls.map { sql =>
           Normalize.lowercaseColumns(spark.read.format("jdbc").option("url", src.url)

@@ -98,6 +98,63 @@ class MainSpec extends SparkSpec {
     assert(Main.run(Array("compare", "--config", cfg), spark) == 0)
   }
 
+  test("sync with a tables: section loads only the configured SELECTs") {
+    // the reference's custom-SQL mode: each configured table loads from
+    // its SELECTs, run on the JDBC source; no other table is touched
+    val srcUrl = "jdbc:derby:memory:clicustomsrc;create=true"
+    val out = Files.createTempDirectory("graft_cli_custom").toString
+    graft.sync.DdlReplay.replay(
+      new graft.catalog.JdbcCatalog(graft.config.Endpoint(srcUrl)), Seq(
+        "CREATE TABLE cs_pick (id INT NOT NULL PRIMARY KEY, v VARCHAR(16))",
+        "INSERT INTO cs_pick VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')",
+        "CREATE TABLE cs_other (id INT NOT NULL PRIMARY KEY)",
+        "INSERT INTO cs_other VALUES (1)"))
+    val tables =
+      """tables:
+        |  cs_pick:
+        |    - "SELECT id, v FROM cs_pick WHERE id <= 2"
+        |    - "SELECT id, v FROM cs_pick WHERE id = 4"
+        |""".stripMargin
+    val cfg = writeCfg(
+      s"""src:
+         |  url: $srcUrl
+         |dest:
+         |  url: parquet:$out
+         |""".stripMargin + tables)
+    assert(Main.run(Array("sync", "--config", cfg), spark) == 0)
+    val got = spark.read.parquet(s"$out/cs_pick.parquet").select("id")
+      .collect().map(_.getInt(0)).sorted
+    assert(got.sameElements(Array(1, 2, 4)), got.mkString(","))
+    assert(!new java.io.File(s"$out/cs_other.parquet").exists(),
+      "a table outside the tables: section was loaded")
+    // the SELECTs need a JDBC source, and the mode has no delta or ledger
+    assert(Main.run(Array("sync", "--delta", "--config", cfg), spark) == 2)
+    assert(Main.run(Array("sync", "--ledger", s"$out/_ledger", "--config", cfg), spark) == 2)
+    val fileSrc = writeCfg(
+      s"""src:
+         |  url: parquet:$sf0001
+         |dest:
+         |  url: parquet:$out
+         |""".stripMargin + tables)
+    assert(Main.run(Array("sync", "--config", fileSrc), spark) == 2)
+  }
+
+  test("a parquet:file: source lists its tables through the Hadoop FileSystem") {
+    val out = Files.createTempDirectory("graft_cli_fileuri").toString
+    val cfg = writeCfg(
+      s"""src:
+         |  url: parquet:file:$sf0001
+         |dest:
+         |  url: parquet:$out
+         |exclude: lineitem orders events documents embeddings part customer supplier
+         |""".stripMargin)
+    assert(Main.run(Array("sync", "--config", cfg), spark) == 0)
+    assert(Seq("nation", "region").forall(t =>
+      new java.io.File(s"$out/$t.parquet").exists()),
+      "a file: URI source listed no tables")
+    assert(Main.run(Array("compare", "--config", cfg), spark) == 0)
+  }
+
   test("compare flags missing destination tables") {
     val out = Files.createTempDirectory("graft_cli_out2").toString
     val cfg = writeCfg(

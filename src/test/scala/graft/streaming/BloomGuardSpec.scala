@@ -27,6 +27,14 @@ class BloomGuardSpec extends SparkSpec {
   private val p = MinHashLSH.Params(
     shingleSize = 5, numHashes = 48, bands = 12, threshold = 0.3)
 
+  /** A guard bloom over `fps`, persisted in a fresh directory. */
+  private def sidecar(fps: org.apache.spark.sql.DataFrame): BloomSidecar = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bg_bloom").toString
+    val bloom = new BloomSidecar(spark, s"$dir/bloom")
+    bloom.rebuild(fps)
+    bloom
+  }
+
   test("no false negatives over the fixture corpus; fps bounded") {
     val docs = graft.Tables.load(spark, sf001, "documents")
     val fp = md5(TextOps.normalized(col("text")))
@@ -44,8 +52,8 @@ class BloomGuardSpec extends SparkSpec {
   test("bloom-prefiltered curation lands on the identical novel set") {
     val index = MinHashLSH.buildIndex(corpus, col("text"), col("doc_id"), p)
     val fps = IngestPipeline.corpusFingerprints(corpus, col("text"))
-    val bf = fps.stat.bloomFilter("fp", math.max(fps.count(), 1L), 0.01)
-    def run(bloom: Option[org.apache.spark.util.sketch.BloomFilter]): Seq[Long] = {
+    val bf = sidecar(fps)
+    def run(bloom: Option[BloomSidecar]): Seq[Long] = {
       val dir = java.nio.file.Files.createTempDirectory("graft_bg").toString
       IngestPipeline
         .curateBatch(increment, ParquetSink(dir), "out", index, fps,
@@ -60,7 +68,7 @@ class BloomGuardSpec extends SparkSpec {
 
   test("bloom mode confirms dups via semi-join — the guard side is never broadcast") {
     val fps = IngestPipeline.corpusFingerprints(corpus, col("text"))
-    val bf = fps.stat.bloomFilter("fp", 16L, 0.01)
+    val bf = sidecar(fps)
     val dir = java.nio.file.Files.createTempDirectory("graft_bg_plan").toString
     val plan = IngestPipeline
       .exactGuard(increment, ParquetSink(dir), "out", fps,
@@ -78,7 +86,7 @@ class BloomGuardSpec extends SparkSpec {
     val idxDir = java.nio.file.Files.createTempDirectory("graft_bg_idx").toString + "/lsh"
     val outDir = java.nio.file.Files.createTempDirectory("graft_bg_out").toString
     IngestPipeline.buildIndexDir(corpus, col("text"), col("doc_id"), idxDir, p)
-    assert(IngestPipeline.readBloom(spark, s"$idxDir/bloom").nonEmpty,
+    assert(new BloomSidecar(spark, s"$idxDir/bloom").bits.nonEmpty,
       "build did not persist a bloom")
     val sink = ParquetSink(outDir)
     val (in1, kept1) = IngestPipeline.ingestBatch(

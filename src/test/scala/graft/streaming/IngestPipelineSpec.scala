@@ -242,6 +242,41 @@ class IngestPipelineSpec extends SparkSpec {
       s"cross-batch exact dup re-ingested: ${after.mkString(",")}")
   }
 
+  test("with the index dir's bloom, a later micro-batch re-sending doc 13 as 99 is rejected") {
+    // curate-stream wires the bloom buildIndexDir persists. It only
+    // knows the corpus until each batch folds its novel fingerprints
+    // in — without the fold, doc 99 (doc 13's text) passes the gate as
+    // definitely novel and lands a second time
+    val dir = stage(arrivals, twice = false)
+    val p = MinHashLSH.Params(
+      shingleSize = 5, numHashes = 48, bands = 12, threshold = 0.3)
+    val idxDir = java.nio.file.Files.createTempDirectory("graft_ingest_idx").toString
+    IngestPipeline.buildIndexDir(corpus, col("text"), col("doc_id"), idxDir, p)
+    val index = MinHashLSH.readIndex(spark, idxDir)
+    val fps = spark.read.parquet(s"$idxDir/fps")
+    val sink = ParquetSink(
+      java.nio.file.Files.createTempDirectory("graft_ingest_bsink").toString)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ingest_bckpt").toString
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, text STRING"))
+      .option("recursiveFileLookup", "true").parquet(dir)
+    // one sidecar per run, as each curate-stream invocation loads it
+    def drain(): Unit = IngestPipeline.curateIngest(
+      stream, sink, "docs", ckpt, index, fps, col("text"), "doc_id", p,
+      bloom = Some(new BloomSidecar(spark, s"$idxDir/bloom"))).awaitTermination(60000)
+    def landed = sink.readBack(spark, "docs").select("doc_id").as[Long]
+      .collect().sorted.toSeq
+    drain()
+    assert(landed == Seq(13L, 15L), landed.mkString(","))
+    Seq((99L, "a wholly new document with nothing in common with the corpus"))
+      .toDF("doc_id", "text")
+      .write.mode("append").parquet(s"$dir/late")
+    drain()
+    assert(landed == Seq(13L, 15L),
+      s"cross-batch exact dup re-ingested past the bloom: ${landed.mkString(",")}")
+  }
+
   test("benchmark gate quarantines near-dups of eval items at ingest") {
     val dir = stage(arrivals, twice = false)
     val p = MinHashLSH.Params(

@@ -61,6 +61,22 @@ class MediaIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/hashes").count() == 4)
   }
 
+  test("a commit whose bloom fold fails appends nothing; the rerun lands each image once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mi_fault").toString
+    MediaIngest.buildIndexDir(media(Seq(0L, 2L, 4L)), dir)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val meta = new org.apache.hadoop.fs.Path(s"$dir/bands.bloom.meta")
+    val saved = graft.operators.StagedSwap.readSidecar(fs, meta)
+    graft.operators.StagedSwap.writeSidecar(fs, meta, "unreadable")
+    // image 500's band keys are all bloom-negative: the gate admits it
+    // without a scan, so only the commit's order keeps a rerun honest
+    intercept[Exception](MediaIngest.appendBatch(media(Seq(500L)), dir))
+    graft.operators.StagedSwap.writeSidecar(fs, meta, saved)
+    MediaIngest.appendBatch(media(Seq(500L)), dir)
+    val ids = spark.read.parquet(s"$dir/hashes").select("id").as[Long].collect().toSeq
+    assert(ids.sorted == Seq(0L, 2L, 4L, 500L), s"hashes hold ${ids.sorted.mkString(",")}")
+  }
+
   test("compact collapses append-accumulated files; guard behavior unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mi_c").toString
     MediaIngest.buildIndexDir(media(Seq(0L, 2L)), dir)

@@ -76,10 +76,28 @@ class VectorIngestSpec extends SparkSpec {
     VectorIngest.appendBatch(
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 150),
       col("embedding"), col("vec_id"), dir)
-    val bf = IngestPipeline.readBloom(spark, s"$dir/ids.bloom").get
+    val bf = new BloomSidecar(spark, s"$dir/ids.bloom").bits.get
     (0 until 150).foreach(i =>
       assert(bf.mightContainString(i.toString), s"id $i missing from bloom"))
     assert(spark.read.parquet(s"$dir/codes").count() === 150L)
+  }
+
+  test("a commit whose bloom fold fails appends nothing; the rerun lands each id once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vi_fault").toString
+    VectorIngest.appendBatch(emb.filter(col("vec_id") < 100),
+      col("embedding"), col("vec_id"), dir)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val meta = new org.apache.hadoop.fs.Path(s"$dir/ids.bloom.meta")
+    val saved = graft.operators.StagedSwap.readSidecar(fs, meta)
+    graft.operators.StagedSwap.writeSidecar(fs, meta, "unreadable")
+    val batch = emb.filter(col("vec_id") >= 100 && col("vec_id") < 120)
+    intercept[Exception](
+      VectorIngest.appendBatch(batch, col("embedding"), col("vec_id"), dir))
+    graft.operators.StagedSwap.writeSidecar(fs, meta, saved)
+    VectorIngest.appendBatch(batch, col("embedding"), col("vec_id"), dir)
+    val ids = spark.read.parquet(s"$dir/codes").select("id").as[Long].collect().toSeq
+    assert(ids.size == 120 && ids.distinct.size == 120,
+      s"${ids.size} rows, ${ids.distinct.size} distinct ids")
   }
 
   test("bloom-all-negative batch appends without reading the index's ids") {
