@@ -3,6 +3,8 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.Endpoint
+import graft.partition.KeyRangeSlicer
+import graft.sync.{PartitionedReader, Slices}
 
 /** Source-side discovery: which tables exist, what their primary keys
   * are, and how to read them. Mirrors the reference's metadata queries —
@@ -44,6 +46,17 @@ trait Catalog {
       table: String,
       pageSize: Long,
       maxSlices: Int): DataFrame = read(spark, table)
+
+  /** A read of `table` cut into `numSlices` slices of its numeric
+    * `lead` PK column, with the slices it was cut on, so delta repair
+    * diffs exactly the read's slices. None when the source cannot push
+    * the planning (the default: the caller plans from the data) or the
+    * table does not slice. */
+  def readSliced(
+      spark: SparkSession,
+      table: String,
+      lead: String,
+      numSlices: Int): Option[(DataFrame, Slices)] = None
 }
 
 /** File-directory catalog: each `t.<ext>` under `dir` is a table, in
@@ -150,7 +163,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     * shutdown `KILL QUERY` finds it by its tag. */
   override def rowCount(spark: SparkSession, table: String): Long =
     endpoint.withConnection(
-      graft.sync.PartitionedReader.queryRows(_, s"SELECT COUNT(*) FROM $table")) match {
+      PartitionedReader.queryRows(_, s"SELECT COUNT(*) FROM $table")) match {
       case Seq(Seq(n: Number)) => n.longValue()
       case other => throw new IllegalStateException(s"unexpected count: $other")
     }
@@ -163,7 +176,21 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
       table: String,
       pageSize: Long,
       maxSlices: Int): DataFrame =
-    graft.sync.PartitionedReader.read(spark, endpoint, table, pageSize, maxSlices)
+    PartitionedReader.scan(spark, endpoint, table,
+      PartitionedReader.plan(endpoint, table, primaryKey(table).headOption)(
+        KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
+
+  /** The pushed slice plan (cuts from source-side histograms, reused as
+    * the read's predicates) for a FIXED `numSlices`, skipped for tables
+    * under 2·numSlices rows: too few rows per slice to gain anything. */
+  override def readSliced(
+      spark: SparkSession,
+      table: String,
+      lead: String,
+      numSlices: Int): Option[(DataFrame, Slices)] =
+    PartitionedReader.plan(endpoint, table, Some(lead))(
+      rows => if (rows < 2L * numSlices) 1 else numSlices)
+      .map(s => PartitionedReader.scan(spark, endpoint, table, Some(s)) -> s)
 
   /** Discovered views minus the exclusion list — the reference's S13
     * object-migration surface (readme.md:10,81 advertises view

@@ -15,7 +15,7 @@ import graft.sync.{Compare, JdbcSink, Sink, Sync}
   *                                          its SELECTs (custom-SQL mode)
   *   graft sync --delta --config cfg.yml    checksum-diff repair sync
   *   graft compare      --config cfg.yml    row-count compare
-  *   graft compare --content --config ...   one-pass checksum compare
+  *   graft compare --content --config ...   row-exact checksum compare
   *   graft create-table [--views] --config   DDL-only; --views also
   *                                          replays view DDL after the
   *                                          tables (S13's view leg)
@@ -283,7 +283,7 @@ object Main {
         val sink = sinkFor(cfg.dest, cfg)
         val tables = catalog.listTables(cfg.exclude)
         // --content upgrades the reference's count-only check to the
-        // one-pass checksum content compare
+        // row-exact checksum content compare
         val rows =
           if (args.contains("--content"))
             Compare.contentCompare(spark, catalog, sink, tables)

@@ -1,7 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.NumericType
 
 import graft.catalog.Catalog
@@ -12,20 +11,22 @@ import graft.partition.KeyRangeSlicer
   * `syncIncremental` (Sync.scala) only catches APPENDS: a row updated
   * in place behind the watermark is silently missed, and the
   * reference's answer is a full truncate-reload (cmd/root.go:280-288).
-  * This operator closes that gap with the machinery already proven by
-  * `Compare.contentChecksum` (q38): slice the key space, compare one
-  * order-independent per-column checksum per slice across systems, and
-  * re-copy ONLY the slices whose checksums disagree.
+  * This operator closes that gap with the row-exact [[SliceDiff]] that
+  * `compare --content` also runs: slice the key space, compare each
+  * slice's row count and row-hash sum across systems, and re-copy ONLY
+  * the slices that disagree.
   *
-  * Scale shape at 100 TB: one aggregation scan per side (k slice rows
-  * cross the wire, not data), then the repair writes touch only the
-  * changed ranges — a JDBC target DELETEs each range server-side over
-  * its PK index and batch-appends the replacement. Against a mostly-
-  * unchanged replica this beats truncate-reload by the write path (the
-  * dominant cost) times the unchanged fraction; adjacent changed
-  * slices merge into one repair range so hot update regions don't
-  * fragment into per-slice statements. True row-level CDC (binlog
-  * tailing) remains out of scope, as in the reference.
+  * Cost shape: both tables are read into Spark once for the diff (every
+  * row crosses the JDBC wire; only the per-slice sums reach the
+  * driver), then the repair writes touch only the changed ranges — a
+  * JDBC target DELETEs each range server-side over its PK index and
+  * batch-appends the replacement. Against a mostly-unchanged replica
+  * this beats truncate-reload by the write path times the unchanged
+  * fraction; adjacent changed slices merge into one repair range so hot
+  * update regions don't fragment into per-slice statements. A table
+  * with no PK is one slice: reloaded in full when it differs, left
+  * alone when it does not. True row-level CDC (binlog tailing) remains
+  * out of scope, as in the reference.
   */
 object DeltaSync {
 
@@ -37,32 +38,18 @@ object DeltaSync {
       ok: Boolean,
       error: Option[String] = None)
 
-  /** The slice key's column while checksumming: computed once per row,
-    * not once per cut. */
-  private val KeyCol = "__sk"
-
   /** A full reload replaces a delta repair once more than this share of
     * the slices changed. */
   private val MaxChangedFraction = 0.5
 
-  /** Per-slice row count + per-column content checksums — the grouped
-    * form of [[Compare.contentChecksum]]: one aggregation pass, k rows
-    * out. */
-  private def rangeChecksums(df: DataFrame, slices: Slices, cols: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("n") +: Compare.checksumExprs(df, cols)
-    df.withColumn(KeyCol, slices.key.column)
-      .groupBy(slices.id(col(KeyCol)).as("slice"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Compare per-slice checksums between source and target and repair
-    * only the slices that disagree. Numeric lead PKs slice on the key
-    * itself; string/composite PKs slice on the 60-bit [[HashKey]] md5
-    * space (fixed uniform cuts — no planning scan; MySQL repairs stay
-    * server-side via the dialect md5). Falls back to a full
-    * truncate-reload only when the target is verifiably missing, when
-    * the table has no PK at all, or when the target is so diverged
-    * that a full reload is cheaper ([[MaxChangedFraction]]).
+  /** Diff source and target per slice and repair only the slices that
+    * disagree. Numeric lead PKs slice on the key itself; string/composite
+    * PKs slice on the 60-bit [[HashKey]] md5 space (fixed uniform cuts —
+    * no planning scan; MySQL repairs stay server-side via the dialect
+    * md5); a table with no PK is one whole-table slice. Falls back to a
+    * full truncate-reload only when the target is verifiably missing, or
+    * so diverged that a full reload is cheaper ([[MaxChangedFraction]];
+    * a differing one-slice table always is).
     */
   def syncDelta(
       spark: SparkSession,
@@ -73,17 +60,11 @@ object DeltaSync {
       pageSize: Long = 100000L): DeltaReport = {
     try Jobs.tagged(spark, s"graft-delta-$table") {
       val pk = catalog.primaryKey(table)
-      // ONE planning pass: JDBC sources derive cuts from pushed-down
-      // histograms (the source DB computes them over its PK index) and
-      // REUSE them as the read predicates, so delta planning costs the
-      // same source-side aggregates as a plain partitioned read — no
-      // Spark-side pre-scan, no second histogram pass
-      val jdbcPlan = catalog match {
-        case j: graft.catalog.JdbcCatalog =>
-          PartitionedReader.readFixed(spark, j.endpoint, table, pk.headOption, numSlices)
-        case _ => None
-      }
-      val src = jdbcPlan.fold(Normalize.lowercaseColumns(
+      // ONE planning pass where the catalog can push it (JDBC: cuts from
+      // source-side histograms over the PK index, REUSED as the read
+      // predicates): no Spark-side pre-scan, no second histogram pass
+      val sliced = pk.headOption.flatMap(catalog.readSliced(spark, table, _, numSlices))
+      val src = sliced.fold(Normalize.lowercaseColumns(
         catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)))(_._1)
       val pks = pk.map(_.toLowerCase).filter(src.columns.contains)
 
@@ -94,41 +75,34 @@ object DeltaSync {
       }
 
       if (!sink.exists(spark, table)) fullLoad()
-      else if (pks.isEmpty) fullLoad() // nothing sliceable: behave like syncTable
       else {
-        val dst = Normalize.lowercaseColumns(sink.readBack(spark, table))
-        val cols = src.columns.sorted.toIndexedSeq
         val slices =
-          if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
+          if (pks.isEmpty) None // nothing sliceable: one whole-table slice
+          else if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
             // numeric lead PK: slice on the key itself (the range DELETE
-            // rides the PK index on any dialect). Checksum slices = the
-            // read slices when the pushed plan produced them (1:1
-            // alignment — one planning pass covers both); file sources
-            // estimate quantiles from the data
-            jdbcPlan.fold(new Slices(SliceKey.Lead(pks.head),
-              KeyRangeSlicer.quantileCuts(src, pks.head, numSlices)))(_._2)
+            // rides the PK index on any dialect). Diff slices = the read
+            // slices when the pushed plan produced them (1:1 alignment —
+            // one planning pass covers both); other sources estimate
+            // quantiles from the data
+            Some(sliced.fold(new Slices(SliceKey.Lead(pks.head),
+              KeyRangeSlicer.quantileCuts(src, pks.head, numSlices)))(_._2))
           else
             // string/composite PK: slice the 60-bit md5 key space of the
             // full PK tuple — uniform by construction, so the fixed cuts
             // balance with NO data scan
-            new Slices(SliceKey.Hashed(pks), HashKey.cuts(numSlices))
-        val k = slices.count
-        def bySlice(d: DataFrame) =
-          rangeChecksums(d, slices, cols).collect()
-            .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
-        val s = bySlice(src)
-        val d = bySlice(dst)
-        val changed = (0 until k).filter(i => s.get(i) != d.get(i))
-        if (changed.isEmpty)
-          DeltaReport(table, k, 0, 0L, ok = true)
-        else if (changed.size.toDouble / k > MaxChangedFraction) fullLoad()
-        else {
-          slices.ranges(changed).foreach { range =>
-            sink.replaceRange(spark, src.filter(range.column), table, range)
-          }
-          val copied = changed.flatMap(i => s.get(i))
-            .map(_.head.asInstanceOf[Long]).sum
-          DeltaReport(table, k, changed.size, copied, ok = true)
+            Some(new Slices(SliceKey.Hashed(pks), HashKey.cuts(numSlices)))
+        val k = slices.fold(1)(_.count)
+        val diff = SliceDiff(src, Normalize.lowercaseColumns(sink.readBack(spark, table)), slices)
+        val changed = diff.changed
+        slices match {
+          case _ if changed.isEmpty => DeltaReport(table, k, 0, 0L, ok = true)
+          case Some(s) if changed.size.toDouble / k <= MaxChangedFraction =>
+            s.ranges(changed).foreach { range =>
+              sink.replaceRange(spark, src.filter(range.column), table, range)
+            }
+            val copied = changed.flatMap(diff.src.get).map(_._1).sum
+            DeltaReport(table, k, changed.size, copied, ok = true)
+          case _ => fullLoad()
         }
       }
     } catch {

@@ -2,7 +2,6 @@ package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.catalog.JdbcCatalog
 import graft.config.Endpoint
 import graft.partition.KeyRangeSlicer
 
@@ -25,8 +24,9 @@ import graft.partition.KeyRangeSlicer
   *      slices. SQL uses only FLOOR/arithmetic/GROUP BY — portable
   *      across MySQL-wire targets and Derby (the test sink).
   *
-  * Scale behavior: slice count = ceil(rows / pageSize) capped at
-  * [[MaxSlices]], which doubles as the connection ceiling per table.
+  * `JdbcCatalog` picks the slice count: for the sync read,
+  * ceil(rows / pageSize) capped at [[MaxSlices]], which doubles as the
+  * connection ceiling per table; for delta repair, a fixed count.
   */
 object PartitionedReader {
 
@@ -34,37 +34,12 @@ object PartitionedReader {
     * maxOpen=60 pool (cmd/app.go:53). */
   val MaxSlices = 60
 
-  def read(
-      spark: SparkSession,
-      endpoint: Endpoint,
-      table: String,
-      pageSize: Long = 100000L,
-      maxSlices: Int = MaxSlices): DataFrame =
-    // no PK = no split key: one full scan (reference S6)
-    scan(spark, endpoint, table,
-      plan(endpoint, table, new JdbcCatalog(endpoint).primaryKey(table).headOption)(
-        KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
-
-  /** [[DeltaSync]]'s read: a FIXED `numSlices`, skipped for tables under
-    * 2·numSlices rows (too few rows per slice to gain anything). The
-    * slices come back with the read, so the caller checksums exactly
-    * the read's slices instead of paying a second planning pass. None
-    * when the table does not slice. */
-  def readFixed(
-      spark: SparkSession,
-      endpoint: Endpoint,
-      table: String,
-      lead: Option[String],
-      numSlices: Int): Option[(DataFrame, Slices)] =
-    plan(endpoint, table, lead)(rows => if (rows < 2L * numSlices) 1 else numSlices)
-      .map(s => scan(spark, endpoint, table, Some(s)) -> s)
-
   /** The slice planner: one `COUNT(*), MIN, MAX` round trip, then
     * adaptive histogram cuts for `slices(rowCount)` slices, all on one
-    * planning connection. None when there is no lead key, the key is
-    * non-numeric, the table is empty or spans a single key, or one
-    * slice suffices. */
-  private def plan(endpoint: Endpoint, table: String, lead: Option[String])(
+    * planning connection. None when there is no lead key (no PK: one
+    * full scan, reference S6), the key is non-numeric, the table is
+    * empty or spans a single key, or one slice suffices. */
+  private[graft] def plan(endpoint: Endpoint, table: String, lead: Option[String])(
       slices: Long => Int): Option[Slices] =
     lead.flatMap { lead =>
       endpoint.withConnection { conn =>
@@ -83,7 +58,7 @@ object PartitionedReader {
     }
 
   /** One JDBC read: a task per slice, else one full scan. */
-  private def scan(
+  private[graft] def scan(
       spark: SparkSession,
       endpoint: Endpoint,
       table: String,

@@ -425,8 +425,9 @@ object Sync {
 }
 
 /** compareDb (cmd/compare.go): per-table source/target row-count
-  * equality with existence flag; strengthened by an optional content
-  * compare (symmetric exceptAll) the reference cannot do.
+  * equality with existence flag; strengthened by the row-exact checksum
+  * content compare and a symmetric-exceptAll content equality, neither
+  * of which the reference can do.
   */
 object Compare {
   final case class CompareRow(
@@ -530,71 +531,43 @@ object Compare {
       }
     }
 
-  /** Order-independent per-column content checksum: sum of a 60-bit
-    * md5 prefix of each column's string form, accumulated as
-    * DECIMAL(38,0) so the sum never overflows at any row count, then
-    * rendered as a STRING — a 38-digit integer is exact as text in any
-    * engine, whereas DECIMAL/DOUBLE renderings differ. One aggregation
-    * pass, bytes per column cross the wire — the cheap way to compare a
-    * 100 TB table's content across systems when two exceptAll scans are
-    * too expensive, and reproducible by any engine with md5 (the DuckDB
-    * oracle runs the same formula — query q38).
-    *
-    * Float/double columns are rendered via a FIXED-SCALE decimal cast
-    * before hashing: raw floating-point stringification is
-    * engine-shaped (shortest-roundtrip vs fixed digits, float-widened
-    * -vs-double storage on the JDBC side), so equal values would
-    * otherwise hash differently across systems. DECIMAL(28,10) pins
-    * one canonical digit string per value on every engine. */
-  /** The per-column checksum aggregate expressions behind
-    * [[contentChecksum]] — shared with the grouped per-key-range form
-    * in [[DeltaSync]]. */
-  private[sync] def checksumExprs(
-      df: DataFrame, cols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    val types = df.schema.map(f => f.name -> f.dataType).toMap
-    cols.map { c =>
-      val canonical = types.get(c) match {
-        case Some(FloatType) | Some(DoubleType) =>
-          col(c).cast("decimal(28,10)").cast("string")
-        case _ => col(c).cast("string")
-      }
-      sum(conv(substring(md5(canonical), 1, 15), 16, 10)
-        .cast("decimal(38,0)")).cast("decimal(38,0)")
-        .cast("string").as(s"ck_$c")
-    }
-  }
-
+  /** Order-independent per-column content checksum (query q38, whose
+    * DuckDB oracle runs the same formula): per column, the sum of a
+    * 60-bit md5 prefix of each value's string form, accumulated as
+    * DECIMAL(38,0) and rendered as a STRING, since a 38-digit integer is
+    * exact as text in any engine. Values hash their
+    * [[SliceDiff.canonical]] string. Per-column sums cannot see a value
+    * that moved between rows: compare and repair use the row-exact
+    * [[SliceDiff]] instead. */
   def contentChecksum(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val sums = checksumExprs(df, cols)
+    import org.apache.spark.sql.functions._
+    val sums = cols.map(c => sum(conv(substring(md5(SliceDiff.canonical(df, c)), 1, 15), 16, 10)
+      .cast("decimal(38,0)")).cast("decimal(38,0)").cast("string").as(s"ck_$c"))
     df.agg(sums.head, sums.tail: _*)
   }
 
-  /** Per-table CONTENT compare — the mode the reference cannot do: one
-    * order-independent checksum pass per side (see [[contentChecksum]])
-    * plus the count check. One aggregation scan each side regardless of
-    * table width; at 100 TB this is the affordable cross-system
-    * verification (two exceptAll scans would shuffle the whole table
-    * twice). A dest read/checksum failure reports NO/NO like the
-    * reference's error conflation — but only after a real existence
-    * probe. */
+  /** Per-table CONTENT compare — the mode the reference cannot do: the
+    * count check, then the row-exact [[SliceDiff]] of the whole table as
+    * one slice. Tables run in parallel, as many as the session has cores
+    * (at most the [[PartitionedReader.MaxSlices]] connection ceiling);
+    * rows come back in `tables` order. A destination that cannot be read
+    * or lacks a source column reports NO; one with no row count (missing)
+    * reports -1/NO/NO. */
   def contentCompare(
       spark: SparkSession,
       src: Catalog,
       sink: Sink,
       tables: Seq[String]): Seq[CompareRow] =
-    tables.map { t =>
+    Sync.parMap(tables,
+      math.min(spark.sparkContext.defaultParallelism, PartitionedReader.MaxSlices)) { t =>
       val s = Normalize.lowercaseColumns(src.read(spark, t))
-      val cols = s.columns.sorted.toIndexedSeq
       val srcCnt = src.rowCount(spark, t)
       val destCnt = sink.rowCount(spark, t)
       val ok =
         destCnt.contains(srcCnt) && {
-          try {
-            val d = Normalize.lowercaseColumns(sink.readBack(spark, t))
-            contentChecksum(s, cols).head() == contentChecksum(d, cols).head()
-          } catch { case _: Exception => false }
+          try SliceDiff(s, Normalize.lowercaseColumns(sink.readBack(spark, t)), None)
+            .changed.isEmpty
+          catch { case _: Exception => false }
         }
       compareRow(t, srcCnt, destCnt, ok)
     }

@@ -87,7 +87,7 @@ class DeltaSyncSpec extends SparkSpec {
     val idle = DeltaSync.syncDelta(spark, srcCat, sink, "plan_t", numSlices = 12)
     assert(idle.ok && idle.changedSlices == 0, idle.toString)
     // the sync read with ceil(300/25) = 12 slices plans the same cuts
-    val read = PartitionedReader.read(spark, Endpoint(srcUrl), "plan_t", pageSize = 25)
+    val read = srcCat.readPartitioned(spark, "plan_t", 25, PartitionedReader.MaxSlices)
     assert(idle.slices == read.rdd.getNumPartitions)
     assert(idle.slices == 12, idle.toString) // 11 pushed cuts
   }
@@ -154,6 +154,37 @@ class DeltaSyncSpec extends SparkSpec {
       s"one dirty hash slice expected: $repair")
     assert(Compare.contentEqual(
       srcCat.read(spark, "cdlt"), sink.readBack(spark, "cdlt")))
+  }
+
+  test("a value swapped between two rows of one slice is repaired") {
+    // 2,000 rows cut 64 ways: ids 1 and 2 share a slice, so per-column
+    // sums could not see the swap
+    Seq(srcCat, dstCat).foreach(c => DdlReplay.replay(c, Seq(
+      "CREATE TABLE swap_t (id BIGINT NOT NULL PRIMARY KEY, p DOUBLE)")))
+    JdbcSink(Endpoint(srcUrl)).append(
+      (1L to 2000L).map(i => (i, i * 10.0)).toDF("id", "p"), "swap_t")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "swap_t").ok)
+    dstCat.execute("UPDATE swap_t SET p = 20.0 WHERE id = 1")
+    dstCat.execute("UPDATE swap_t SET p = 10.0 WHERE id = 2")
+    val repair = DeltaSync.syncDelta(spark, srcCat, sink, "swap_t")
+    assert(repair.ok && repair.slices == 64 && repair.changedSlices == 1, repair.toString)
+    assert(Compare.contentEqual(
+      srcCat.read(spark, "swap_t"), sink.readBack(spark, "swap_t")))
+  }
+
+  test("a table without a PK copies nothing when equal and reloads when a row changed") {
+    Seq(srcCat, dstCat).foreach(c => DdlReplay.replay(c, Seq(
+      "CREATE TABLE nopk_d (k INT, v VARCHAR(16))")))
+    JdbcSink(Endpoint(srcUrl)).append(
+      (1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), "nopk_d")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "nopk_d").ok)
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "nopk_d") ==
+      DeltaSync.DeltaReport("nopk_d", 1, 0, 0L, ok = true))
+    srcCat.execute("UPDATE nopk_d SET v = 'edited' WHERE k = 40")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "nopk_d") ==
+      DeltaSync.DeltaReport("nopk_d", 1, 1, 100L, ok = true))
+    assert(Compare.contentEqual(
+      srcCat.read(spark, "nopk_d"), sink.readBack(spark, "nopk_d")))
   }
 
   test("repair DELETE rendering is pinned for both dialect branches") {

@@ -23,7 +23,7 @@ class PartitionedReaderSpec extends SparkSpec {
     JdbcSink(endpoint, batchRowSize = 500, numPartitions = 2)
       .overwrite(src, "orders_t")
 
-    val got = PartitionedReader.read(spark, endpoint, "orders_t", pageSize = 300)
+    val got = target.readPartitioned(spark, "orders_t", 300, PartitionedReader.MaxSlices)
     // ceil(1500/300) = 5 slices = 5 partitions
     assert(got.rdd.getNumPartitions == 5)
     assert(got.count() == 1500)
@@ -49,7 +49,7 @@ class PartitionedReaderSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("v",
           org.apache.spark.sql.types.IntegerType, nullable = true))))
     JdbcSink(endpoint).overwrite(df, "skew_t")
-    val got = PartitionedReader.read(spark, endpoint, "skew_t", pageSize = 250)
+    val got = target.readPartitioned(spark, "skew_t", 250, PartitionedReader.MaxSlices)
     assert(got.count() == 1000)
     assert(got.rdd.getNumPartitions == 4)
     val sizes = got.rdd.mapPartitions(it => Iterator(it.size)).collect()
@@ -65,7 +65,7 @@ class PartitionedReaderSpec extends SparkSpec {
     val df = spark.range(100).select(
       col("id").cast("int").as("a"), col("id").cast("string").as("b"))
     JdbcSink(endpoint).overwrite(df, "nopk_t")
-    val got = PartitionedReader.read(spark, endpoint, "nopk_t", pageSize = 10)
+    val got = target.readPartitioned(spark, "nopk_t", 10, PartitionedReader.MaxSlices)
     assert(got.count() == 100)
     assert(got.rdd.getNumPartitions == 1)
   }
@@ -77,7 +77,7 @@ class PartitionedReaderSpec extends SparkSpec {
     val df = spark.range(50).select(
       concat(lit("k"), col("id")).as("code"), col("id").cast("int").as("v"))
     JdbcSink(endpoint).overwrite(df, "strpk_t")
-    val got = PartitionedReader.read(spark, endpoint, "strpk_t", pageSize = 10)
+    val got = target.readPartitioned(spark, "strpk_t", 10, PartitionedReader.MaxSlices)
     assert(got.count() == 50)
     assert(got.rdd.getNumPartitions == 1)
   }
@@ -89,7 +89,7 @@ class PartitionedReaderSpec extends SparkSpec {
     val df = spark.range(5).select(
       col("id").cast("int").as("k"), col("id").cast("string").as("v"))
     JdbcSink(endpoint).overwrite(df, "tiny_t")
-    val got = PartitionedReader.read(spark, endpoint, "tiny_t", pageSize = 100)
+    val got = target.readPartitioned(spark, "tiny_t", 100, PartitionedReader.MaxSlices)
     assert(got.count() == 5 && got.rdd.getNumPartitions == 1)
   }
 }
