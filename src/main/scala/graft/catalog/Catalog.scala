@@ -47,16 +47,18 @@ trait Catalog {
       pageSize: Long,
       maxSlices: Int): DataFrame = read(spark, table)
 
-  /** A read of `table` cut into `numSlices` slices of its numeric
-    * `lead` PK column, with the slices it was cut on, so delta repair
-    * diffs exactly the read's slices. None when the source cannot push
-    * the planning (the default: the caller plans from the data) or the
-    * table does not slice. */
+  /** `numSlices` slices of `table`'s numeric `lead` PK column, with a
+    * read of the table whose partitions are runs of those slices, as
+    * many as [[readPartitioned]] with `pageSize` would cut: delta repair
+    * diffs finely and reads at the sync's parallelism. None when the
+    * source cannot push the planning (the default: the caller plans
+    * from the data) or the table does not slice. */
   def readSliced(
       spark: SparkSession,
       table: String,
       lead: String,
-      numSlices: Int): Option[(DataFrame, Slices)] = None
+      numSlices: Int,
+      pageSize: Long): Option[(DataFrame, Slices)] = None
 }
 
 /** File-directory catalog: each `t.<ext>` under `dir` is a table, in
@@ -180,17 +182,23 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
       PartitionedReader.plan(endpoint, table, primaryKey(table).headOption)(
         KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
 
-  /** The pushed slice plan (cuts from source-side histograms, reused as
-    * the read's predicates) for a FIXED `numSlices`, skipped for tables
-    * under 2·numSlices rows: too few rows per slice to gain anything. */
+  /** The pushed slice plan (cuts from source-side histograms) for a
+    * FIXED `numSlices`, skipped for tables under 2·numSlices rows: too
+    * few rows per slice to gain anything. The read's predicates are the
+    * plan coarsened to the sync read's slice count for the COUNT the
+    * plan fetched. */
   override def readSliced(
       spark: SparkSession,
       table: String,
       lead: String,
-      numSlices: Int): Option[(DataFrame, Slices)] =
-    PartitionedReader.plan(endpoint, table, Some(lead))(
-      rows => if (rows < 2L * numSlices) 1 else numSlices)
-      .map(s => PartitionedReader.scan(spark, endpoint, table, Some(s)) -> s)
+      numSlices: Int,
+      pageSize: Long): Option[(DataFrame, Slices)] = {
+    var reads = 1
+    PartitionedReader.plan(endpoint, table, Some(lead)) { rows =>
+      reads = KeyRangeSlicer.numSlices(rows, pageSize, PartitionedReader.MaxSlices)
+      if (rows < 2L * numSlices) 1 else numSlices
+    }.map(s => PartitionedReader.scan(spark, endpoint, table, Some(s.coarsen(reads))) -> s)
+  }
 
   /** Discovered views minus the exclusion list — the reference's S13
     * object-migration surface (readme.md:10,81 advertises view

@@ -18,15 +18,17 @@ import graft.partition.KeyRangeSlicer
   *
   * Cost shape: both tables are read into Spark once for the diff (every
   * row crosses the JDBC wire; only the per-slice sums reach the
-  * driver), then the repair writes touch only the changed ranges — a
-  * JDBC target DELETEs each range server-side over its PK index and
-  * batch-appends the replacement. Against a mostly-unchanged replica
-  * this beats truncate-reload by the write path times the unchanged
-  * fraction; adjacent changed slices merge into one repair range so hot
-  * update regions don't fragment into per-slice statements. A table
-  * with no PK is one slice: reloaded in full when it differs, left
-  * alone when it does not. True row-level CDC (binlog tailing) remains
-  * out of scope, as in the reference.
+  * driver). The source is read at the sync's own parallelism (one task
+  * per page of rows, each a run of adjacent diff slices), however fine
+  * the diff. The repair then touches only the changed ranges, all of a
+  * table's at once: a JDBC target deletes them in ONE server-side
+  * DELETE and takes ONE batch append of the replacement rows, so the
+  * statements and Spark jobs of a repair do not grow with the number of
+  * ranges. Against a mostly-unchanged replica this beats
+  * truncate-reload by the write path times the unchanged fraction. A
+  * table with no PK is one slice: reloaded in full when it differs,
+  * left alone when it does not. True row-level CDC (binlog tailing)
+  * remains out of scope, as in the reference.
   */
 object DeltaSync {
 
@@ -61,9 +63,10 @@ object DeltaSync {
     try Jobs.tagged(spark, s"graft-delta-$table") {
       val pk = catalog.primaryKey(table)
       // ONE planning pass where the catalog can push it (JDBC: cuts from
-      // source-side histograms over the PK index, REUSED as the read
-      // predicates): no Spark-side pre-scan, no second histogram pass
-      val sliced = pk.headOption.flatMap(catalog.readSliced(spark, table, _, numSlices))
+      // source-side histograms over the PK index; runs of them, sized by
+      // `pageSize`, are the read predicates): no Spark-side pre-scan, no
+      // second histogram pass
+      val sliced = pk.headOption.flatMap(catalog.readSliced(spark, table, _, numSlices, pageSize))
       val src = sliced.fold(Normalize.lowercaseColumns(
         catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)))(_._1)
       val pks = pk.map(_.toLowerCase).filter(src.columns.contains)
@@ -80,10 +83,10 @@ object DeltaSync {
           if (pks.isEmpty) None // nothing sliceable: one whole-table slice
           else if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
             // numeric lead PK: slice on the key itself (the range DELETE
-            // rides the PK index on any dialect). Diff slices = the read
-            // slices when the pushed plan produced them (1:1 alignment —
-            // one planning pass covers both); other sources estimate
-            // quantiles from the data
+            // rides the PK index on any dialect). Diff slices = the pushed
+            // plan's slices when it produced them (the read's partitions
+            // are runs of them — one planning pass covers both); other
+            // sources estimate quantiles from the data
             Some(sliced.fold(new Slices(SliceKey.Lead(pks.head),
               KeyRangeSlicer.quantileCuts(src, pks.head, numSlices)))(_._2))
           else
@@ -97,9 +100,8 @@ object DeltaSync {
         slices match {
           case _ if changed.isEmpty => DeltaReport(table, k, 0, 0L, ok = true)
           case Some(s) if changed.size.toDouble / k <= MaxChangedFraction =>
-            s.ranges(changed).foreach { range =>
-              sink.replaceRange(spark, src.filter(range.column), table, range)
-            }
+            val ranges = s.ranges(changed)
+            sink.replaceRange(spark, src.filter(Slices.column(ranges)), table, ranges)
             val copied = changed.flatMap(diff.src.get).map(_._1).sum
             DeltaReport(table, k, changed.size, copied, ok = true)
           case _ => fullLoad()

@@ -26,7 +26,9 @@ import graft.partition.KeyRangeSlicer
   *
   * `JdbcCatalog` picks the slice count: for the sync read,
   * ceil(rows / pageSize) capped at [[MaxSlices]], which doubles as the
-  * connection ceiling per table; for delta repair, a fixed count.
+  * connection ceiling per table. Delta repair plans a fixed count of
+  * diff slices and reads at the sync's count: each read task scans a
+  * run of adjacent diff slices ([[Slices.coarsen]]).
   */
 object PartitionedReader {
 

@@ -100,6 +100,12 @@ final class Slices(val key: SliceKey, rawCuts: Seq[Long]) {
   def id(k: Column): Column =
     cuts.foldLeft(lit(0))((acc, c) => acc + when(k >= lit(c), 1).otherwise(0))
 
+  /** At most `n` slices, each a run of adjacent slices of this one (its
+    * cuts are a subset of these cuts): a coarser read that still
+    * covers every slice whole. */
+  def coarsen(n: Int): Slices =
+    if (count <= n) this else new Slices(key, (1 until n).map(j => cuts(j * count / n - 1)))
+
   /** Changed slice ids merged into maximal ranges of adjacent slices. */
   def ranges(changed: Seq[Int]): Seq[Slices.Range] =
     changed.distinct.sorted.foldLeft(List.empty[(Int, Int)]) {
@@ -134,4 +140,7 @@ object Slices {
       }
     }
   }
+
+  /** The rows of any of `ranges`, as one Column. */
+  def column(ranges: Seq[Range]): Column = ranges.map(_.column).reduce(_ || _)
 }

@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.catalog.{Catalog, FileCatalog, JdbcCatalog}
 import graft.config.{Endpoint, SyncConfig}
@@ -47,11 +47,12 @@ sealed trait Sink {
   def rowCount(spark: SparkSession, table: String): Option[Long] =
     try Some(readBack(spark, table).count())
     catch { case _: Exception => None }
-  /** Replace one key range of the target with `df` (already filtered
-    * to that range) — the repair primitive of [[DeltaSync]]. JDBC sinks
-    * DELETE the range server-side where the dialect can compute the
-    * key, then batch-append; file sinks rewrite. */
-  def replaceRange(spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit
+  /** Replace the target's rows in any of `ranges` (one table's changed
+    * ranges, all at once) with `df`, already filtered to them — the
+    * repair primitive of [[DeltaSync]]. JDBC sinks delete every range in
+    * one server-side DELETE where the dialect can compute the key, then
+    * run one batch append; file sinks rewrite once. */
+  def replaceRange(spark: SparkSession, df: DataFrame, table: String, ranges: Seq[Slices.Range]): Unit
 }
 
 /** The delta-repair statements as PURE renderers, split out of the
@@ -64,11 +65,15 @@ sealed trait Sink {
   * H2/PostgreSQL/Derby) are pinned there as strings. */
 private[sync] object DeltaRepairSql {
 
-  /** ONE server-side DELETE of the range — the repair range never
-    * leaves the server. None when the dialect cannot compute the key:
-    * the caller takes the scratch-table branch below. */
-  def rangeDelete(url: String, table: String, range: Slices.Range): Option[String] =
-    range.sql(url).map(p => s"DELETE FROM $table WHERE $p")
+  /** ONE server-side DELETE of every range (at least one) — the repair
+    * ranges never leave the server. Several ranges are parenthesised
+    * and OR-joined. None when the dialect cannot compute the key: the
+    * caller takes the scratch-table branch below. */
+  def rangeDelete(url: String, table: String, ranges: Slices.Range*): Option[String] =
+    Some(ranges.flatMap(_.sql(url))).filter(_.size == ranges.size).map {
+      case Seq(p) => s"DELETE FROM $table WHERE $p"
+      case ps     => s"DELETE FROM $table WHERE " + ps.map(p => s"($p)").mkString(" OR ")
+    }
 
   /** Generic branch step 1: clone the PK columns' exact target types
     * (a Spark-CREATED scratch would map strings to CLOB, which the
@@ -122,8 +127,8 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     * A table format with row-level ops (Iceberg/Delta) would replace
     * just the affected files; this sink is the fixture/test path. */
   override def replaceRange(
-      spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit = {
-    val keep = readBack(spark, table).filter(!range.column)
+      spark: SparkSession, df: DataFrame, table: String, ranges: Seq[Slices.Range]): Unit = {
+    val keep = readBack(spark, table).filter(!coalesce(Slices.column(ranges), lit(false)))
     val merged = graft.operators.Barrier(keep.unionByName(df))
     overwrite(merged, table)
   }
@@ -218,25 +223,25 @@ final case class JdbcSink(
     try Some(new JdbcCatalog(endpoint).rowCount(spark, table))
     catch { case _: Exception => None }
   /** Range repair. Where the dialect computes the key (a numeric PK
-    * anywhere; the md5 [[HashKey]] on MySQL-wire) the DELETE is one
-    * server-side statement per merged range, riding the PK index for a
-    * numeric key. Otherwise (Derby in tests) the target is read back and
-    * filtered to the dirty range in Spark; the doomed KEYS then land in
-    * a scratch table through the executor-side JDBC writer (never
-    * visiting the driver) and ONE server-side keyed DELETE joins them
-    * against the target before the scratch drops. That read-back is a
-    * full target scan per merged range — the price of a dialect with no
-    * server-side md5. The replacement rows are then batch-appended. */
+    * anywhere; the md5 [[HashKey]] on MySQL-wire) every range goes in
+    * ONE server-side DELETE, its ranges OR-joined. Otherwise (Derby in
+    * tests) the target is read back and filtered to the dirty ranges in
+    * Spark; the doomed KEYS then land in a scratch table through the
+    * executor-side JDBC writer (never visiting the driver) and ONE
+    * server-side keyed DELETE joins them against the target before the
+    * scratch drops. That read-back is one full target scan per repaired
+    * table — the price of a dialect with no server-side md5. The
+    * replacement rows are then batch-appended in one job. */
   override def replaceRange(
-      spark: SparkSession, df: DataFrame, table: String, range: Slices.Range): Unit = {
+      spark: SparkSession, df: DataFrame, table: String, ranges: Seq[Slices.Range]): Unit = {
     endpoint.withConnection { conn =>
       val st = conn.createStatement()
-      try DeltaRepairSql.rangeDelete(endpoint.url, table, range) match {
+      try DeltaRepairSql.rangeDelete(endpoint.url, table, ranges: _*) match {
         case Some(delete) => st.executeUpdate(delete)
         case None =>
-          val pkCols = range.key.pkCols
+          val pkCols = ranges.head.key.pkCols
           val doomed = readBack(spark, table)
-            .filter(range.column)
+            .filter(Slices.column(ranges))
             .select(pkCols.map(col): _*)
           val scratch = s"${table}_doomed"
           try st.executeUpdate(s"DROP TABLE $scratch")

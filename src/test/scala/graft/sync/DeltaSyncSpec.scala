@@ -78,7 +78,7 @@ class DeltaSyncSpec extends SparkSpec {
 
   test("numeric-PK delta checksums exactly the pushed read plan's slices") {
     // 300 rows >= 2·numSlices with a sparse tail: the pushed histogram
-    // plan slices the table, and the checksum walk reuses its cuts 1:1
+    // plan slices the table, and the checksum walk diffs exactly its cuts
     DdlReplay.replay(srcCat, Seq("CREATE TABLE plan_t (id BIGINT NOT NULL PRIMARY KEY, v INT)"))
     val keys = (1L to 250L) ++ (1L to 50L).map(k => 100000L + 1000L * k)
     JdbcSink(Endpoint(srcUrl)).append(
@@ -90,6 +90,14 @@ class DeltaSyncSpec extends SparkSpec {
     val read = srcCat.readPartitioned(spark, "plan_t", 25, PartitionedReader.MaxSlices)
     assert(idle.slices == read.rdd.getNumPartitions)
     assert(idle.slices == 12, idle.toString) // 11 pushed cuts
+  }
+
+  test("delta repair diffs its own slice count and reads at the sync's parallelism") {
+    // plan_t: the 300 rows seeded above; ceil(300/100) = 3 read tasks
+    val Some((read, slices)) = srcCat.readSliced(spark, "plan_t", "id", 12, pageSize = 100)
+    assert(slices.count == 12)
+    assert(read.rdd.getNumPartitions == 3)
+    assert(read.count() == 300)
   }
 
   test("a table under 2·numSlices rows repairs through the quantile fallback") {
@@ -187,6 +195,78 @@ class DeltaSyncSpec extends SparkSpec {
       srcCat.read(spark, "nopk_d"), sink.readBack(spark, "nopk_d")))
   }
 
+  /** Fills the source's table `t` (id, v) with 400 rows, row i keyed
+    * `id(i)` (as SQL) with v = `v<i>`, syncs it, and returns one row
+    * number per slice of the 10 slices delta repair diffs `t` on. */
+  private def seedRanged(t: String, key: SliceKey, id: Int => String): Seq[Int] = {
+    srcCat.execute(s"INSERT INTO $t VALUES " +
+      (1 to 400).map(i => s"(${id(i)}, 'v$i')").mkString(", "))
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, t, numSlices = 10).ok)
+    val slices = key match {
+      case SliceKey.Lead(pk) =>
+        PartitionedReader.plan(Endpoint(srcUrl), t, Some(pk))(_ => 10).get
+      case _ => new Slices(key, HashKey.cuts(10))
+    }
+    val rowOf = srcCat.read(spark, t).toDF("id", "v")
+      .select(col("v"), slices.id(key.column)).collect()
+      .map(r => r.getInt(1) -> r.getString(0).stripPrefix("v").toInt).toMap
+    assert(slices.count == 10 && rowOf.size == 10)
+    (0 until 10).map(rowOf)
+  }
+
+  test("a repair's Spark jobs do not grow with its number of ranges") {
+    Seq(
+      ("rng_num", "BIGINT", SliceKey.Lead("id"), (i: Int) => i.toString),
+      ("rng_str", "VARCHAR(16)", SliceKey.Hashed(Seq("id")), (i: Int) => s"'k$i'")
+    ).foreach { case (t, keyDdl, key, id) =>
+      Seq(srcCat, dstCat).foreach(c => DdlReplay.replay(c, Seq(
+        s"CREATE TABLE $t (id $keyDdl NOT NULL PRIMARY KEY, v VARCHAR(16))")))
+      val rowIn = seedRanged(t, key, id)
+      def repair(slices: Int*): Int = {
+        slices.foreach(i => srcCat.execute(s"UPDATE $t SET v = 'edited' WHERE id = ${id(rowIn(i))}"))
+        val (r, jobs) = SparkJobs.inGroup(spark, s"graft-delta-$t")(
+          DeltaSync.syncDelta(spark, srcCat, sink, t, numSlices = 10))
+        assert(r.ok && r.slices == 10 && r.changedSlices == slices.size, r.toString)
+        assert(Compare.contentEqual(srcCat.read(spark, t), sink.readBack(spark, t)), t)
+        jobs
+      }
+      val one = repair(1)
+      val three = repair(3, 5, 7)
+      assert(one == three, s"$t: $one Spark jobs for 1 range, $three for 3")
+    }
+  }
+
+  test("an append that fails after the DELETE is loud, and the next repair heals") {
+    // the destination's v is narrower than the source's: one over-long
+    // value fails the single append after every changed range is gone
+    DdlReplay.replay(srcCat, Seq("CREATE TABLE narrow_t (id BIGINT NOT NULL PRIMARY KEY, v VARCHAR(32))"))
+    DdlReplay.replay(dstCat, Seq("CREATE TABLE narrow_t (id BIGINT NOT NULL PRIMARY KEY, v VARCHAR(8))"))
+    val keyOf = seedRanged("narrow_t", SliceKey.Lead("id"), _.toString)
+    srcCat.execute(s"UPDATE narrow_t SET v = 'edited' WHERE id IN (${keyOf(2)}, ${keyOf(8)})")
+    srcCat.execute(s"UPDATE narrow_t SET v = 'far too long for v' WHERE id = ${keyOf(5)}")
+    val failed = DeltaSync.syncDelta(spark, srcCat, sink, "narrow_t", numSlices = 10)
+    assert(!failed.ok && failed.error.exists(_.nonEmpty), failed.toString)
+    srcCat.execute(s"UPDATE narrow_t SET v = 'short' WHERE id = ${keyOf(5)}")
+    val healed = DeltaSync.syncDelta(spark, srcCat, sink, "narrow_t", numSlices = 10)
+    assert(healed.ok && healed.changedSlices == 3, healed.toString)
+    assert(Compare.contentEqual(
+      srcCat.read(spark, "narrow_t"), sink.readBack(spark, "narrow_t")))
+  }
+
+  test("several repair ranges render as one OR-joined DELETE") {
+    val hash = "(CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', k)), 1, 15), 16, 10) AS UNSIGNED))"
+    val hashed = Seq(
+      Slices.Range(SliceKey.Hashed(Seq("k")), None, Some(5L)),
+      Slices.Range(SliceKey.Hashed(Seq("k")), Some(9L), Some(12L)))
+    assert(DeltaRepairSql.rangeDelete("jdbc:mysql://db:3306/app", "t", hashed: _*) == Some(
+      s"DELETE FROM t WHERE ($hash < 5 OR $hash IS NULL) OR ($hash >= 9 AND $hash < 12)"))
+    assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t", hashed: _*).isEmpty)
+    assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t",
+      Slices.Range(SliceKey.Lead("id"), Some(1L), Some(9L)),
+      Slices.Range(SliceKey.Lead("id"), Some(20L), None)) ==
+      Some("DELETE FROM t WHERE (id >= 1 AND id < 9) OR (id >= 20)"))
+  }
+
   test("repair DELETE rendering is pinned for both dialect branches") {
     // the MySQL branch can't run here (no MySQL server, zero egress) —
     // pin its exact statement so the server-side md5 rendition is
@@ -234,5 +314,19 @@ class DeltaSyncSpec extends SparkSpec {
     assert(r.ok && r.changedSlices >= 1, r.toString)
     assert(Compare.contentEqual(
       srcCat.read(spark, "dlt"), psink.readBack(spark, "dlt")))
+  }
+
+  test("a file rewrite keeps the rows outside every repaired range, NULL keys included") {
+    val psink = ParquetSink(java.nio.file.Files.createTempDirectory("graft_delta_nullk").toString)
+    val rows = (None +: (1L to 9L).map(Option(_))).map(k => (k, "old"))
+    psink.overwrite(rows.toDF("k", "v"), "nk")
+    val ranges = Seq(
+      Slices.Range(SliceKey.Lead("k"), Some(2L), Some(4L)),
+      Slices.Range(SliceKey.Lead("k"), Some(6L), Some(7L)))
+    val fresh = rows.toDF("k", "v").withColumn("v", lit("new"))
+    psink.replaceRange(spark, fresh.filter(Slices.column(ranges)), "nk", ranges)
+    val got = psink.readBack(spark, "nk").as[(Option[Long], String)].collect().toSet
+    assert(got == rows.map { case (k, _) =>
+      (k, if (k.exists(i => i == 2 || i == 3 || i == 6)) "new" else "old") }.toSet)
   }
 }

@@ -50,4 +50,34 @@ class SlicesSpec extends SparkSpec {
       })
     assert(result.passed, result.status.toString)
   }
+
+  private val coarseGen = for {
+    keys <- Gen.listOf(Gen.option(Gen.choose(-25L, 25L)))
+    cuts <- Gen.listOf(Gen.choose(-20L, 20L)).map(_.take(16))
+    n <- Gen.choose(1, 10)
+  } yield (keys.take(30), cuts, n)
+
+  test("a coarsened read covers whole runs of adjacent diff slices") {
+    val result = check(Parameters.default.withMinSuccessfulTests(40),
+      Prop.forAll(coarseGen) { case (keys, cuts, n) =>
+        val fine = new Slices(SliceKey.Lead("k"), cuts)
+        val coarse = fine.coarsen(n)
+        // the coarse slice of each diff slice, from the cuts alone
+        val of = (0 until fine.count).map(i =>
+          if (i == 0) 0 else coarse.cuts.count(_ <= fine.cuts(i - 1)))
+        val runs = of.zip(of.drop(1)).forall { case (a, b) => b == a || b == a + 1 }
+        val preds = coarse.predicates(url)
+        // every cut is a key too, so each slice boundary is probed
+        val rows = (keys ++ cuts.map(Option(_))).toDF("k")
+          .select(fine.id(col("k")) +: preds.map(p => coalesce(expr(p), lit(false))).toIndexedSeq: _*)
+          .collect()
+        coarse.count == math.min(n, fine.count) &&
+          coarse.cuts.forall(fine.cuts.contains) &&
+          of.head == 0 && of.last == coarse.count - 1 && runs &&
+          rows.forall { r =>
+            preds.indices.filter(j => r.getBoolean(1 + j)) == Seq(of(r.getInt(0)))
+          }
+      })
+    assert(result.passed, result.status.toString)
+  }
 }
