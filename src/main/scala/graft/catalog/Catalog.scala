@@ -1,17 +1,22 @@
 package graft.catalog
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.max
 
 import graft.config.Endpoint
 import graft.partition.KeyRangeSlicer
-import graft.sync.{PartitionedReader, Slices}
+import graft.sync.{Normalize, PartitionedReader, Slices}
 
-/** Source-side discovery: which tables exist, what their primary keys
-  * are, and how to read them. Mirrors the reference's metadata queries —
-  * table list from information_schema.tables with an exclusion list
-  * (cmd/root.go:222-237) and composite-capable PK lookup from
-  * key_column_usage ordered by ordinal position (cmd/root.go:327-340) —
-  * behind one trait so the sync pipeline is source-agnostic.
+/** The one read side, for source and destination alike (a
+  * [[graft.sync.Sink]]'s `catalog` is the destination's): which tables
+  * exist, their primary keys, how to read them, and the COUNT and MAX
+  * probes. Mirrors the reference's metadata queries — table list from
+  * information_schema.tables with an exclusion list
+  * (cmd/root.go:222-237), composite-capable PK lookup from
+  * key_column_usage ordered by ordinal position (cmd/root.go:327-340),
+  * `select count(*)` on each database (cmd/compare.go:112) — behind one
+  * trait so the sync pipeline is source- and destination-agnostic.
   */
 trait Catalog {
 
@@ -24,17 +29,34 @@ trait Catalog {
 
   protected def allTables: Seq[String]
 
+  /** Verified existence, never error-driven: the reference conflates
+    * "truncate failed" with "table missing" (cmd/root.go:283-287), and
+    * an incremental sync that takes a transient probe error for a
+    * missing table silently re-appends the whole source. Only this
+    * check may route to a full load or report a table missing. */
+  def tableExists(table: String): Boolean =
+    allTables.exists(_.equalsIgnoreCase(table))
+
   /** Primary-key columns in ordinal order; empty => no PK (full-scan
     * fallback, cmd/root.go:342-344). */
   def primaryKey(table: String): Seq[String]
 
   def read(spark: SparkSession, table: String): DataFrame
 
-  /** Source row count. Parquet counts from footer metadata (cheap);
-    * JDBC runs `SELECT COUNT(*)` on the database, so one aggregate row
-    * crosses the wire instead of the whole table. */
+  /** Row count; errors propagate. Parquet counts from footer metadata
+    * (cheap); JDBC runs `SELECT COUNT(*)` on the database, so one
+    * aggregate row crosses the wire instead of the whole table. */
   def rowCount(spark: SparkSession, table: String): Long =
     read(spark, table).count()
+
+  /** MAX of `column`, or None if the table is empty — the incremental
+    * sync's watermark and the freshness report's probe. Errors
+    * propagate: a failed probe must not look like an empty table. JDBC
+    * runs `SELECT MAX` on the database. */
+  def maxValue(spark: SparkSession, table: String, column: String): Option[Any] = {
+    val r = read(spark, table).agg(max(column)).head()
+    if (r.isNullAt(0)) None else Some(r.get(0))
+  }
 
   /** Partition-aware read: `pageSize` rows per slice, at most
     * `maxSlices` concurrent slices (= source connections for JDBC).
@@ -47,18 +69,18 @@ trait Catalog {
       pageSize: Long,
       maxSlices: Int): DataFrame = read(spark, table)
 
-  /** `numSlices` slices of `table`'s numeric `lead` PK column, with a
-    * read of the table whose partitions are runs of those slices, as
-    * many as [[readPartitioned]] with `pageSize` would cut: delta repair
-    * diffs finely and reads at the sync's parallelism. None when the
-    * source cannot push the planning (the default: the caller plans
-    * from the data) or the table does not slice. */
+  /** Delta repair's read: the lower-cased table with its `numSlices`
+    * diff slices on the key [[Slices.forRead]] picks (None: no PK, the
+    * table is one slice). The default reads as [[readPartitioned]] with
+    * `pageSize` and cuts a numeric lead PK at quantiles of the data. */
   def readSliced(
       spark: SparkSession,
       table: String,
-      lead: String,
       numSlices: Int,
-      pageSize: Long): Option[(DataFrame, Slices)] = None
+      pageSize: Long): (DataFrame, Option[Slices]) =
+    Slices.forRead(
+      Normalize.lowercaseColumns(readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)),
+      primaryKey(table), numSlices)(_ => None)
 }
 
 /** File-directory catalog: each `t.<ext>` under `dir` is a table, in
@@ -76,13 +98,14 @@ class FileCatalog(
 
   private def ext = s".$format"
 
-  /** Listed through the session's Hadoop FileSystem, as the sinks
-    * write, so `file:`, `hdfs://` and `s3a://` directories list too. */
+  /** The session's Hadoop FileSystem, as the sinks write, so `file:`,
+    * `hdfs://` and `s3a://` directories list and probe too. */
+  private def fs: org.apache.hadoop.fs.FileSystem =
+    new Path(dir).getFileSystem(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new org.apache.hadoop.conf.Configuration())(_.sessionState.newHadoopConf()))
+
   override protected def allTables: Seq[String] = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .fold(new org.apache.hadoop.conf.Configuration())(_.sessionState.newHadoopConf())
-    val fs = d.getFileSystem(conf)
+    val d = new Path(dir)
     if (!fs.exists(d)) Seq.empty
     else fs.listStatus(d).toSeq
       .map(_.getPath.getName)
@@ -90,6 +113,9 @@ class FileCatalog(
       .map(_.stripSuffix(ext))
       .sorted
   }
+
+  /** One FileSystem `exists` on the table's path. */
+  override def tableExists(table: String): Boolean = fs.exists(new Path(s"$dir/$table$ext"))
 
   override def read(spark: SparkSession, table: String): DataFrame = {
     val defaults = format match {
@@ -161,13 +187,24 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.jdbc(endpoint.url, table, endpoint.properties)
 
-  /** One tagged raw-JDBC `SELECT COUNT(*)`: no Spark job, and the
-    * shutdown `KILL QUERY` finds it by its tag. */
+  /** One tagged raw-JDBC aggregate's single value: no Spark job, and
+    * the shutdown `KILL QUERY` finds it by its tag. */
+  private def aggregate(sql: String): Any =
+    endpoint.withConnection(PartitionedReader.queryRows(_, sql)) match {
+      case Seq(Seq(v)) => v
+      case other => throw new IllegalStateException(s"unexpected result of $sql: $other")
+    }
+
   override def rowCount(spark: SparkSession, table: String): Long =
-    endpoint.withConnection(
-      PartitionedReader.queryRows(_, s"SELECT COUNT(*) FROM $table")) match {
-      case Seq(Seq(n: Number)) => n.longValue()
-      case other => throw new IllegalStateException(s"unexpected count: $other")
+    aggregate(s"SELECT COUNT(*) FROM $table").asInstanceOf[Number].longValue()
+
+  /** A `LocalDateTime` (MySQL Connector/J's DATETIME) becomes the
+    * `Timestamp` a Spark read returns, so a watermark renders and
+    * filters the same from either side. */
+  override def maxValue(spark: SparkSession, table: String, column: String): Option[Any] =
+    Option(aggregate(s"SELECT MAX($column) FROM $table")).map {
+      case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t)
+      case v                          => v
     }
 
   /** JDBC reads route through the PK-range partitioned extract, so a
@@ -182,23 +219,24 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
       PartitionedReader.plan(endpoint, table, primaryKey(table).headOption)(
         KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
 
-  /** The pushed slice plan (cuts from source-side histograms) for a
-    * FIXED `numSlices`, skipped for tables under 2·numSlices rows: too
-    * few rows per slice to gain anything. The read's predicates are the
-    * plan coarsened to the sync read's slice count for the COUNT the
-    * plan fetched. */
+  /** A numeric lead PK is cut by the pushed plan (source-side
+    * histograms) for a FIXED `numSlices`, skipped under 2·numSlices rows
+    * (too few per slice to gain anything); the read is then the plan
+    * coarsened to the sync read's slice count, else one scan. The key
+    * comes from the plain read's schema, so other PKs run no probe. */
   override def readSliced(
       spark: SparkSession,
       table: String,
-      lead: String,
       numSlices: Int,
-      pageSize: Long): Option[(DataFrame, Slices)] = {
-    var reads = 1
-    PartitionedReader.plan(endpoint, table, Some(lead)) { rows =>
-      reads = KeyRangeSlicer.numSlices(rows, pageSize, PartitionedReader.MaxSlices)
-      if (rows < 2L * numSlices) 1 else numSlices
-    }.map(s => PartitionedReader.scan(spark, endpoint, table, Some(s.coarsen(reads))) -> s)
-  }
+      pageSize: Long): (DataFrame, Option[Slices]) =
+    Slices.forRead(PartitionedReader.scan(spark, endpoint, table, None),
+      primaryKey(table), numSlices) { lead =>
+      var reads = 1
+      PartitionedReader.plan(endpoint, table, Some(lead)) { rows =>
+        reads = KeyRangeSlicer.numSlices(rows, pageSize, PartitionedReader.MaxSlices)
+        if (rows < 2L * numSlices) 1 else numSlices
+      }.map(s => PartitionedReader.scan(spark, endpoint, table, Some(s.coarsen(reads))) -> s)
+    }
 
   /** Discovered views minus the exclusion list — the reference's S13
     * object-migration surface (readme.md:10,81 advertises view
@@ -274,9 +312,8 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     }
   }
 
-  /** Catalog-level existence via JDBC metadata — never error-driven
-    * (see `Sink.exists`). */
-  def tableExists(table: String): Boolean = endpoint.withConnection { conn =>
+  /** Existence via JDBC metadata. */
+  override def tableExists(table: String): Boolean = endpoint.withConnection { conn =>
     val md = conn.getMetaData
     // getTables takes a PATTERN: escape '_'/'%' or `inc_t` would
     // match `incat` in any schema and a missing table could report

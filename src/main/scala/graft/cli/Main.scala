@@ -368,7 +368,7 @@ object Main {
             // fingerprints join the corpus fps in the rebuilt bloom
             val sink = sinkFor(cfg.dest, cfg)
             val ingested = opt("--into")
-              .filter(t => sink.exists(spark, s"${t}_fps"))
+              .filter(t => sink.catalog.tableExists(s"${t}_fps"))
               .map(t => sink.readBack(spark, s"${t}_fps"))
             val (docs, hotN, fps) = graft.streaming.IngestPipeline
               .compactIndexDir(spark, dir, ingested, p)
@@ -520,8 +520,7 @@ object Main {
               stream, sink, into, ckpt, index, fps, col(txtC), idC, p,
               benchmark = bench, bloom = Some(bloom))
             q.awaitTermination() // AvailableNow: drains what exists, stops
-            val kept =
-              if (sink.exists(spark, into)) sink.readBack(spark, into).count() else 0L
+            val kept = sink.rowCount(spark, into).getOrElse(0L)
             println(table(Seq(
               Seq("Object", "CorpusDocs", "KeptTotal", "Bloom"),
               Seq(into, index.docs.count().toString, kept.toString,
@@ -562,7 +561,7 @@ object Main {
           .getOrElse {
         val docs = catalogFor(cfg.src).read(spark, t)
         val sink = sinkFor(cfg.dest, cfg)
-        val appending = append && sink.exists(spark, into)
+        val appending = append && sink.catalog.tableExists(into)
         val asg = graft.operators.Barrier(
           if (appending)
             // continue the persisted packing: next-fit is prefix-stable,

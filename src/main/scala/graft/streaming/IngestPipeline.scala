@@ -167,7 +167,7 @@ object IngestPipeline {
   private def guardFps(sink: Sink, table: String, fingerprints: DataFrame): DataFrame = {
     val spark = fingerprints.sparkSession
     val fps = fingerprints.select("fp")
-    if (sink.exists(spark, s"${table}_fps"))
+    if (sink.catalog.tableExists(s"${table}_fps"))
       fps.unionByName(sink.readBack(spark, s"${table}_fps").select("fp"))
     else fps
   }

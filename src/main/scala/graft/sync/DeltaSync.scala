@@ -1,10 +1,8 @@
 package graft.sync
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.NumericType
 
 import graft.catalog.Catalog
-import graft.partition.KeyRangeSlicer
 
 /** Checksum-diff repair sync — update-aware replication without CDC.
   *
@@ -25,9 +23,9 @@ import graft.partition.KeyRangeSlicer
   * DELETE and takes ONE batch append of the replacement rows, so the
   * statements and Spark jobs of a repair do not grow with the number of
   * ranges. Against a mostly-unchanged replica this beats
-  * truncate-reload by the write path times the unchanged fraction. A
-  * table with no PK is one slice: reloaded in full when it differs,
-  * left alone when it does not. True row-level CDC (binlog tailing)
+  * truncate-reload by the write path times the unchanged fraction. The
+  * key rule is [[Slices.forRead]]'s: a table with no PK is one slice,
+  * reloaded in full when it differs, left alone when it does not. True row-level CDC (binlog tailing)
   * remains out of scope, as in the reference.
   */
 object DeltaSync {
@@ -45,13 +43,10 @@ object DeltaSync {
   private val MaxChangedFraction = 0.5
 
   /** Diff source and target per slice and repair only the slices that
-    * disagree. Numeric lead PKs slice on the key itself; string/composite
-    * PKs slice on the 60-bit [[HashKey]] md5 space (fixed uniform cuts —
-    * no planning scan; MySQL repairs stay server-side via the dialect
-    * md5); a table with no PK is one whole-table slice. Falls back to a
-    * full truncate-reload only when the target is verifiably missing, or
-    * so diverged that a full reload is cheaper ([[MaxChangedFraction]];
-    * a differing one-slice table always is).
+    * disagree, on the catalog's read and slices ([[Catalog.readSliced]]).
+    * Falls back to a full truncate-reload only when the target is
+    * verifiably missing, or so diverged that a full reload is cheaper
+    * ([[MaxChangedFraction]]; a differing one-slice table always is).
     */
   def syncDelta(
       spark: SparkSession,
@@ -61,39 +56,15 @@ object DeltaSync {
       numSlices: Int = 64,
       pageSize: Long = 100000L): DeltaReport = {
     try Jobs.tagged(spark, s"graft-delta-$table") {
-      val pk = catalog.primaryKey(table)
-      // ONE planning pass where the catalog can push it (JDBC: cuts from
-      // source-side histograms over the PK index; runs of them, sized by
-      // `pageSize`, are the read predicates): no Spark-side pre-scan, no
-      // second histogram pass
-      val sliced = pk.headOption.flatMap(catalog.readSliced(spark, table, _, numSlices, pageSize))
-      val src = sliced.fold(Normalize.lowercaseColumns(
-        catalog.readPartitioned(spark, table, pageSize, PartitionedReader.MaxSlices)))(_._1)
-      val pks = pk.map(_.toLowerCase).filter(src.columns.contains)
+      val (src, slices) = catalog.readSliced(spark, table, numSlices, pageSize)
 
       def fullLoad(): DeltaReport = {
         sink.overwrite(src, table)
-        val n = sink.rowCount(spark, table).getOrElse(-1L)
-        DeltaReport(table, 1, 1, n, ok = true)
+        DeltaReport(table, 1, 1, sink.catalog.rowCount(spark, table), ok = true)
       }
 
-      if (!sink.exists(spark, table)) fullLoad()
+      if (!sink.catalog.tableExists(table)) fullLoad()
       else {
-        val slices =
-          if (pks.isEmpty) None // nothing sliceable: one whole-table slice
-          else if (src.schema(pks.head).dataType.isInstanceOf[NumericType])
-            // numeric lead PK: slice on the key itself (the range DELETE
-            // rides the PK index on any dialect). Diff slices = the pushed
-            // plan's slices when it produced them (the read's partitions
-            // are runs of them — one planning pass covers both); other
-            // sources estimate quantiles from the data
-            Some(sliced.fold(new Slices(SliceKey.Lead(pks.head),
-              KeyRangeSlicer.quantileCuts(src, pks.head, numSlices)))(_._2))
-          else
-            // string/composite PK: slice the 60-bit md5 key space of the
-            // full PK tuple — uniform by construction, so the fixed cuts
-            // balance with NO data scan
-            Some(new Slices(SliceKey.Hashed(pks), HashKey.cuts(numSlices)))
         val k = slices.fold(1)(_.count)
         val diff = SliceDiff(src, Normalize.lowercaseColumns(sink.readBack(spark, table)), slices)
         val changed = diff.changed

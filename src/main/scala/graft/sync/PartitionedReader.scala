@@ -26,9 +26,10 @@ import graft.partition.KeyRangeSlicer
   *
   * `JdbcCatalog` picks the slice count: for the sync read,
   * ceil(rows / pageSize) capped at [[MaxSlices]], which doubles as the
-  * connection ceiling per table. Delta repair plans a fixed count of
-  * diff slices and reads at the sync's count: each read task scans a
-  * run of adjacent diff slices ([[Slices.coarsen]]).
+  * connection ceiling per table. Delta repair plans only a numeric lead
+  * PK ([[Slices.forRead]]; other keys cost no probe): a fixed count of
+  * diff slices, read at the sync's count, each read task a run of
+  * adjacent diff slices ([[Slices.coarsen]]).
   */
 object PartitionedReader {
 
@@ -91,7 +92,7 @@ object PartitionedReader {
   /** A pushed-down aggregate query, tagged with [[Jobs.tagSql]], on an
     * open connection: the database computes, one small result set comes
     * back, and no Spark job runs. The slice planner's and the catalog's
-    * row-count probe. */
+    * COUNT and MAX probes. */
   private[graft] def queryRows(conn: java.sql.Connection, sql: String): Seq[Seq[Any]] = {
     val st = conn.createStatement()
     try {

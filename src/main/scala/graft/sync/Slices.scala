@@ -1,7 +1,10 @@
 package graft.sync
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types.NumericType
+
+import graft.partition.KeyRangeSlicer
 
 /** The key a table is sliced on: the numeric lead PK itself, or the
   * [[HashKey]] of the whole PK tuple (string and composite PKs, where
@@ -75,11 +78,12 @@ object HashKey {
   * above, so every row lands in exactly one slice wherever the cuts
   * came from. This is the only code that knows that rule: the sync
   * read's predicates, delta repair's slice ids and its repair ranges
-  * all render from here. Cuts may come in any order, repeated. */
-final class Slices(val key: SliceKey, rawCuts: Seq[Long]) {
+  * all render from here. Cuts may come in any order, repeated, and are
+  * computed on first use, so an unused plan from the data costs nothing. */
+final class Slices(val key: SliceKey, rawCuts: => Seq[Long]) {
 
   /** Distinct and sorted. */
-  val cuts: IndexedSeq[Long] = rawCuts.distinct.sorted.toIndexedSeq
+  lazy val cuts: IndexedSeq[Long] = rawCuts.distinct.sorted.toIndexedSeq
 
   def count: Int = cuts.length + 1
 
@@ -115,6 +119,24 @@ final class Slices(val key: SliceKey, rawCuts: Seq[Long]) {
 }
 
 object Slices {
+
+  /** Delta repair's one key rule, from `read`'s schema: a numeric lead
+    * PK slices on itself, cut where the source `pushed` (with the read to
+    * use instead), else at quantiles of the data; any other PK on the
+    * uniform [[HashKey]] of the whole tuple at fixed cuts, no data scan;
+    * no PK is one whole-table slice (None). */
+  def forRead(read: DataFrame, pk: Seq[String], numSlices: Int)(
+      pushed: String => Option[(DataFrame, Slices)]): (DataFrame, Option[Slices]) = {
+    val pks = pk.map(_.toLowerCase).filter(read.columns.contains)
+    pks.headOption match {
+      case None => read -> None
+      case Some(lead) if read.schema(lead).dataType.isInstanceOf[NumericType] =>
+        val (df, s) = pushed(lead).getOrElse(read ->
+          new Slices(SliceKey.Lead(lead), KeyRangeSlicer.quantileCuts(read, lead, numSlices)))
+        df -> Some(s)
+      case Some(_) => read -> Some(new Slices(SliceKey.Hashed(pks), HashKey.cuts(numSlices)))
+    }
+  }
 
   /** The half-open key range [lo, hi) (None = unbounded; the
     * unbounded-below range owns NULL keys), as SQL and as a Column. */

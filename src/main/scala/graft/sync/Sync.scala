@@ -1,5 +1,7 @@
 package graft.sync
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
@@ -16,37 +18,23 @@ object Normalize {
 /** Where synced rows land. The reference only writes MySQL (batched
   * multi-row INSERT in a txn, cmd/root.go:375-507); Spark's JDBC writer
   * does the same prepared-batch-per-partition loop natively, and a
-  * parquet sink covers the fixture/test path.
+  * parquet sink covers the fixture/test path. A sink holds the writes;
+  * every read of the destination goes through its [[catalog]].
   */
 sealed trait Sink {
+  /** The destination's read side. */
+  def catalog: Catalog
   /** Truncate-and-load (reference S11: `truncate table` then insert). */
   def overwrite(df: DataFrame, table: String): Unit
   /** Append without truncation (incremental loads). */
   def append(df: DataFrame, table: String): Unit
   def readBack(spark: SparkSession, table: String): DataFrame
-  /** Verified target-table existence. Kept distinct from read errors on
-    * purpose: the reference conflates "truncate failed" with "table
-    * missing" (cmd/root.go:283-287), and an incremental sync that takes
-    * a transient probe error for a missing table silently re-appends
-    * the whole source. Only this check may route to a full load. */
-  def exists(spark: SparkSession, table: String): Boolean
-  /** Max value of a column in the target, or None if the table is
-    * empty — the incremental-sync watermark. Call only after
-    * [[exists]]; errors propagate (they mean the probe failed, not that
-    * the table is absent). Overridden with a pushed-down aggregate
-    * where the sink can compute it itself. */
-  def maxValue(spark: SparkSession, table: String, column: String): Option[Any] = {
-    val r = readBack(spark, table)
-      .agg(org.apache.spark.sql.functions.max(column)).head()
-    if (r.isNullAt(0)) None else Some(r.get(0))
-  }
-  /** Target row count, or None if the table is missing. Overridden with
-    * a pushed-down COUNT where the sink can compute it itself —
-    * Spark's V1 JDBC source would otherwise fetch every row to count
-    * (the reference pushes `select count(*)`, cmd/compare.go:112). */
-  def rowCount(spark: SparkSession, table: String): Option[Long] =
-    try Some(readBack(spark, table).count())
-    catch { case _: Exception => None }
+  /** Target row count, or None when the table is verifiably missing
+    * ([[Catalog.tableExists]]); a count that fails on a table that
+    * exists rethrows. The happy path is the catalog's one count. */
+  final def rowCount(spark: SparkSession, table: String): Option[Long] =
+    try Some(catalog.rowCount(spark, table))
+    catch { case _: Exception if !catalog.tableExists(table) => None }
   /** Replace the target's rows in any of `ranges` (one table's changed
     * ranges, all at once) with `df`, already filtered to them — the
     * repair primitive of [[DeltaSync]]. JDBC sinks delete every range in
@@ -101,6 +89,7 @@ private[sync] object DeltaRepairSql {
   * round trip — point incremental/repair/compare pipelines at
   * parquet/orc, not at a delivery dir. */
 final case class FileSink(dir: String, format: String = "parquet") extends Sink {
+  val catalog: Catalog = new FileCatalog(dir, format)
   private def path(table: String) = s"$dir/$table.$format"
   // csv keeps headers both ways (the FileCatalog convention, so a sink
   // dir reads back as a source dir); json is JSON-lines — the standard
@@ -116,11 +105,7 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     df.write.mode(SaveMode.Append).options(writeOpts)
       .format(format).save(path(table))
   override def readBack(spark: SparkSession, table: String): DataFrame =
-    new FileCatalog(dir, format).read(spark, table)
-  override def exists(spark: SparkSession, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+    catalog.read(spark, table)
   /** Plain parquet has no row-level delete: keep-rows ∪ replacement is
     * materialized through a [[graft.operators.Barrier]] (the path being
     * overwritten cannot stay in the read lineage), then overwritten.
@@ -188,6 +173,7 @@ final case class JdbcSink(
     batchRowSize: Int = 1000,
     numPartitions: Int = 30)
     extends Sink {
+  val catalog: Catalog = new JdbcCatalog(endpoint)
   private def props: java.util.Properties = {
     val p = endpoint.properties
     p.setProperty("batchsize", batchRowSize.toString)
@@ -206,22 +192,7 @@ final case class JdbcSink(
   override def append(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Append).jdbc(endpoint.url, table, props)
   override def readBack(spark: SparkSession, table: String): DataFrame =
-    Normalize.lowercaseColumns(spark.read.jdbc(endpoint.url, table, props))
-  /** Catalog-level existence via JDBC metadata (never error-driven). */
-  override def exists(spark: SparkSession, table: String): Boolean =
-    new JdbcCatalog(endpoint).tableExists(table)
-  /** Pushed-down watermark: the target database computes MAX itself.
-    * Errors propagate — a failed probe must not look like an empty
-    * table (see [[Sink.exists]]). */
-  override def maxValue(spark: SparkSession, table: String, column: String): Option[Any] = {
-    val q = s"(SELECT MAX($column) AS mx FROM $table) wm"
-    val r = spark.read.jdbc(endpoint.url, q, props).head()
-    if (r.isNullAt(0)) None else Some(r.get(0))
-  }
-  /** The catalog's pushed-down count; None when the table is missing. */
-  override def rowCount(spark: SparkSession, table: String): Option[Long] =
-    try Some(new JdbcCatalog(endpoint).rowCount(spark, table))
-    catch { case _: Exception => None }
+    Normalize.lowercaseColumns(catalog.read(spark, table))
   /** Range repair. Where the dialect computes the key (a numeric PK
     * anywhere; the md5 [[HashKey]] on MySQL-wire) every range goes in
     * ONE server-side DELETE, its ranges OR-joined. Otherwise (Derby in
@@ -274,15 +245,15 @@ final case class TableReport(
 object Sync {
 
   /** One table's load under job group `group`, reported: the target's
-    * row count after `load` on success; on any failure rows=-1 and the
-    * error, isolated to this table's report. */
+    * row count after `load` on success; on any failure (the count too)
+    * rows=-1 and the error, isolated to this table's report. */
   private def report(spark: SparkSession, sink: Sink, table: String, group: String)(
       load: => Unit): TableReport = {
     val t0 = System.nanoTime()
     def ms = (System.nanoTime() - t0) / 1000000
     try Jobs.tagged(spark, group) {
       load
-      TableReport(table, sink.rowCount(spark, table).getOrElse(-1L), ms, ok = true)
+      TableReport(table, sink.catalog.rowCount(spark, table), ms, ok = true)
     } catch {
       case e: Exception => TableReport(table, -1, ms, ok = false, Some(e.getMessage))
     }
@@ -322,8 +293,8 @@ object Sync {
       // error propagates to the report (ok=false) instead of silently
       // re-appending every existing row
       val delta =
-        if (!sink.exists(spark, table)) src // verified missing: full load
-        else sink.maxValue(spark, table, watermarkCol) match {
+        if (!sink.catalog.tableExists(table)) src // verified missing: full load
+        else sink.catalog.maxValue(spark, table, watermarkCol) match {
           case Some(wm) => src.filter(col(watermarkCol) > lit(wm))
           case None     => src // exists but empty: full load
         }
@@ -442,23 +413,27 @@ object Compare {
       dest_is_exist: String,
       is_ok: String)
 
-  private def compareRow(
-      table: String, srcCnt: Long, destCnt: Option[Long], ok: Boolean): CompareRow =
-    CompareRow(table, srcCnt, destCnt.getOrElse(-1L),
-      if (destCnt.isDefined) "YES" else "NO", if (ok) "YES" else "NO")
+  /** One table's row against the source's `srcCnt`: a destination
+    * verifiably missing reads -1/NO/NO; one that exists but cannot be
+    * counted reads -1/YES/NO; otherwise its count, ok when the counts
+    * match and `same` holds. */
+  private def compareRow(spark: SparkSession, sink: Sink, table: String, srcCnt: Long)(
+      same: => Boolean): CompareRow = {
+    val dest = Try(sink.rowCount(spark, table))
+    val n = dest.toOption.flatten
+    def yes(b: Boolean) = if (b) "YES" else "NO"
+    CompareRow(table, srcCnt, n.getOrElse(-1L),
+      yes(dest.fold(_ => true, _.isDefined)), yes(n.contains(srcCnt) && same))
+  }
 
   def countCompare(
       spark: SparkSession,
       src: Catalog,
       sink: Sink,
       tables: Seq[String]): Seq[CompareRow] =
-    tables.map { t =>
-      // both counts are pushed-down aggregates (reference R6: the
-      // `select count(*)` runs on each database, cmd/compare.go:112)
-      val srcCnt = src.rowCount(spark, t)
-      val dest = sink.rowCount(spark, t)
-      compareRow(t, srcCnt, dest, dest.contains(srcCnt))
-    }
+    // both counts are pushed-down aggregates (reference R6: the
+    // `select count(*)` runs on each database, cmd/compare.go:112)
+    tables.map(t => compareRow(spark, sink, t, src.rowCount(spark, t))(same = true))
 
   /** One replication-freshness finding. */
   final case class FreshnessRow(
@@ -467,26 +442,23 @@ object Compare {
 
   /** Replication freshness per watermarked table: the source's and
     * destination's MAX(watermark) side by side — the "how stale is my
-    * replica" answer without a row compare. The destination probe is
-    * the same pushed-down aggregate the incremental sync uses; the
-    * source probe prunes to the one column (file sources) or fetches
-    * it (JDBC v1 — still one column, no rows materialize in the
-    * driver). Values compare by canonical string render, since the
-    * two sides may surface different but equal-valued types. */
+    * replica" answer without a row compare. Both probes are
+    * [[Catalog.maxValue]], the aggregate the incremental sync uses: on
+    * JDBC one `SELECT MAX` on the database, no Spark job. Values compare
+    * by canonical string render, since the two sides may surface
+    * different but equal-valued types. */
   def freshness(
       spark: SparkSession,
       src: Catalog,
       sink: Sink,
       watermarks: Map[String, String]): Seq[FreshnessRow] =
     watermarks.toSeq.sortBy(_._1).map { case (t, c) =>
-      val sMax = src.read(spark, t)
-        .agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col(c))).head().get(0)
+      val sMax = src.maxValue(spark, t, c)
       val dMax =
-        if (sink.exists(spark, t)) sink.maxValue(spark, t, c) else None
+        if (sink.catalog.tableExists(t)) sink.catalog.maxValue(spark, t, c) else None
       // BOTH empty cases render "-": an empty source replicated into
       // an empty destination is in sync, not lagging
-      val sR = Option(sMax).map(String.valueOf).getOrElse("-")
+      val sR = sMax.map(String.valueOf).getOrElse("-")
       val dR = dMax.map(String.valueOf).getOrElse("-")
       FreshnessRow(t, c, sR, dR, sR == dR)
     }
@@ -509,7 +481,7 @@ object Compare {
       sink: Sink,
       tables: Seq[String]): Seq[SchemaDrift] =
     tables.flatMap { t =>
-      if (!sink.exists(spark, t))
+      if (!sink.catalog.tableExists(t))
         Seq(SchemaDrift(t, "*", "table_missing", "-", "-"))
       else {
         def fields(df: DataFrame): (Map[String, String], Seq[String]) = {
@@ -556,8 +528,8 @@ object Compare {
     * one slice. Tables run in parallel, as many as the session has cores
     * (at most the [[PartitionedReader.MaxSlices]] connection ceiling);
     * rows come back in `tables` order. A destination that cannot be read
-    * or lacks a source column reports NO; one with no row count (missing)
-    * reports -1/NO/NO. */
+    * or lacks a source column reports NO; the counts read as in
+    * [[countCompare]]. */
   def contentCompare(
       spark: SparkSession,
       src: Catalog,
@@ -566,15 +538,11 @@ object Compare {
     Sync.parMap(tables,
       math.min(spark.sparkContext.defaultParallelism, PartitionedReader.MaxSlices)) { t =>
       val s = Normalize.lowercaseColumns(src.read(spark, t))
-      val srcCnt = src.rowCount(spark, t)
-      val destCnt = sink.rowCount(spark, t)
-      val ok =
-        destCnt.contains(srcCnt) && {
-          try SliceDiff(s, Normalize.lowercaseColumns(sink.readBack(spark, t)), None)
-            .changed.isEmpty
-          catch { case _: Exception => false }
-        }
-      compareRow(t, srcCnt, destCnt, ok)
+      compareRow(spark, sink, t, src.rowCount(spark, t)) {
+        try SliceDiff(s, Normalize.lowercaseColumns(sink.readBack(spark, t)), None)
+          .changed.isEmpty
+        catch { case _: Exception => false }
+      }
     }
 
   /** Content equality: both directions of exceptAll are empty. Stronger

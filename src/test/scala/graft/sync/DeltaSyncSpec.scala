@@ -94,7 +94,7 @@ class DeltaSyncSpec extends SparkSpec {
 
   test("delta repair diffs its own slice count and reads at the sync's parallelism") {
     // plan_t: the 300 rows seeded above; ceil(300/100) = 3 read tasks
-    val Some((read, slices)) = srcCat.readSliced(spark, "plan_t", "id", 12, pageSize = 100)
+    val (read, Some(slices)) = srcCat.readSliced(spark, "plan_t", 12, pageSize = 100)
     assert(slices.count == 12)
     assert(read.rdd.getNumPartitions == 3)
     assert(read.count() == 300)

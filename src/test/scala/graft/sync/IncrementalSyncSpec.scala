@@ -63,10 +63,10 @@ class IncrementalSyncSpec extends SparkSpec {
       (1L to 40L).map(i => (i, s"p_$i")).toDF("id", "payload"), "inc_p")
     val dir = java.nio.file.Files.createTempDirectory("graft_inc_parquet").toString
     val psink = ParquetSink(dir)
-    assert(!psink.exists(spark, "inc_p"))
+    assert(!psink.catalog.tableExists("inc_p"))
     val r = Sync.syncIncremental(spark, srcCat, psink, "inc_p", "id", pageSize = 30)
     assert(r.ok && r.rows == 40, r.toString)
-    assert(psink.exists(spark, "inc_p"))
+    assert(psink.catalog.tableExists("inc_p"))
     // second run: exists, watermark probe finds 40 -> empty delta
     val r2 = Sync.syncIncremental(spark, srcCat, psink, "inc_p", "id", pageSize = 30)
     assert(r2.ok && r2.rows == 40, r2.toString)
