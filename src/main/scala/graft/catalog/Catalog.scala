@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.max
 
 import graft.config.Endpoint
-import graft.partition.KeyRangeSlicer
 import graft.sync.{Normalize, PartitionedReader, Slices}
 
 /** The one read side, for source and destination alike (a
@@ -62,7 +61,7 @@ trait Catalog {
     * `maxSlices` concurrent slices (= source connections for JDBC).
     * File sources are already split by the data source, so the default
     * is the plain read; JDBC overrides with the keyset-replacement
-    * range-partitioned extract. */
+    * range-partitioned extract, the same plan as its [[readSliced]]. */
   def readPartitioned(
       spark: SparkSession,
       table: String,
@@ -72,7 +71,8 @@ trait Catalog {
   /** Delta repair's read: the lower-cased table with its `numSlices`
     * diff slices on the key [[Slices.forRead]] picks (None: no PK, the
     * table is one slice). The default reads as [[readPartitioned]] with
-    * `pageSize` and cuts a numeric lead PK at quantiles of the data. */
+    * `pageSize` and cuts a numeric lead PK at quantiles of the data;
+    * JDBC cuts it on the source, in the plan of its sync read. */
   def readSliced(
       spark: SparkSession,
       table: String,
@@ -209,34 +209,24 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
 
   /** JDBC reads route through the PK-range partitioned extract, so a
     * plain `sync` gets task-per-slice parallelism (the reference's
-    * page-per-goroutine, cmd/root.go:137-141) without callers opting in. */
+    * page-per-goroutine, cmd/root.go:137-141) without callers opting in;
+    * only a numeric lead PK is probed ([[PartitionedReader.read]]). */
   override def readPartitioned(
       spark: SparkSession,
       table: String,
       pageSize: Long,
       maxSlices: Int): DataFrame =
-    PartitionedReader.scan(spark, endpoint, table,
-      PartitionedReader.plan(endpoint, table, primaryKey(table).headOption)(
-        KeyRangeSlicer.numSlices(_, pageSize, maxSlices)))
+    PartitionedReader.read(spark, endpoint, table, primaryKey(table), pageSize, maxSlices, None)._1
 
-  /** A numeric lead PK is cut by the pushed plan (source-side
-    * histograms) for a FIXED `numSlices`, skipped under 2·numSlices rows
-    * (too few per slice to gain anything); the read is then the plan
-    * coarsened to the sync read's slice count, else one scan. The key
-    * comes from the plain read's schema, so other PKs run no probe. */
+  /** The sync read's plan with a fixed `numSlices` diff slices, read at
+    * the sync's slice count ([[PartitionedReader.read]]). */
   override def readSliced(
       spark: SparkSession,
       table: String,
       numSlices: Int,
       pageSize: Long): (DataFrame, Option[Slices]) =
-    Slices.forRead(PartitionedReader.scan(spark, endpoint, table, None),
-      primaryKey(table), numSlices) { lead =>
-      var reads = 1
-      PartitionedReader.plan(endpoint, table, Some(lead)) { rows =>
-        reads = KeyRangeSlicer.numSlices(rows, pageSize, PartitionedReader.MaxSlices)
-        if (rows < 2L * numSlices) 1 else numSlices
-      }.map(s => PartitionedReader.scan(spark, endpoint, table, Some(s.coarsen(reads))) -> s)
-    }
+    PartitionedReader.read(spark, endpoint, table, primaryKey(table), pageSize,
+      PartitionedReader.MaxSlices, Some(numSlices))
 
   /** Discovered views minus the exclusion list — the reference's S13
     * object-migration surface (readme.md:10,81 advertises view

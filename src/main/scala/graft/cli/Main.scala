@@ -177,17 +177,19 @@ object Main {
       Seq(cfg.src, cfg.dest).filter(e => graft.sync.Jobs.isMySqlWire(e.url))) {
 
     val t0 = System.nanoTime()
-    def syncReport(reports: Seq[graft.sync.TableReport]): Int = {
-      println(table(
-        Seq("Object", "Rows", "ElapsedMs", "Result") +:
-          reports.map(r => Seq(r.table, r.rows.toString, r.elapsedMs.toString,
-            if (r.skipped) "SKIPPED (ledger)"
-            else if (r.ok) "OK"
-            else s"FAILED ${r.error.getOrElse("")}"))))
-      println(f"Sync finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs, " +
-        s"failed ${reports.count(!_.ok)}")
-      reports.count(!_.ok)
+    /** The one sync/compare report: its `lines` (rendered tables), then
+      * `<what> finished, elapsed <s>s<tail>`; returns the exit code. */
+    def report(what: String, tail: String, exitCode: Int)(lines: String*): Int = {
+      lines.foreach(println)
+      println(f"$what finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs$tail")
+      exitCode
     }
+    def result(ok: Boolean, error: Option[String]) = if (ok) "OK" else s"FAILED ${error.getOrElse("")}"
+    def syncReport(reports: Seq[graft.sync.TableReport]): Int =
+      report("Sync", s", failed ${reports.count(!_.ok)}", reports.count(!_.ok))(table(
+        Seq("Object", "Rows", "ElapsedMs", "Result") +: reports.map(r => Seq(r.table,
+          r.rows.toString, r.elapsedMs.toString,
+          if (r.skipped) "SKIPPED (ledger)" else result(r.ok, r.error)))))
     cmd match {
       case "sync" if cfg.tables.nonEmpty =>
         // custom-SQL mode (reference `-s`): only the configured tables
@@ -205,14 +207,10 @@ object Main {
           val catalog = catalogFor(cfg.src)
           val sink = sinkFor(cfg.dest, cfg)
           val reports = graft.sync.DeltaSync.syncAllDelta(spark, catalog, sink, cfg)
-          println(table(
-            Seq("Object", "Slices", "Changed", "RowsCopied", "Result") +:
-              reports.map(r => Seq(r.table, r.slices.toString,
-                r.changedSlices.toString, r.rowsCopied.toString,
-                if (r.ok) "OK" else s"FAILED ${r.error.getOrElse("")}"))))
-          println(f"Delta sync finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs, " +
-            s"failed ${reports.count(!_.ok)}")
-          reports.count(!_.ok)
+          report("Delta sync", s", failed ${reports.count(!_.ok)}", reports.count(!_.ok))(table(
+            Seq("Object", "Slices", "Changed", "RowsCopied", "Result") +: reports.map(r =>
+              Seq(r.table, r.slices.toString, r.changedSlices.toString,
+                r.rowsCopied.toString, result(r.ok, r.error)))))
         }
       case "sync" if cfg.watermarks.nonEmpty &&
           deliveryFormat(cfg.dest.url).nonEmpty =>
@@ -245,14 +243,10 @@ object Main {
         } else {
           val drifting = Compare.freshness(spark, catalogFor(cfg.src),
             sinkFor(cfg.dest, cfg), cfg.watermarks)
-          println(table(
-            Seq(Seq("Table", "Watermark", "SrcMax", "DestMax", "InSync")) ++
-              drifting.map(r => Seq(r.table, r.column, r.srcMax,
-                r.destMax, if (r.inSync) "YES" else "NO"))))
           val lagging = drifting.count(!_.inSync)
-          println(f"Freshness compare finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs, " +
-            s"$lagging lagging / ${drifting.length} tables")
-          lagging
+          report("Freshness compare", s", $lagging lagging / ${drifting.length} tables", lagging)(
+            table(Seq("Table", "Watermark", "SrcMax", "DestMax", "InSync") +: drifting.map(r =>
+              Seq(r.table, r.column, r.srcMax, r.destMax, if (r.inSync) "YES" else "NO"))))
         }
       case "compare" if args.contains("--schema") &&
           deliveryFormat(cfg.dest.url).nonEmpty =>
@@ -268,16 +262,11 @@ object Main {
         val sink = sinkFor(cfg.dest, cfg)
         val tables = catalog.listTables(cfg.exclude)
         val drifts = graft.sync.Compare.schemaCompare(spark, catalog, sink, tables)
-        if (drifts.isEmpty)
-          println(s"schema compare: ${tables.length} tables, no drift")
-        else
-          println(table(
-            Seq(Seq("Table", "Column", "Status", "SrcType", "DestType")) ++
-              drifts.map(d => Seq(d.table, d.column, d.status,
-                d.srcType, d.destType))))
-        println(f"Schema compare finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs, " +
-          s"${drifts.map(_.table).distinct.length} drifting / ${tables.length} tables")
-        drifts.map(_.table).distinct.length
+        val drifting = drifts.map(_.table).distinct.length
+        report("Schema compare", s", $drifting drifting / ${tables.length} tables", drifting)(
+          if (drifts.isEmpty) s"schema compare: ${tables.length} tables, no drift"
+          else table(Seq("Table", "Column", "Status", "SrcType", "DestType") +:
+            drifts.map(d => Seq(d.table, d.column, d.status, d.srcType, d.destType))))
       case "compare" =>
         val catalog = catalogFor(cfg.src)
         val sink = sinkFor(cfg.dest, cfg)
@@ -288,19 +277,14 @@ object Main {
           if (args.contains("--content"))
             Compare.contentCompare(spark, catalog, sink, tables)
           else Compare.countCompare(spark, catalog, sink, tables)
-        println(table(
-          Seq("Table", "SourceRows", "DestRows", "DestIsExist", "IsOk") +:
-            rows.map(r => Seq(r.table_name, r.src_rows.toString, r.dest_rows.toString,
-              r.dest_is_exist, r.is_ok))))
         val failed = rows.filter(_.is_ok == "NO")
-        if (failed.nonEmpty) {
-          println("Failed tables:")
-          println(table(
-            Seq("Table", "SourceRows", "DestRows") +:
-              failed.map(r => Seq(r.table_name, r.src_rows.toString, r.dest_rows.toString))))
-        }
-        println(f"Compare finished, elapsed ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        failed.size
+        val failedTables = if (failed.isEmpty) Nil else Seq("Failed tables:", table(
+          Seq("Table", "SourceRows", "DestRows") +:
+            failed.map(r => Seq(r.table_name, r.src_rows.toString, r.dest_rows.toString))))
+        report("Compare", "", failed.size)(table(
+          Seq("Table", "SourceRows", "DestRows", "DestIsExist", "IsOk") +: rows.map(r =>
+            Seq(r.table_name, r.src_rows.toString, r.dest_rows.toString, r.dest_is_exist, r.is_ok))) +:
+          failedTables: _*)
       case "create-table" =>
         var failures = 0
         (catalogFor(cfg.src), cfg.dest) match {

@@ -14,12 +14,17 @@ import org.apache.spark.sql.functions._
   * duplicate/lost rows, unlike the reference's deliberately-one-extra
   * empty page (`i <= totalPageNum`, cmd/root.go:367).
   *
-  * Two ways to derive the cut points:
+  * The key is decided once, from the read's schema, by
+  * `graft.sync.Slices.forRead`: only a numeric lead PK is cut here (any
+  * other PK slices on its uniform hash, no PK is one scan). Two ways to
+  * derive its cut points:
   *   - [[adaptiveCuts]] from pushed-down bucket histograms (aggregates
   *     the source database computes over its own PK index — no key data
-  *     crosses the wire; the JDBC path, see `sync.PartitionedReader`);
+  *     crosses the wire; `sync.PartitionedReader`, for the JDBC sync
+  *     read and delta repair's read, sized by [[numSlices]]);
   *   - [[quantileCuts]] from approximate quantiles of a DataFrame
-  *     already at hand (the file-source path).
+  *     already at hand (file sources, and JDBC repair of a table too
+  *     small for pushed cuts).
   * Both give near-equal slice sizes under key skew — equal-width
   * min/max splitting would not. Composite PKs (cmd/root.go:334-357)
   * slice on the leading column; rows sharing one leading-key value stay
@@ -89,15 +94,9 @@ object KeyRangeSlicer {
   }
 
   /** Quantile-derived cut values over a numeric lead key of a
-    * DataFrame already at hand; empty when the key is non-numeric or
-    * one slice suffices. */
+    * DataFrame already at hand; empty when one slice suffices. */
   def quantileCuts(df: DataFrame, lead: String, numSlices: Int): Seq[Long] = {
     if (numSlices <= 1) return Seq.empty
-    val isNumeric = df.schema(lead).dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case _                                         => false
-    }
-    if (!isNumeric) return Seq.empty
     val probs = (1 until numSlices).map(_.toDouble / numSlices).toArray
     df.select(col(lead).cast("double"))
       .na.drop()

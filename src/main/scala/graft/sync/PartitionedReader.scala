@@ -13,9 +13,13 @@ import graft.partition.KeyRangeSlicer
   * each an O(1) index range scan on the source database, together an
   * exact partition of the keyspace.
   *
-  * All planning statistics are computed BY the source database and only
-  * aggregates cross the wire — no Spark-side scan happens before the
-  * parallel extract:
+  * This is the one code that knows how a JDBC table is planned and
+  * read: the sync read and delta repair's read are each one call to
+  * [[read]]. The key is [[Slices.forRead]]'s, decided from the plain
+  * read's schema: only a numeric lead PK is probed and cut; any other
+  * PK, or none, is one scan and runs no probe. All planning statistics
+  * are computed BY the source database and only aggregates cross the
+  * wire — no Spark-side scan happens before the parallel extract:
   *   1. one `COUNT(*), MIN(pk), MAX(pk)` round trip (index-only on the
   *      PK) sizes the slice count;
   *   2. one pushed-down equal-width bucket histogram
@@ -24,12 +28,11 @@ import graft.partition.KeyRangeSlicer
   *      slices. SQL uses only FLOOR/arithmetic/GROUP BY — portable
   *      across MySQL-wire targets and Derby (the test sink).
   *
-  * `JdbcCatalog` picks the slice count: for the sync read,
-  * ceil(rows / pageSize) capped at [[MaxSlices]], which doubles as the
-  * connection ceiling per table. Delta repair plans only a numeric lead
-  * PK ([[Slices.forRead]]; other keys cost no probe): a fixed count of
-  * diff slices, read at the sync's count, each read task a run of
-  * adjacent diff slices ([[Slices.coarsen]]).
+  * The sync read runs ceil(rows / pageSize) tasks capped at
+  * [[MaxSlices]], which doubles as the connection ceiling per table;
+  * delta repair diffs a fixed count of slices, read at the sync's
+  * count, each read task a run of adjacent diff slices
+  * ([[Slices.coarsen]]).
   */
 object PartitionedReader {
 
@@ -37,31 +40,50 @@ object PartitionedReader {
     * maxOpen=60 pool (cmd/app.go:53). */
   val MaxSlices = 60
 
-  /** The slice planner: one `COUNT(*), MIN, MAX` round trip, then
-    * adaptive histogram cuts for `slices(rowCount)` slices, all on one
-    * planning connection. None when there is no lead key (no PK: one
-    * full scan, reference S6), the key is non-numeric, the table is
-    * empty or spans a single key, or one slice suffices. */
-  private[graft] def plan(endpoint: Endpoint, table: String, lead: Option[String])(
-      slices: Long => Int): Option[Slices] =
-    lead.flatMap { lead =>
-      endpoint.withConnection { conn =>
-        queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table")
-          .headOption match {
-          case Some(Seq(cnt: Number, mn: Number, mx: Number)) =>
-            val n = slices(cnt.longValue())
-            val (lo, hi) = (mn.longValue(), mx.longValue())
-            if (n <= 1 || hi <= lo) None
-            else Some(KeyRangeSlicer.adaptiveCuts(
-              histFetcher(conn, lead, table), lo, hi, n, math.max(64, n * 8)))
-              .filter(_.nonEmpty).map(new Slices(SliceKey.Lead(lead), _))
-          case _ => None // empty table or non-numeric PK
-        }
+  /** The one JDBC table read, for the sync and delta repair alike. The
+    * key is [[Slices.forRead]]'s: a numeric lead PK is probed and cut by
+    * [[plan]], any other PK, or none, is one scan with no probe. A cut
+    * table is read in ceil(rows / pageSize) tasks, at most `maxSlices`.
+    * The sync read (`diffSlices` None) returns those slices; repair cuts
+    * a fixed `diffSlices` count, read coarsened, and under 2·`diffSlices`
+    * rows leaves the cuts to the key rule's quantile fallback. */
+  private[graft] def read(
+      spark: SparkSession,
+      endpoint: Endpoint,
+      table: String,
+      pk: Seq[String],
+      pageSize: Long,
+      maxSlices: Int,
+      diffSlices: Option[Int]): (DataFrame, Option[Slices]) =
+    Slices.forRead(scan(spark, endpoint, table, None), pk, diffSlices.getOrElse(1)) { lead =>
+      def reads(rows: Long) = KeyRangeSlicer.numSlices(rows, pageSize, maxSlices)
+      val (rows, cut) = plan(endpoint, table, lead)(count =>
+        diffSlices.fold(reads(count))(n => if (count < 2L * n) 1 else n))
+      cut.map(s => scan(spark, endpoint, table, Some(s.coarsen(reads(rows)))) -> s)
+    }
+
+  /** The slice planner for a numeric `lead`: one `COUNT(*), MIN, MAX`
+    * round trip, then adaptive histogram cuts for `slices(rows)` slices,
+    * all on one planning connection. Returns the row count with the
+    * cuts; None when the table is empty or spans a single key, or one
+    * slice suffices. */
+  private[graft] def plan(endpoint: Endpoint, table: String, lead: String)(
+      slices: Long => Int): (Long, Option[Slices]) =
+    endpoint.withConnection { conn =>
+      queryRows(conn, s"SELECT COUNT(*), MIN($lead), MAX($lead) FROM $table").head match {
+        case Seq(cnt: Number, mn: Number, mx: Number) =>
+          val (rows, lo, hi) = (cnt.longValue(), mn.longValue(), mx.longValue())
+          val n = slices(rows)
+          // adaptiveCuts runs no histogram query for one slice or a one-key span
+          val cuts = KeyRangeSlicer.adaptiveCuts(
+            histFetcher(conn, lead, table), lo, hi, n, math.max(64, n * 8))
+          rows -> Some(cuts).filter(_.nonEmpty).map(new Slices(SliceKey.Lead(lead), _))
+        case _ => 0L -> None // empty: MIN and MAX are NULL
       }
     }
 
   /** One JDBC read: a task per slice, else one full scan. */
-  private[graft] def scan(
+  private def scan(
       spark: SparkSession,
       endpoint: Endpoint,
       table: String,

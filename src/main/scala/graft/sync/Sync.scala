@@ -157,17 +157,17 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
   }
 }
 
-/** JDBC sink: truncate-overwrite with batched writes. `numPartitions`
-  * caps concurrent connections (reference pool ceiling, cmd/app.go:74-76);
-  * `batchsize` is its batchRowSize. `truncate=true` keeps the target
-  * table's DDL (the reference never re-creates on data load either).
-  */
 /** The fixture/test parquet sink — [[FileSink]] with its default
   * format, kept as a named constructor for the many call sites. */
 object ParquetSink {
   def apply(dir: String): FileSink = FileSink(dir)
 }
 
+/** JDBC sink: truncate-overwrite with batched writes. `numPartitions`
+  * caps concurrent connections (reference pool ceiling, cmd/app.go:74-76);
+  * `batchsize` is its batchRowSize. `truncate=true` keeps the target
+  * table's DDL (the reference never re-creates on data load either).
+  */
 final case class JdbcSink(
     endpoint: Endpoint,
     batchRowSize: Int = 1000,
@@ -320,14 +320,9 @@ object Sync {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.append(Normalize.lowercaseColumns(batch), table)
-      }
-      .trigger(trigger)
-      .start()
+    graft.streaming.MicroBatches.start(stream, checkpointDir, trigger) { (batch, _) =>
+      sink.append(Normalize.lowercaseColumns(batch), table)
+    }
 
   /** Custom-SQL mode (reference `-s`, cmd/root.go:95-96 + example.yml
     * `tables:`): each configured table is loaded from its list of

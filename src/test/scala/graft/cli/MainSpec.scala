@@ -220,6 +220,110 @@ class MainSpec extends SparkSpec {
     assert(Main.run(Array("compare", "--config", cfg, "--content"), spark) == 0)
   }
 
+  test("sync and compare reports: header, rows, summary line and exit code (golden)") {
+    val out = Files.createTempDirectory("graft_cli_golden").toString
+    def config(exclude: String, watermarks: String) = writeCfg(
+      s"""src:
+         |  url: parquet:$sf0001
+         |dest:
+         |  url: parquet:$out
+         |exclude: lineitem orders events documents embeddings part customer $exclude
+         |$watermarks
+         |""".stripMargin)
+    // `synced` loads nation and region; `wide` also lists supplier,
+    // which is never synced, so each compare has a failing row
+    val synced = config("supplier", "watermarks.nation: n_nationkey")
+    val wide = config("", "watermarks.nation: n_nationkey\nwatermarks.supplier: s_suppkey")
+    /** Exit code and stdout, the elapsed times masked: the summary's
+      * seconds, and the sync table's ElapsedMs cells (always 9 wide,
+      * the header's width). */
+    def run(args: String*): (Int, String) = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val rc = Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(
+        Main.run(args.toArray, spark))
+      rc -> buf.toString("UTF-8")
+        .replaceAll("""elapsed \d+\.\d\ds""", "elapsed #s")
+        .replaceAll("""(?m)^(\| \w+ +\| -?\d+ +\| )[\d ]{9}( \| )""", "$1#########$2")
+    }
+    val got = Seq(
+      run("sync", "--config", synced),
+      run("sync", "--delta", "--config", synced),
+      run("compare", "--freshness", "--config", synced),
+      run("compare", "--freshness", "--config", wide),
+      run("compare", "--schema", "--config", synced),
+      run("compare", "--schema", "--config", wide),
+      run("compare", "--config", synced),
+      run("compare", "--content", "--config", wide))
+    def lines(ls: String*): String = ls.map(_ + "\n").mkString
+    val expected = Seq(
+      0 -> lines(
+        "+--------+------+-----------+--------+",
+        "| Object | Rows | ElapsedMs | Result |",
+        "+--------+------+-----------+--------+",
+        "| nation | 25   | ######### | OK     |",
+        "| region | 5    | ######### | OK     |",
+        "+--------+------+-----------+--------+",
+        "Sync finished, elapsed #s, failed 0"),
+      0 -> lines(
+        "+--------+--------+---------+------------+--------+",
+        "| Object | Slices | Changed | RowsCopied | Result |",
+        "+--------+--------+---------+------------+--------+",
+        "| nation | 26     | 0       | 0          | OK     |",
+        "| region | 6      | 0       | 0          | OK     |",
+        "+--------+--------+---------+------------+--------+",
+        "Delta sync finished, elapsed #s, failed 0"),
+      0 -> lines(
+        "+--------+-------------+--------+---------+--------+",
+        "| Table  | Watermark   | SrcMax | DestMax | InSync |",
+        "+--------+-------------+--------+---------+--------+",
+        "| nation | n_nationkey | 24     | 24      | YES    |",
+        "+--------+-------------+--------+---------+--------+",
+        "Freshness compare finished, elapsed #s, 0 lagging / 1 tables"),
+      1 -> lines(
+        "+----------+-------------+--------+---------+--------+",
+        "| Table    | Watermark   | SrcMax | DestMax | InSync |",
+        "+----------+-------------+--------+---------+--------+",
+        "| nation   | n_nationkey | 24     | 24      | YES    |",
+        "| supplier | s_suppkey   | 9      | -       | NO     |",
+        "+----------+-------------+--------+---------+--------+",
+        "Freshness compare finished, elapsed #s, 1 lagging / 2 tables"),
+      0 -> lines(
+        "schema compare: 2 tables, no drift",
+        "Schema compare finished, elapsed #s, 0 drifting / 2 tables"),
+      1 -> lines(
+        "+----------+--------+---------------+---------+----------+",
+        "| Table    | Column | Status        | SrcType | DestType |",
+        "+----------+--------+---------------+---------+----------+",
+        "| supplier | *      | table_missing | -       | -        |",
+        "+----------+--------+---------------+---------+----------+",
+        "Schema compare finished, elapsed #s, 1 drifting / 3 tables"),
+      0 -> lines(
+        "+--------+------------+----------+-------------+------+",
+        "| Table  | SourceRows | DestRows | DestIsExist | IsOk |",
+        "+--------+------------+----------+-------------+------+",
+        "| nation | 25         | 25       | YES         | YES  |",
+        "| region | 5          | 5        | YES         | YES  |",
+        "+--------+------------+----------+-------------+------+",
+        "Compare finished, elapsed #s"),
+      1 -> lines(
+        "+----------+------------+----------+-------------+------+",
+        "| Table    | SourceRows | DestRows | DestIsExist | IsOk |",
+        "+----------+------------+----------+-------------+------+",
+        "| nation   | 25         | 25       | YES         | YES  |",
+        "| region   | 5          | 5        | YES         | YES  |",
+        "| supplier | 10         | -1       | NO          | NO   |",
+        "+----------+------------+----------+-------------+------+",
+        "Failed tables:",
+        "+----------+------------+----------+",
+        "| Table    | SourceRows | DestRows |",
+        "+----------+------------+----------+",
+        "| supplier | 10         | -1       |",
+        "+----------+------------+----------+",
+        "Compare finished, elapsed #s"))
+    got.zip(expected).foreach { case (g, e) => assert(g == e) }
+    assert(got.length == expected.length)
+  }
+
   test("index build + append round-trip curates increments against the persisted index") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -204,7 +204,7 @@ class DeltaSyncSpec extends SparkSpec {
     assert(DeltaSync.syncDelta(spark, srcCat, sink, t, numSlices = 10).ok)
     val slices = key match {
       case SliceKey.Lead(pk) =>
-        PartitionedReader.plan(Endpoint(srcUrl), t, Some(pk))(_ => 10).get
+        PartitionedReader.plan(Endpoint(srcUrl), t, pk)(_ => 10)._2.get
       case _ => new Slices(key, HashKey.cuts(10))
     }
     val rowOf = srcCat.read(spark, t).toDF("id", "v")
