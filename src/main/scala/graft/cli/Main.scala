@@ -1112,7 +1112,9 @@ object Main {
             0
           case (Some("append"), Some(dir), Some(t)) =>
             val before =
-              try spark.read.parquet(s"$dir/codes").count() catch { case _: Throwable => 0L }
+              if (graft.operators.StagedSwap.exists(spark, s"$dir/codes"))
+                spark.read.parquet(s"$dir/codes").count()
+              else 0L
             val inc = catalogFor(cfg.src).read(spark, t)
             graft.streaming.VectorIngest
               .appendBatch(inc, col(vecC), col(idC), dir)

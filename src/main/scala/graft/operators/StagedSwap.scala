@@ -1,30 +1,39 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** The ONE implementation of the crash-safe directory swap every
   * persisted artifact in this repo rotates through (ANN codes, media
-  * hashes, HLL registers, plain tables): write the replacement aside,
-  * move the live dir out, move the replacement in, delete the old —
-  * with explicit recovery semantics for every crash window:
+  * hashes, HLL registers, histogram and digest sidecars, the sync
+  * ledger, plain tables): write the replacement aside, move the live
+  * dir out, move the replacement in, delete the old — with explicit
+  * recovery semantics for every crash window:
   *
   *   - crash before the first rename: live untouched, `tmp` is
   *     garbage the next swap overwrites;
   *   - crash between rename-out and rename-in: live is MISSING but
-  *     `old` holds everything — [[restoreIfInterrupted]] adopts it
-  *     (callers run it before reading, so the artifact "never
-  *     vanishes" is true across restarts, not just within a run);
+  *     `old` holds everything — [[restoreIfInterrupted]] adopts it;
   *   - crash after rename-in: `old` is a stale leftover the next
   *     swap deletes.
   *
-  * Extracted after review: four hand-rolled copies of this dance had
-  * drifted into subtly different recovery behavior (one silently
-  * RESTARTED a sketch when the live dir was missing mid-window).
+  * The rule: a WRITER adopts before it decides or writes. Every
+  * writer goes through [[exists]] (adopt, then "is it there?" — the
+  * question an appender asks before it bootstraps a fresh artifact),
+  * [[rewrite]] (adopt, stage, swap) and [[delete]] (every name the
+  * artifact can live under), so an append after a killed compaction
+  * extends the stranded history instead of starting a one-batch
+  * artifact beside it that the next swap's `_old` cleanup would
+  * destroy. Plain READERS (index probes, `FileSink.append`,
+  * `FileCatalog.tableExists`) do not adopt: a reader that renames
+  * `_old` back can race a writer's rename-in, which is why the
+  * connected-components store — the one caller still on the
+  * primitives — recovers under its lock.
   */
 object StagedSwap {
 
   def oldPath(live: Path) = new Path(live.toString + "_old")
-  def tmpPath(live: Path) = new Path(live.toString + "_staging")
+  private[operators] def tmpPath(live: Path) = new Path(live.toString + "_staging")
 
   /** Pre-extraction suffix convention (the hand-rolled copies used
     * `__old`/`__compact`): an index compacted — and interrupted — by
@@ -43,7 +52,7 @@ object StagedSwap {
     * old data back. Also adopts the legacy `__old` naming, so a swap
     * interrupted under a pre-extraction build restores too. Returns
     * true when a restore happened. */
-  def restoreIfInterrupted(fs: FileSystem, live: Path): Boolean = {
+  private[operators] def restoreIfInterrupted(fs: FileSystem, live: Path): Boolean = {
     if (fs.exists(live)) false
     else Seq(oldPath(live), legacyOldPath(live)).find(fs.exists) match {
       case Some(src) =>
@@ -98,7 +107,7 @@ object StagedSwap {
     * On failure the live dir is restored — the artifact never
     * vanishes within the run; [[restoreIfInterrupted]] covers the
     * across-restart window. */
-  def swapIn(fs: FileSystem, live: Path, tmp: Path): Unit = {
+  private[operators] def swapIn(fs: FileSystem, live: Path, tmp: Path): Unit = {
     val old = oldPath(live)
     fs.delete(old, true)
     // One-time migration: stale legacy-suffix leftovers (a compact
@@ -114,5 +123,53 @@ object StagedSwap {
     }
     fs.delete(old, true)
     ()
+  }
+
+  private def resolve(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val live = new Path(path)
+    (live.getFileSystem(spark.sessionState.newHadoopConf()), live)
+  }
+
+  /** Adopt an interrupted swap, then report whether the artifact at
+    * `path` is there. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, live) = resolve(spark, path)
+    restoreIfInterrupted(fs, live)
+    fs.exists(live)
+  }
+
+  /** Adopt an interrupted swap, let `write` fill the staging dir (its
+    * argument), then swap it in. `write` may read the live artifact:
+    * it stays in place until the staging dir is complete. */
+  def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val (fs, live) = resolve(spark, path)
+    restoreIfInterrupted(fs, live)
+    val tmp = tmpPath(live)
+    write(tmp.toString)
+    swapIn(fs, live, tmp)
+  }
+
+  /** Remove the artifact under every name it can live under — live,
+    * staging, `_old` and the legacy `__old`/`__compact` — so no later
+    * adoption can resurrect it. */
+  def delete(spark: SparkSession, path: String): Unit = {
+    val (fs, live) = resolve(spark, path)
+    Seq(live, tmpPath(live), oldPath(live), legacyOldPath(live), legacyTmpPath(live))
+      .foreach(fs.delete(_, true))
+  }
+
+  /** (files, bytes) of the data files under `path`, recursively: every
+    * file but Hadoop's hidden `_`/`.`-prefixed markers. */
+  def dataFiles(spark: SparkSession, path: String): (Long, Long) = {
+    val (fs, live) = resolve(spark, path)
+    val it = fs.listFiles(live, true)
+    var n = 0L
+    var b = 0L
+    while (it.hasNext) {
+      val f = it.next()
+      val name = f.getPath.getName
+      if (!name.startsWith("_") && !name.startsWith(".")) { n += 1; b += f.getLen }
+    }
+    (n, b)
   }
 }

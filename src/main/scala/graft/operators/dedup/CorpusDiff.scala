@@ -3,6 +3,8 @@ package graft.operators.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.StagedSwap
+
 /** Corpus snapshot diff — the content-level "what changed between v1
   * and v2" report a dataset release needs (and the corpus-scale
   * sibling of the reference's `compare --content` table checksum,
@@ -131,22 +133,13 @@ object CorpusDiff {
   /** [[writeManifest]] from an already-digested snapshot. */
   def writeManifestFrom(digested: DataFrame, dir: String): Long = {
     val spark = digested.sparkSession
-    val live = new org.apache.hadoop.fs.Path(manifestPath(dir))
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, live)
-    val tmp = graft.operators.StagedSwap.tmpPath(live)
-    digested.write.mode("overwrite").parquet(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, live, tmp)
+    StagedSwap.rewrite(spark, manifestPath(dir))(digested.write.mode("overwrite").parquet)
     spark.read.parquet(manifestPath(dir)).count()
   }
 
   def manifestExists(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(manifestPath(dir))
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, live)
-    fs.exists(live)
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
+    StagedSwap.exists(spark, manifestPath(dir))
 
   /** Diff a new snapshot against the persisted manifest — the corpus
     * is read once (digest projection), the manifest is sidecar-sized;

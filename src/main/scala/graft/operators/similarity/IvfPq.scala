@@ -3,6 +3,8 @@ package graft.operators.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.StagedSwap
+
 /** IVF × PQ — the billion-scale ANN SERVING composition the two
   * pieces exist to form: [[PortableIvf]] prunes WHICH files a query
   * reads (codes persist parquet-partitioned by coarse cell, so a
@@ -69,23 +71,13 @@ object IvfPq {
     * it as the out-of-band maintenance job, not under a live writer.
     * Returns (files before, files after). */
   def compactIndex(spark: SparkSession, dir: String): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val codes = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val fs = codes.getFileSystem(conf)
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, codes)
-    val tmp = graft.operators.StagedSwap.tmpPath(codes)
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = parquetFiles(codes)
-    spark.read.parquet(codes.toString)
+    val codes = s"$dir/codes"
+    StagedSwap.exists(spark, codes) // adopt before counting
+    val before = StagedSwap.dataFiles(spark, codes)._1
+    StagedSwap.rewrite(spark, codes)(spark.read.parquet(codes)
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, codes, tmp)
-    (before, parquetFiles(codes))
+      .write.mode("overwrite").partitionBy("cell").parquet)
+    (before, StagedSwap.dataFiles(spark, codes)._1)
   }
 
   /** ADC top-k against a persisted index: restrict to the `nprobe`

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.StagedSwap
 import graft.operators.text.PortableHll
 
 /** Streaming distinct-count maintenance: a document stream feeds the
@@ -39,24 +40,18 @@ object CardinalityIngest {
     val terms = batch.select(
       col("source"), explode(PortableHll.grams(text)).as("term"))
     val batchRegs = PortableHll.registers(terms, col("term"), Seq("source"))
-    val regs = new org.apache.hadoop.fs.Path(regsPath(dir))
-    val fs = regs.getFileSystem(spark.sessionState.newHadoopConf())
     // a crash between the swap's renames leaves the live dir missing
-    // and the history in _old; WITHOUT this adoption the next fold
-    // would silently RESTART the sketch from one batch (review
-    // finding) — now the window is recovered, not forgotten
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, regs)
+    // and the history in _old; WITHOUT the adoption in `exists` the
+    // next fold would silently RESTART the sketch from one batch
     val merged =
-      if (fs.exists(regs))
+      if (exists(spark, dir))
         PortableHll.mergeRegisters(
-          spark.read.parquet(regs.toString).unionByName(batchRegs),
+          spark.read.parquet(regsPath(dir)).unionByName(batchRegs),
           Seq("source"))
       else batchRegs
-    val tmp = graft.operators.StagedSwap.tmpPath(regs)
     // the merged plan READS the live registers, so it must materialize
     // into the staging dir before the live dir can move aside
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, regs, tmp)
+    StagedSwap.rewrite(spark, regsPath(dir))(merged.write.mode("overwrite").parquet)
   }
 
   /** Maintain the registers from a stream. AvailableNow by default —
@@ -76,20 +71,14 @@ object CardinalityIngest {
     * sidecars), adopting an interrupted swap first — mirrors
     * [[HistogramIngest.exists]] so the CLI can print a usage hint
     * instead of a raw AnalysisException. */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val regs = new org.apache.hadoop.fs.Path(regsPath(dir))
-    val fs = regs.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, regs)
-    fs.exists(regs)
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    StagedSwap.exists(spark, regsPath(dir))
 
   /** Serve the current per-source estimates from the sidecar alone —
     * (source, s_scaled, zero_registers, raw_est), the qt48 columns,
     * with zero contact with the ingested corpus. */
   def estimates(spark: SparkSession, dir: String): DataFrame = {
-    val regs = new org.apache.hadoop.fs.Path(regsPath(dir))
-    graft.operators.StagedSwap.restoreIfInterrupted(
-      regs.getFileSystem(spark.sessionState.newHadoopConf()), regs)
+    exists(spark, dir) // adopts an interrupted swap before the read
     PortableHll.estimate(
       spark.read.parquet(regsPath(dir)), Seq("source"))
   }

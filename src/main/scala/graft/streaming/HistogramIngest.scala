@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.PortableHistogram
+import graft.operators.{PortableHistogram, StagedSwap}
 
 /** Streaming quantile-sketch maintenance: an event stream feeds the
   * persisted [[PortableHistogram]] bucket table per micro-batch, so
@@ -42,12 +42,8 @@ object HistogramIngest {
       batch: DataFrame, value: Column, dir: String, batchId: Long,
       p: Int = 3): Unit = {
     val spark = batch.sparkSession
-    val live = new org.apache.hadoop.fs.Path(histPath(dir))
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, live)
-
     val existing =
-      if (fs.exists(live)) Some(spark.read.parquet(live.toString))
+      if (exists(spark, dir)) Some(spark.read.parquet(histPath(dir)))
       else None
     val replay = existing.exists(t =>
       !t.where(col("kind") === "batch" && col("key") === batchId).isEmpty)
@@ -64,9 +60,7 @@ object HistogramIngest {
           .groupBy("kind", "key").agg(sum("n").as("n"))
       case None => batchRows
     }
-    val tmp = graft.operators.StagedSwap.tmpPath(live)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, live, tmp)
+    StagedSwap.rewrite(spark, histPath(dir))(merged.write.mode("overwrite").parquet)
   }
 
   /** Maintain the sketch from a stream. AvailableNow by default. */
@@ -84,26 +78,16 @@ object HistogramIngest {
   /** Does the sidecar exist? Hadoop-FS based like everything else in
     * this family (a java.io.File check would always be false for
     * hdfs:///s3a:// sidecars). */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(histPath(dir))
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, live)
-    fs.exists(live)
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    StagedSwap.exists(spark, histPath(dir))
 
-  /** Destroy the sidecar COMPLETELY — live dir, any stranded _old
-    * from an interrupted swap, and any staging dir. A wipe that
-    * removed only the live dir would let the next fold's
-    * restoreIfInterrupted resurrect stale history and stack fresh
-    * counts on top of it (the exact corruption rebuild exists to
-    * prevent). */
-  def wipe(spark: SparkSession, dir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(histPath(dir))
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(live, true)
-    fs.delete(graft.operators.StagedSwap.oldPath(live), true)
-    fs.delete(graft.operators.StagedSwap.tmpPath(live), true)
-  }
+  /** Destroy the sidecar COMPLETELY — live dir, any stranded `_old` or
+    * legacy `__old` from an interrupted swap, and any staging dir. A
+    * wipe that left a stranded copy would let the next fold adopt it
+    * and stack fresh counts on stale history (the exact corruption
+    * rebuild exists to prevent). */
+  def wipe(spark: SparkSession, dir: String): Unit =
+    StagedSwap.delete(spark, histPath(dir))
 
   /** The next unused ledger batch id for BATCH (CLI) appends — drawn
     * from the NEGATIVE id space (-1, -2, …) so a manual fold can never
@@ -114,8 +98,7 @@ object HistogramIngest {
     * Fresh dir => -1. */
   def nextBatchId(spark: SparkSession, dir: String): Long = {
     if (!exists(spark, dir)) return -1L
-    val live = new org.apache.hadoop.fs.Path(histPath(dir))
-    spark.read.parquet(live.toString)
+    spark.read.parquet(histPath(dir))
       .where(col("kind") === "batch" && col("key") < 0)
       .agg(coalesce(min("key"), lit(0L)))
       .head().getLong(0) - 1L
@@ -123,10 +106,8 @@ object HistogramIngest {
 
   /** The current sketch: (bucket_lo, n), served from the sidecar. */
   def sketch(spark: SparkSession, dir: String): DataFrame = {
-    val live = new org.apache.hadoop.fs.Path(histPath(dir))
-    graft.operators.StagedSwap.restoreIfInterrupted(
-      live.getFileSystem(spark.sessionState.newHadoopConf()), live)
-    spark.read.parquet(live.toString)
+    exists(spark, dir) // adopts an interrupted swap before the read
+    spark.read.parquet(histPath(dir))
       .where(col("kind") === "bucket")
       .select(col("key").as("bucket_lo"), col("n"))
   }

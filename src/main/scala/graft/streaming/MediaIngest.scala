@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.StagedSwap
 import graft.operators.multimodal.PerceptualHash
 
 /** Streaming MEDIA ingest with perceptual-duplicate rejection — the
@@ -178,11 +179,11 @@ object MediaIngest {
     require(maxHamming < bands,
       s"exact recall needs maxHamming < bands (got $maxHamming >= $bands)")
     implicit val spark: SparkSession = batch.sparkSession
-    val hashesPath = new org.apache.hadoop.fs.Path(s"$indexDir/hashes")
-    val fs = hashesPath.getFileSystem(spark.sessionState.newHadoopConf())
     // mode guard BEFORE the decode (review finding: failing after
-    // Barrier'd hashing pays the most expensive stage for nothing)
-    val bootstrap = !fs.exists(hashesPath)
+    // Barrier'd hashing pays the most expensive stage for nothing);
+    // `exists` adopts a killed compaction's `_old` first, so the
+    // pre-crash hashes keep guarding instead of a one-batch bootstrap
+    val bootstrap = !StagedSwap.exists(spark, s"$indexDir/hashes")
     if (!bootstrap) requireMode(spark, indexDir, audio)
     // Barrier: the decode is the expensive stage and `rows` feeds the
     // gate probe, the key explode, the anti-join and the index append —
@@ -287,21 +288,15 @@ object MediaIngest {
     * rewrite is a coalesce of the same (id, dhash) rows. */
   def compactIndex(spark: SparkSession, dir: String,
       bands: Int = DefaultBands): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val hashes = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    val fs = hashes.getFileSystem(conf)
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, hashes)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).count(f => f.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles(hashes)
-    val tmp = graft.operators.StagedSwap.tmpPath(hashes)
-    val n = math.max(1L, spark.read.parquet(s"$dir/hashes").count() / 4000000L)
-    spark.read.parquet(s"$dir/hashes")
+    val hashes = s"$dir/hashes"
+    StagedSwap.exists(spark, hashes) // adopt before counting
+    val before = StagedSwap.dataFiles(spark, hashes)._1
+    val n = math.max(1L, spark.read.parquet(hashes).count() / 4000000L)
+    StagedSwap.rewrite(spark, hashes)(spark.read.parquet(hashes)
       .coalesce(math.min(n, Int.MaxValue.toLong).toInt)
-      .write.mode("overwrite").parquet(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, hashes, tmp)
+      .write.mode("overwrite").parquet)
     writeBandBloom(spark, dir, bands)
-    (before, dataFiles(hashes))
+    (before, StagedSwap.dataFiles(spark, hashes)._1)
   }
 
   /** Streaming wrapper: admitted payload rows append to `sink.table`;

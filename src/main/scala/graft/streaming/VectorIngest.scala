@@ -71,13 +71,13 @@ object VectorIngest {
       cb: ProductQuantizer.Codebook = ProductQuantizer.DefaultCodebook): Unit = {
     val spark = batch.sparkSession
     val rows = batch.select(id.as("id"), vec.as("v")).dropDuplicates("id")
-    val codes = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    val fs = codes.getFileSystem(spark.sessionState.newHadoopConf())
     // the missing-path case is checked EXPLICITLY: any other failure
     // reading the index (schema mismatch, corrupt listing) must
     // propagate — swallowing it would skip the idempotence guard and
-    // append duplicate ids
-    if (!fs.exists(codes)) {
+    // append duplicate ids. `exists` adopts a killed compaction's
+    // `codes_old` first: a one-batch bootstrap beside it would be
+    // deleted, with every pre-crash vector, by the next compaction
+    if (!graft.operators.StagedSwap.exists(spark, s"$indexDir/codes")) {
       IvfPq.appendIndex(rows, col("v"), col("id"), indexDir, cb)
       writeIdBloom(spark, indexDir)
       return

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.catalog.{Catalog, FileCatalog, JdbcCatalog}
 import graft.config.{Endpoint, SyncConfig}
+import graft.operators.StagedSwap
 
 /** Column-name normalization, mirroring the reference's forced
   * lower-casing of every column (cmd/root.go:313-314). */
@@ -46,36 +47,26 @@ sealed trait Sink {
 /** The delta-repair statements as PURE renderers, split out of the
   * JDBC choreography so every dialect branch is decidable by unit test
   * (`DeltaSyncSpec`): the live Derby specs exercise the server-side
-  * numeric DELETE and the generic scratch-table branch end-to-end; no
-  * second embedded JDBC engine ships with the build, so the MySQL
-  * hash-key DELETE and the generic statements' SQL-standard shape
-  * (CREATE TABLE AS .. WITH NO DATA + EXISTS-join DELETE — valid on
-  * H2/PostgreSQL/Derby) are pinned there as strings. */
+  * numeric DELETE and the generic keyed DELETE end-to-end; no second
+  * embedded JDBC engine ships with the build, so the MySQL hash-key
+  * DELETE and the keyed DELETE's plain `k = ?` shape are pinned there
+  * as strings. */
 private[sync] object DeltaRepairSql {
 
   /** ONE server-side DELETE of every range (at least one) — the repair
     * ranges never leave the server. Several ranges are parenthesised
     * and OR-joined. None when the dialect cannot compute the key: the
-    * caller takes the scratch-table branch below. */
+    * caller takes the keyed branch below. */
   def rangeDelete(url: String, table: String, ranges: Slices.Range*): Option[String] =
     Some(ranges.flatMap(_.sql(url))).filter(_.size == ranges.size).map {
       case Seq(p) => s"DELETE FROM $table WHERE $p"
       case ps     => s"DELETE FROM $table WHERE " + ps.map(p => s"($p)").mkString(" OR ")
     }
 
-  /** Generic branch step 1: clone the PK columns' exact target types
-    * (a Spark-CREATED scratch would map strings to CLOB, which the
-    * server can't compare against the target's VARCHAR keys). */
-  def scratchClone(table: String, scratch: String, pkCols: Seq[String]): String =
-    s"CREATE TABLE $scratch AS SELECT ${pkCols.mkString(", ")} " +
-      s"FROM $table WITH NO DATA"
-
-  /** Generic branch step 2 (after the executor-side key load): one
-    * server-side keyed DELETE joining the scratch against the target. */
-  def scratchKeyedDelete(table: String, scratch: String, pkCols: Seq[String]): String = {
-    val joinOn = pkCols.map(c => s"d.$c = $table.$c").mkString(" AND ")
-    s"DELETE FROM $table WHERE EXISTS (SELECT 1 FROM $scratch d WHERE $joinOn)"
-  }
+  /** Generic branch: the one-row DELETE an executor batches for every
+    * doomed key, its PK columns bound as parameters. */
+  def keyedDelete(table: String, pkCols: Seq[String]): String =
+    s"DELETE FROM $table WHERE " + pkCols.map(c => s"$c = ?").mkString(" AND ")
 }
 
 /** File-directory sink, one `<table>.<format>` dir per table.
@@ -128,32 +119,16 @@ final case class FileSink(dir: String, format: String = "parquet") extends Sink 
     * table, never neither. Returns (files before, files after). */
   def compactTable(
       spark: SparkSession, table: String, targetBytes: Long): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val live = new org.apache.hadoop.fs.Path(path(table))
-    val fs = live.getFileSystem(conf)
-    graft.operators.StagedSwap.restoreIfInterrupted(fs, live)
-    require(fs.exists(live), s"no such table: ${path(table)}")
-    def dataFiles(p: org.apache.hadoop.fs.Path): (Long, Long) = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      var b = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_")) { n += 1; b += f.getLen }
-      }
-      (n, b)
-    }
-    val (before, bytes) = dataFiles(live)
+    require(StagedSwap.exists(spark, path(table)), s"no such table: ${path(table)}")
+    val (before, bytes) = StagedSwap.dataFiles(spark, path(table))
     val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val tmp = graft.operators.StagedSwap.tmpPath(live)
     // the rewrite lands in the staging dir while the live dir is still
     // in place, so the read lineage stays valid without a Barrier
-    readBack(spark, table)
+    StagedSwap.rewrite(spark, path(table))(readBack(spark, table)
       .repartition(parts)
       .write.mode(SaveMode.Overwrite).options(writeOpts)
-      .format(format).save(tmp.toString)
-    graft.operators.StagedSwap.swapIn(fs, live, tmp)
-    (before, dataFiles(live)._1)
+      .format(format).save)
+    (before, StagedSwap.dataFiles(spark, path(table))._1)
   }
 }
 
@@ -195,33 +170,47 @@ final case class JdbcSink(
     Normalize.lowercaseColumns(catalog.read(spark, table))
   /** Range repair. Where the dialect computes the key (a numeric PK
     * anywhere; the md5 [[HashKey]] on MySQL-wire) every range goes in
-    * ONE server-side DELETE, its ranges OR-joined. Otherwise (Derby in
-    * tests) the target is read back and filtered to the dirty ranges in
-    * Spark; the doomed KEYS then land in a scratch table through the
-    * executor-side JDBC writer (never visiting the driver) and ONE
-    * server-side keyed DELETE joins them against the target before the
-    * scratch drops. That read-back is one full target scan per repaired
-    * table — the price of a dialect with no server-side md5. The
-    * replacement rows are then batch-appended in one job. */
+    * ONE server-side DELETE, its ranges OR-joined. Otherwise (a string
+    * or composite PK on Derby, in tests) the target is read back and
+    * filtered to the dirty ranges in Spark, and each partition of the
+    * doomed KEYS runs one batched [[DeltaRepairSql.keyedDelete]] from
+    * its executor, `batchRowSize` keys a batch — one Spark job, the
+    * keys never visit the driver, and no table is created or dropped
+    * on the replica. That read-back is one full target scan per
+    * repaired table — the price of a dialect with no server-side md5.
+    * The replacement rows are then batch-appended in one job. */
   override def replaceRange(
       spark: SparkSession, df: DataFrame, table: String, ranges: Seq[Slices.Range]): Unit = {
-    endpoint.withConnection { conn =>
-      val st = conn.createStatement()
-      try DeltaRepairSql.rangeDelete(endpoint.url, table, ranges: _*) match {
-        case Some(delete) => st.executeUpdate(delete)
-        case None =>
-          val pkCols = ranges.head.key.pkCols
-          val doomed = readBack(spark, table)
-            .filter(Slices.column(ranges))
-            .select(pkCols.map(col): _*)
-          val scratch = s"${table}_doomed"
-          try st.executeUpdate(s"DROP TABLE $scratch")
-          catch { case _: java.sql.SQLException => () } // leftover from a failed run
-          st.executeUpdate(DeltaRepairSql.scratchClone(table, scratch, pkCols))
-          doomed.write.mode("append").jdbc(endpoint.url, scratch, endpoint.properties)
-          st.executeUpdate(DeltaRepairSql.scratchKeyedDelete(table, scratch, pkCols))
-          st.executeUpdate(s"DROP TABLE $scratch")
-      } finally st.close()
+    DeltaRepairSql.rangeDelete(endpoint.url, table, ranges: _*) match {
+      case Some(delete) =>
+        endpoint.withConnection { conn =>
+          val st = conn.createStatement()
+          try st.executeUpdate(delete) finally st.close()
+        }
+      case None =>
+        val pkCols = ranges.head.key.pkCols
+        // locals, so the executor closure does not capture the sink
+        val (ep, sql, batch) = (endpoint, DeltaRepairSql.keyedDelete(table, pkCols), batchRowSize)
+        readBack(spark, table)
+          .filter(Slices.column(ranges))
+          .select(pkCols.map(col): _*)
+          .foreachPartition { (keys: Iterator[org.apache.spark.sql.Row]) =>
+            if (keys.hasNext) ep.withConnection { conn =>
+              conn.setAutoCommit(false)
+              val ps = conn.prepareStatement(sql)
+              try {
+                keys.grouped(batch).foreach { rows =>
+                  rows.foreach { r =>
+                    pkCols.indices.foreach(i => ps.setObject(i + 1, r.get(i)))
+                    ps.addBatch()
+                  }
+                  ps.executeBatch()
+                }
+                conn.commit()
+              } catch { case e: Throwable => conn.rollback(); throw e }
+              finally ps.close()
+            }
+          }
     }
     append(df, table)
   }

@@ -105,6 +105,19 @@ class HistogramIngestSpec extends SparkSpec {
       s"stale history resurrected: ${bucketRows(dir)}")
   }
 
+  test("wipe destroys a stranded legacy __old too") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hi_wl").toString
+    HistogramIngest.foldBatch(vals(Seq(1.0, 2.0)), col("value"), dir, 0L)
+    // a swap interrupted under the pre-extraction `__old` naming
+    val live = new org.apache.hadoop.fs.Path(s"$dir/histogram")
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(live, new org.apache.hadoop.fs.Path(s"$dir/histogram__old")))
+    HistogramIngest.wipe(spark, dir)
+    HistogramIngest.foldBatch(vals(Seq(9.0)), col("value"), dir, 0L)
+    assert(bucketRows(dir) == Map(9000L -> 1L),
+      s"stale history resurrected: ${bucketRows(dir)}")
+  }
+
   test("served quantiles match the batch estimator on the same data") {
     val dir = java.nio.file.Files.createTempDirectory("graft_hi_q").toString
     val data = (1 to 1000).map(i => i * i * 0.003)

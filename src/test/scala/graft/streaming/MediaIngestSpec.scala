@@ -184,4 +184,18 @@ class MediaIngestSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("audio"), e.getMessage)
   }
+
+  test("an append after a compaction killed between its renames still rejects near-duplicates") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mi_kill").toString
+    MediaIngest.buildIndexDir(media(Seq(0L, 2L, 4L)), dir)
+    // `media compact` killed between its renames: the live hashes sit in _old
+    val live = new org.apache.hadoop.fs.Path(s"$dir/hashes")
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(live, graft.operators.StagedSwap.oldPath(live)))
+    // 1 near-dups the pre-crash 0; 100 is a novel group
+    val admitted = MediaIngest.appendBatch(media(Seq(1L, 100L)), dir)
+      .select("id").as[Long].collect().toSet
+    assert(admitted == Set(100L), s"expected only the novel group to land, got $admitted")
+    assert(spark.read.parquet(s"$dir/hashes").count() == 4)
+  }
 }

@@ -134,4 +134,25 @@ class VectorIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/codes").count() === 205L,
       "novel rows did not land")
   }
+
+  test("an append after a compaction killed between its renames extends the stranded index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vi_kill").toString
+    VectorIngest.appendBatch(emb.filter(col("vec_id") < 100),
+      col("embedding"), col("vec_id"), dir)
+    // `ann compact` killed between its renames: the live codes sit in _old
+    val live = new org.apache.hadoop.fs.Path(s"$dir/codes")
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(live, graft.operators.StagedSwap.oldPath(live)))
+    // ids 90..99 are already indexed; 100..129 are new
+    VectorIngest.appendBatch(emb.filter(col("vec_id") >= 90 && col("vec_id") < 130),
+      col("embedding"), col("vec_id"), dir)
+    def ids = spark.read.parquet(s"$dir/codes").select("id").as[Long].collect().toSeq.sorted
+    assert(ids == (0L until 130L), s"${ids.size} rows, ${ids.distinct.size} distinct ids")
+    val bf = new BloomSidecar(spark, s"$dir/ids.bloom").bits.get
+    (0 until 100).foreach(i =>
+      assert(bf.mightContainString(i.toString), s"pre-crash id $i missing from bloom"))
+    // the next compaction keeps every pre-crash vector
+    IvfPq.compactIndex(spark, dir)
+    assert(ids == (0L until 130L), s"${ids.size} rows after compaction")
+  }
 }

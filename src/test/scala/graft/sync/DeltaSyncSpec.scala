@@ -164,6 +164,24 @@ class DeltaSyncSpec extends SparkSpec {
       srcCat.read(spark, "cdlt"), sink.readBack(spark, "cdlt")))
   }
 
+  test("a string-PK repair leaves a destination table named <t>_doomed alone") {
+    Seq(srcCat, dstCat).foreach(c => DdlReplay.replay(c, Seq(
+      "CREATE TABLE kdel (sku VARCHAR(24) NOT NULL PRIMARY KEY, payload VARCHAR(32))")))
+    DdlReplay.replay(dstCat, Seq("CREATE TABLE kdel_doomed (note VARCHAR(16))"))
+    dstCat.execute("INSERT INTO kdel_doomed VALUES ('keep me'), ('and me')")
+    JdbcSink(Endpoint(srcUrl)).append(
+      (1 to 300).map(i => (s"sku_$i", s"row_$i")).toDF("sku", "payload"), "kdel")
+    assert(DeltaSync.syncDelta(spark, srcCat, sink, "kdel", numSlices = 10).ok)
+    srcCat.execute("UPDATE kdel SET payload = 'edited' WHERE sku IN ('sku_7', 'sku_250')")
+    srcCat.execute("DELETE FROM kdel WHERE sku = 'sku_42'")
+    val repair = DeltaSync.syncDelta(spark, srcCat, sink, "kdel", numSlices = 10)
+    assert(repair.ok && repair.changedSlices >= 1 && repair.changedSlices <= 3, repair.toString)
+    assert(Compare.contentEqual(
+      srcCat.read(spark, "kdel"), sink.readBack(spark, "kdel")))
+    val kept = dstCat.read(spark, "kdel_doomed").as[String].collect().toSet
+    assert(kept == Set("keep me", "and me"), s"user table kdel_doomed clobbered: $kept")
+  }
+
   test("a value swapped between two rows of one slice is repaired") {
     // 2,000 rows cut 64 ways: ids 1 and 2 share a slice, so per-column
     // sums could not see the swap
@@ -282,11 +300,8 @@ class DeltaSyncSpec extends SparkSpec {
     // unbounded-below ranges must sweep NULL hash keys too
     assert(DeltaRepairSql.rangeDelete(mysql, "t", Slices.Range(SliceKey.Hashed(Seq("k")), None, Some(5L)))
       .exists(_.endsWith("< 5 OR (CAST(CONV(SUBSTRING(MD5(CONCAT_WS('|', k)), 1, 15), 16, 10) AS UNSIGNED)) IS NULL")))
-    assert(DeltaRepairSql.scratchClone("t", "t_doomed", Seq("region", "seq")) ==
-      "CREATE TABLE t_doomed AS SELECT region, seq FROM t WITH NO DATA")
-    assert(DeltaRepairSql.scratchKeyedDelete("t", "t_doomed", Seq("region", "seq")) ==
-      "DELETE FROM t WHERE EXISTS (SELECT 1 FROM t_doomed d " +
-        "WHERE d.region = t.region AND d.seq = t.seq)")
+    assert(DeltaRepairSql.keyedDelete("t", Seq("region", "seq")) ==
+      "DELETE FROM t WHERE region = ? AND seq = ?")
   }
 
   test("the hash-key repair runs server-side on every MySQL-wire URL, MariaDB included") {
@@ -296,7 +311,7 @@ class DeltaSyncSpec extends SparkSpec {
     val mariadb = delete("jdbc:mariadb://db:3306/app")
     assert(mariadb.exists(_.startsWith("DELETE FROM t WHERE (CAST(CONV(")), mariadb)
     assert(mariadb == delete("jdbc:mysql://db:3306/app"))
-    // no server-side md5: the scratch-table keyed delete
+    // no server-side md5: the executor-side keyed delete
     assert(delete("jdbc:derby:memory:x").isEmpty)
     // a numeric key ranges server-side on every dialect
     assert(DeltaRepairSql.rangeDelete("jdbc:derby:memory:x", "t",
