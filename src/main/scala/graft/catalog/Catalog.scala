@@ -85,16 +85,13 @@ trait Catalog {
 
 /** File-directory catalog: each `t.<ext>` under `dir` is a table, in
   * any Spark file format (`parquet` default; `csv` and `json` read
-  * with header/schema inference — at scale supply explicit schemas via
-  * `readerOptions` instead of paying an inference scan). PKs come from
+  * with header/schema inference, which pays an inference scan per
+  * read). PKs come from
   * a naming convention the fixtures follow (<prefix>_<table>key), with
   * the known composite case for lineitem; no metadata store exists in
   * a bare file dir.
   */
-class FileCatalog(
-    dir: String,
-    format: String = "parquet",
-    readerOptions: Map[String, String] = Map.empty) extends Catalog {
+class FileCatalog(dir: String, format: String = "parquet") extends Catalog {
 
   private def ext = s".$format"
 
@@ -117,16 +114,11 @@ class FileCatalog(
   /** One FileSystem `exists` on the table's path. */
   override def tableExists(table: String): Boolean = fs.exists(new Path(s"$dir/$table$ext"))
 
-  override def read(spark: SparkSession, table: String): DataFrame = {
-    val defaults = format match {
-      case "csv"  => Map("header" -> "true", "inferSchema" -> "true")
-      case "json" => Map.empty[String, String]
-      case _      => Map.empty[String, String]
-    }
+  override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.format(format)
-      .options(defaults ++ readerOptions)
+      .options(if (format == "csv") Map("header" -> "true", "inferSchema" -> "true")
+        else Map.empty[String, String])
       .load(s"$dir/$table$ext")
-  }
 
   override def primaryKey(table: String): Seq[String] = table match {
     case "lineitem"   => Seq("l_orderkey", "l_linenumber")
@@ -152,13 +144,12 @@ final class ParquetCatalog(dir: String) extends FileCatalog(dir, "parquet")
   * portable: getTables(type=TABLE) ≈ its BASE TABLE filter,
   * getPrimaryKeys ≈ its key_column_usage scan (KEY_SEQ = ordinal).
   */
-final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
-    extends Catalog {
+final class JdbcCatalog(val endpoint: Endpoint) extends Catalog {
 
   /** Lower-cased names of every object of one `getTables` type. */
   private def objects(kind: String): Seq[String] = endpoint.withConnection { conn =>
     val rs = conn.getMetaData
-      .getTables(null, schema.orNull, "%", Array(kind))
+      .getTables(null, null, "%", Array(kind))
     val buf = scala.collection.mutable.ArrayBuffer[String]()
     while (rs.next()) buf += rs.getString("TABLE_NAME").toLowerCase
     rs.close()
@@ -173,7 +164,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     val names = Seq(table, table.toUpperCase, table.toLowerCase).distinct
     names.iterator
       .map { t =>
-        val rs = meta.getPrimaryKeys(null, schema.orNull, t)
+        val rs = meta.getPrimaryKeys(null, null, t)
         val buf = scala.collection.mutable.ArrayBuffer[(Short, String)]()
         while (rs.next())
           buf += rs.getShort("KEY_SEQ") -> rs.getString("COLUMN_NAME").toLowerCase
@@ -312,7 +303,7 @@ final class JdbcCatalog(val endpoint: Endpoint, schema: Option[String] = None)
     def escaped(n: String): String =
       n.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
     def has(n: String): Boolean = {
-      val rs = md.getTables(null, schema.orNull, escaped(n), null)
+      val rs = md.getTables(null, null, escaped(n), null)
       try rs.next() finally rs.close()
     }
     has(table) || has(table.toUpperCase) || has(table.toLowerCase)

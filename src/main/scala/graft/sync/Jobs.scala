@@ -45,11 +45,9 @@ object Jobs {
 
   /** Run `body` with every Spark job it submits in group `group`,
     * with interrupt-on-cancel so JDBC fetches die promptly. */
-  def tagged[A](spark: SparkSession, group: String, desc: String = "")(
-      body: => A): A = {
+  def tagged[A](spark: SparkSession, group: String)(body: => A): A = {
     val sc = spark.sparkContext
-    sc.setJobGroup(group, if (desc.isEmpty) group else desc,
-      interruptOnCancel = true)
+    sc.setJobGroup(group, group, interruptOnCancel = true)
     try body
     finally sc.clearJobGroup()
   }

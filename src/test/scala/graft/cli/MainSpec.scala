@@ -15,6 +15,21 @@ class MainSpec extends SparkSpec {
     f.toString
   }
 
+  /** Exit code and stdout of one CLI run, the elapsed times masked: the
+    * summary's seconds, and the sync table's ElapsedMs cells (always 9
+    * wide, the header's width, before the Result cell). */
+  private def captured(args: String*): (Int, String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val rc = Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(
+      Main.run(args.toArray, spark))
+    rc -> buf.toString("UTF-8")
+      .replaceAll("""elapsed \d+\.\d\ds""", "elapsed #s")
+      .replaceAll("""(?m)^(\| \w+ +\| -?\d+ +\| )[\d ]{9}( \| (?:OK|FAILED|SKIPPED))""", "$1#########$2")
+  }
+
+  /** Expected stdout: each line newline-terminated. */
+  private def lines(ls: String*): String = ls.map(_ + "\n").mkString
+
   test("sync + compare parquet->parquet via CLI") {
     val out = Files.createTempDirectory("graft_cli_out").toString
     val cfg = writeCfg(
@@ -234,27 +249,15 @@ class MainSpec extends SparkSpec {
     // which is never synced, so each compare has a failing row
     val synced = config("supplier", "watermarks.nation: n_nationkey")
     val wide = config("", "watermarks.nation: n_nationkey\nwatermarks.supplier: s_suppkey")
-    /** Exit code and stdout, the elapsed times masked: the summary's
-      * seconds, and the sync table's ElapsedMs cells (always 9 wide,
-      * the header's width). */
-    def run(args: String*): (Int, String) = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val rc = Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(
-        Main.run(args.toArray, spark))
-      rc -> buf.toString("UTF-8")
-        .replaceAll("""elapsed \d+\.\d\ds""", "elapsed #s")
-        .replaceAll("""(?m)^(\| \w+ +\| -?\d+ +\| )[\d ]{9}( \| )""", "$1#########$2")
-    }
     val got = Seq(
-      run("sync", "--config", synced),
-      run("sync", "--delta", "--config", synced),
-      run("compare", "--freshness", "--config", synced),
-      run("compare", "--freshness", "--config", wide),
-      run("compare", "--schema", "--config", synced),
-      run("compare", "--schema", "--config", wide),
-      run("compare", "--config", synced),
-      run("compare", "--content", "--config", wide))
-    def lines(ls: String*): String = ls.map(_ + "\n").mkString
+      captured("sync", "--config", synced),
+      captured("sync", "--delta", "--config", synced),
+      captured("compare", "--freshness", "--config", synced),
+      captured("compare", "--freshness", "--config", wide),
+      captured("compare", "--schema", "--config", synced),
+      captured("compare", "--schema", "--config", wide),
+      captured("compare", "--config", synced),
+      captured("compare", "--content", "--config", wide))
     val expected = Seq(
       0 -> lines(
         "+--------+------+-----------+--------+",
@@ -320,6 +323,407 @@ class MainSpec extends SparkSpec {
         "| supplier | 10         | -1       |",
         "+----------+------------+----------+",
         "Compare finished, elapsed #s"))
+    got.zip(expected).foreach { case (g, e) => assert(g == e) }
+    assert(got.length == expected.length)
+  }
+
+  test("non-sync reports: tables, summary line and exit code (golden)") {
+    // a fixed-length destination path, masked by a token of the same
+    // length, so the tables that print it keep fixed column widths
+    val base = Files.createTempDirectory("graft_g2").toString
+    require(base.length < 47, s"temp dir too long for the golden: $base")
+    val out = s"$base/${"o" * (47 - base.length)}"
+    val cfg = writeCfg(
+      s"""src:
+         |  url: parquet:$sf0001
+         |dest:
+         |  url: parquet:$out
+         |""".stripMargin)
+    // the destination as a source, for commands that rewrite their input
+    val outCfg = writeCfg(
+      s"""src:
+         |  url: parquet:$out
+         |dest:
+         |  url: parquet:$out
+         |""".stripMargin)
+    val queries = Files.writeString(Files.createTempFile("graft_g2", ".txt"),
+      "the data\nmerge window\n").toString
+    // a file-stream source is a directory of parquet files
+    val stream = Files.createDirectories(java.nio.file.Paths.get(base, "stream")).toString
+    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
+      java.nio.file.Paths.get(stream, "part-0.parquet"))
+    def run(args: String*): (Int, String) = {
+      val (rc, text) = captured(args: _*)
+      rc -> text.replace(out, "$OUT".padTo(out.length, '_'))
+    }
+    val got = Seq(
+      run("profile", "--table", "nation", "--config", cfg),
+      run("profile", "--table", "nation", "--sketch", "--config", cfg),
+      run("profile", "--table", "customer", "--key", "c_nationkey", "--top", "3", "--config", cfg),
+      run("hll", "build", "--table", "documents", "--index", s"$out/hll", "--config", cfg),
+      run("card", "--table", "documents", "--config", cfg),
+      run("mix", "--table", "documents", "--config", cfg),
+      run("embed", "--table", "documents", "--dim", "8", "--config", cfg),
+      run("compact", "--table", "documents_emb", "--config", outCfg),
+      run("diff", "build", "--table", "documents", "--index", s"$out/diff", "--config", cfg),
+      run("diff", "against", "--table", "documents", "--index", s"$out/diff", "--config", cfg),
+      run("hist", "build", "--table", "events", "--index", s"$out/hist", "--config", cfg),
+      run("audit", "--table", "customer", "--quasi", "c_nationkey", "--k", "10", "--config", cfg),
+      run("lm", "score", "--table", "documents", "--config", cfg),
+      run("dsir", "--table", "documents", "--k", "5", "--config", cfg),
+      run("pack", "--table", "documents", "--shards", "2", "--config", cfg),
+      run("curate", "--table", "documents", "--config", cfg),
+      run("tokenize", "train", "--algo", "seed", "--out", s"$out/seed", "--config", cfg),
+      run("index", "build", "--table", "documents", "--index", s"$out/idx", "--config", cfg),
+      run("index", "compact", "--index", s"$out/idx", "--config", cfg),
+      run("cc", "build", "--table", "documents", "--store", s"$out/cc", "--config", cfg),
+      run("cc", "show", "--store", s"$out/cc", "--k", "3", "--config", cfg),
+      run("ann", "build", "--table", "embeddings", "--index", s"$out/ann", "--config", cfg),
+      run("search", "--query", "the data", "--mode", "bm25", "--k", "3", "--config", cfg),
+      run("create-table", "--config", cfg),
+      run("ann", "append", "--table", "embeddings", "--index", s"$out/ann", "--config", cfg),
+      run("ann", "compact", "--index", s"$out/ann", "--config", cfg),
+      run("ann", "search", "--index", s"$out/ann", "--table", "embeddings", "--probe-id", "7",
+        "--k", "3", "--config", cfg),
+      run("index", "append", "--table", "documents", "--index", s"$out/idx", "--into", "docs_inc",
+        "--config", cfg),
+      run("curate-stream", "--source", stream, "--index", s"$out/idx",
+        "--into", "docs_stream", "--checkpoint", s"$base/ckpt", "--config", cfg),
+      run("cc", "append", "--table", "documents", "--store", s"$out/cc", "--index", s"$out/idx",
+        "--config", cfg),
+      run("cc", "compact", "--store", s"$out/cc", "--buckets", "4", "--config", cfg),
+      run("tokenize", "train", "--algo", "bpe", "--merges", "5", "--out", s"$out/bpe", "--config", cfg),
+      run("tokenize", "apply", "--algo", "bpe", "--vocab", s"$out/bpe", "--config", cfg),
+      run("pack", "--table", "documents", "--shards", "2", "--into", "docs_p2", "--materialize",
+        "--config", cfg),
+      run("diff", "against", "--table", "documents", "--index", s"$out/diff", "--update",
+        "--config", cfg),
+      run("search", "--probe-file", queries, "--k", "2", "--config", cfg))
+    val expected = Seq(
+      0 -> lines(
+        "+-------------+----------+-------+",
+        "| Column      | Metric   | Value |",
+        "+-------------+----------+-------+",
+        "| _table      | rows     | 25    |",
+        "| n_name      | distinct | 25    |",
+        "| n_name      | len_max  | 9     |",
+        "| n_name      | len_sum  | 215   |",
+        "| n_name      | nulls    | 0     |",
+        "| n_nationkey | distinct | 25    |",
+        "| n_nationkey | max      | 24    |",
+        "| n_nationkey | min      | 0     |",
+        "| n_nationkey | nulls    | 0     |",
+        "| n_regionkey | distinct | 5     |",
+        "| n_regionkey | max      | 4     |",
+        "| n_regionkey | min      | 0     |",
+        "| n_regionkey | nulls    | 0     |",
+        "+-------------+----------+-------+",
+        "Profile finished, elapsed #s, nation, 13 metrics"),
+      0 -> lines(
+        "+-------------+--------------+",
+        "| Column      | Est distinct |",
+        "+-------------+--------------+",
+        "| n_name      | 26           |",
+        "| n_nationkey | 24           |",
+        "| n_regionkey | 5            |",
+        "+-------------+--------------+",
+        "Profile (sketch) finished, elapsed #s, nation, 3 columns"),
+      0 -> lines(
+        "+-----+------+---------------+--------------+------+",
+        "| Key | Rows | Share (milli) | Heat (milli) | Salt |",
+        "+-----+------+---------------+--------------+------+",
+        "| 19  | 13   | 86            | 2166         | 1    |",
+        "| 11  | 11   | 73            | 1833         | 1    |",
+        "| 10  | 9    | 60            | 1500         | 1    |",
+        "+-----+------+---------------+--------------+------+",
+        "Profile (skew) finished, elapsed #s, customer.c_nationkey, 3 hot keys"),
+      0 -> lines(
+        "+--------+-----------+----------------------+",
+        "| Source | Zero regs | Est distinct 5-grams |",
+        "+--------+-----------+----------------------+",
+        "| src0   | 31        | 1353                 |",
+        "| src1   | 25        | 1373                 |",
+        "| src10  | 40        | 1299                 |",
+        "| src11  | 40        | 1395                 |",
+        "| src12  | 30        | 1447                 |",
+        "| src13  | 50        | 1237                 |",
+        "| src14  | 23        | 1553                 |",
+        "| src15  | 49        | 1264                 |",
+        "| src16  | 39        | 1355                 |",
+        "| src17  | 38        | 1340                 |",
+        "| src18  | 41        | 1288                 |",
+        "| src19  | 44        | 1313                 |",
+        "| src2   | 50        | 1213                 |",
+        "| src3   | 25        | 1478                 |",
+        "| src4   | 46        | 1202                 |",
+        "| src5   | 64        | 1113                 |",
+        "| src6   | 36        | 1373                 |",
+        "| src7   | 64        | 1134                 |",
+        "| src8   | 36        | 1390                 |",
+        "| src9   | 40        | 1275                 |",
+        "+--------+-----------+----------------------+",
+        "HLL build finished, elapsed #s, 20 sources -> $OUT____________________________________________/hll"),
+      0 -> lines(
+        "+--------+------+--------+---------+------------+---------+",
+        "| Source | Docs | Tokens | DupRate | AvgQuality | TopLang |",
+        "+--------+------+--------+---------+------------+---------+",
+        "| src0   | 25   | 1533   | 0.0000  | 0.7082     | fr      |",
+        "| src1   | 25   | 1441   | 0.0000  | 0.7059     | en      |",
+        "| src10  | 25   | 1376   | 0.0000  | 0.6819     | en      |",
+        "| src11  | 25   | 1426   | 0.0000  | 0.6979     | en      |",
+        "| src12  | 25   | 1479   | 0.0000  | 0.7026     | en      |",
+        "| src13  | 25   | 1269   | 0.0000  | 0.6769     | en      |",
+        "| src14  | 25   | 1657   | 0.0000  | 0.7154     | es      |",
+        "| src15  | 25   | 1332   | 0.0000  | 0.6762     | en      |",
+        "| src16  | 25   | 1414   | 0.0000  | 0.6956     | en      |",
+        "| src17  | 25   | 1314   | 0.0000  | 0.6750     | en      |",
+        "| src18  | 25   | 1271   | 0.0000  | 0.6671     | en      |",
+        "| src19  | 25   | 1369   | 0.0000  | 0.6839     | en      |",
+        "| src2   | 25   | 1267   | 0.0000  | 0.6783     | fr      |",
+        "| src3   | 25   | 1560   | 0.0000  | 0.7146     | en      |",
+        "| src4   | 25   | 1316   | 0.0000  | 0.6677     | en      |",
+        "| src5   | 25   | 1216   | 0.0000  | 0.6537     | en      |",
+        "| src6   | 25   | 1466   | 0.0000  | 0.6957     | en      |",
+        "| src7   | 25   | 1212   | 0.0000  | 0.6549     | en      |",
+        "| src8   | 25   | 1632   | 0.0000  | 0.7324     | en      |",
+        "| src9   | 25   | 1389   | 0.0000  | 0.6939     | es      |",
+        "+--------+------+--------+---------+------------+---------+",
+        "Card finished, elapsed #s"),
+      0 -> lines(
+        "+--------+------+-------+--------+-----+-----------+-----------+",
+        "| Source | Raw  | Avail | Target | Sat | Epochs(m) | Effective |",
+        "+--------+------+-------+--------+-----+-----------+-----------+",
+        "| src0   | 1533 | 840   | 439    |     | 522       | 439       |",
+        "| src1   | 1441 | 862   | 426    |     | 494       | 426       |",
+        "| src10  | 1376 | 833   | 416    |     | 499       | 416       |",
+        "| src11  | 1426 | 708   | 423    |     | 597       | 423       |",
+        "| src12  | 1479 | 565   | 431    |     | 762       | 431       |",
+        "| src13  | 1269 | 634   | 399    |     | 629       | 399       |",
+        "| src14  | 1657 | 741   | 456    |     | 615       | 456       |",
+        "| src15  | 1332 | 803   | 409    |     | 509       | 409       |",
+        "| src16  | 1414 | 877   | 422    |     | 481       | 422       |",
+        "| src17  | 1314 | 596   | 406    |     | 681       | 406       |",
+        "| src18  | 1271 | 583   | 400    |     | 686       | 400       |",
+        "| src19  | 1369 | 909   | 415    |     | 456       | 415       |",
+        "| src2   | 1267 | 449   | 399    |     | 888       | 399       |",
+        "| src3   | 1560 | 664   | 443    |     | 667       | 443       |",
+        "| src4   | 1316 | 821   | 407    |     | 495       | 407       |",
+        "| src5   | 1216 | 651   | 391    |     | 600       | 391       |",
+        "| src6   | 1466 | 712   | 429    |     | 602       | 429       |",
+        "| src7   | 1212 | 650   | 390    |     | 600       | 390       |",
+        "| src8   | 1632 | 927   | 453    |     | 488       | 453       |",
+        "| src9   | 1389 | 934   | 418    |     | 447       | 418       |",
+        "+--------+------+-------+--------+-----+-----------+-----------+",
+        "Mix plan finished, elapsed #s: budget 8381, allocated 8372, 0/20 sources saturated"),
+      0 -> lines(
+        "Embed finished, elapsed #s, 500 docs -> documents_emb (dim 8)"),
+      0 -> lines(
+        "compacted documents_emb: 1 -> 1 data files (target 128 MB)",
+        "Compact finished, elapsed #s"),
+      0 -> lines(
+        "Diff manifest built at $OUT____________________________________________/diff: 500 documents digested",
+        "Diff build finished, elapsed #s"),
+      0 -> lines(
+        "+-----------+------+--------+",
+        "| Status    | Docs | Chars  |",
+        "+-----------+------+--------+",
+        "| unchanged | 500  | 153156 |",
+        "+-----------+------+--------+",
+        "Diff finished, elapsed #s"),
+      0 -> lines(
+        "Hist build finished, elapsed #s, batch -1 folded -> $OUT____________________________________________/hist",
+        "+--------------+------+------------------------+",
+        "| q (permille) | Rows | Estimate (milli-units) |",
+        "+--------------+------+------------------------+",
+        "| 500          | 1000 | 35600                  |",
+        "| 900          | 1000 | 112000                 |",
+        "| 990          | 1000 | 214000                 |",
+        "| 999          | 1000 | 289000                 |",
+        "+--------------+------+------------------------+"),
+      1 -> lines(
+        "k-anonymity (k=10):",
+        "+-----------+---------+------+-----------+",
+        "| ClassSize | Classes | Rows | Violating |",
+        "+-----------+---------+------+-----------+",
+        "| 3         | 2       | 6    | YES       |",
+        "| 4         | 5       | 20   | YES       |",
+        "| 5         | 7       | 35   | YES       |",
+        "| 6         | 3       | 18   | YES       |",
+        "| 7         | 3       | 21   | YES       |",
+        "| 8         | 1       | 8    | YES       |",
+        "| 9         | 2       | 18   | YES       |",
+        "| 11        | 1       | 11   | no        |",
+        "| 13        | 1       | 13   | no        |",
+        "+-----------+---------+------+-----------+",
+        "Audit finished, elapsed #s, 1 gate(s) violated"),
+      0 -> lines(
+        "+------+------+---------+",
+        "| Docs | Kept | Dropped |",
+        "+------+------+---------+",
+        "| 500  | 217  | 283     |",
+        "+------+------+---------+",
+        "LM score finished, elapsed #s, kept 217/500 (tau 3.2, minCount 2) -> documents_lm"),
+      0 -> lines(
+        "+------+----------+",
+        "| Lang | Selected |",
+        "+------+----------+",
+        "| en   | 5        |",
+        "+------+----------+",
+        "DSIR finished, elapsed #s, selected 5 docs toward lang=en -> documents_dsir"),
+      0 -> lines(
+        "+-------+------+------+--------+---------+-------------+",
+        "| Shard | Docs | Seqs | Tokens | Util bp | Lower bound |",
+        "+-------+------+------+--------+---------+-------------+",
+        "| 0     | 265  | 8    | 14223  | 8681    | 7           |",
+        "| 1     | 235  | 7    | 13716  | 9567    | 7           |",
+        "+-------+------+------+--------+---------+-------------+",
+        "Pack finished, elapsed #s, packed 500 docs (max seq 8, capacity 2048, 2 shards) -> documents_packed"),
+      0 -> lines(
+        "+----------------+------+",
+        "| Stage          | Docs |",
+        "+----------------+------+",
+        "| incoming       | 500  |",
+        "| host-dedup+cap | 500  |",
+        "| dsir-select    | 500  |",
+        "| rule-clean     | 500  |",
+        "| dedup+gate     | 253  |",
+        "| lm-gate        | 253  |",
+        "| decontaminated | 253  |",
+        "+----------------+------+",
+        "Curate finished, elapsed #s, kept 253/500 -> documents_curated"),
+      0 -> lines(
+        "Seed vocab: 121 pieces (top-N plus single-char coverage) -> $OUT____________________________________________/seed",
+        "Tokenize train finished, elapsed #s"),
+      0 -> lines(
+        "Index built at $OUT____________________________________________/idx: 500 documents signed",
+        "Index build finished, elapsed #s"),
+      0 -> lines(
+        "+------------------------------------------------------+------+------------+--------------+",
+        "| Index                                                | Docs | HotBuckets | Fingerprints |",
+        "+------------------------------------------------------+------+------------+--------------+",
+        "| $OUT____________________________________________/idx | 500  | 0          | 500          |",
+        "+------------------------------------------------------+------+------------+--------------+",
+        "Index compact finished, elapsed #s"),
+      0 -> lines(
+        "+-----------------------------------------------------+--------+----------+",
+        "| Store                                               | Labels | Clusters |",
+        "+-----------------------------------------------------+--------+----------+",
+        "| $OUT____________________________________________/cc | 500    | 475      |",
+        "+-----------------------------------------------------+--------+----------+",
+        "CC build finished, elapsed #s"),
+      0 -> lines(
+        "+-----------------------------------------------------+--------+----------+-------------------+-------------+",
+        "| Store                                               | Labels | Clusters | DocsInDupClusters | DupClusters |",
+        "+-----------------------------------------------------+--------+----------+-------------------+-------------+",
+        "| $OUT____________________________________________/cc | 500    | 475      | 47                | 22          |",
+        "+-----------------------------------------------------+--------+----------+-------------------+-------------+",
+        "+-----------+------+",
+        "| Component | Size |",
+        "+-----------+------+",
+        "| 8         | 4    |",
+        "| 0         | 3    |",
+        "| 5         | 2    |",
+        "+-----------+------+",
+        "CC show finished, elapsed #s"),
+      0 -> lines(
+        "ANN index built at $OUT____________________________________________/ann: 500 vectors encoded",
+        "ANN build finished, elapsed #s"),
+      0 -> lines(
+        "+-----+--------------+--------------------------------------------------------------+",
+        "| Doc | Score (bm25) | Snippet                                                      |",
+        "+-----+--------------+--------------------------------------------------------------+",
+        "| 153 | 0.9222       | agg table group big line query order column window data batc |",
+        "| 61  | 0.8775       | join stream a row part data data merge value window value va |",
+        "| 76  | 0.8719       | big merge spark batch join group stream the customer sort st |",
+        "+-----+--------------+--------------------------------------------------------------+",
+        "Search finished, elapsed #s, 3 hits (bm25) for \"the data\""),
+      0 -> lines(
+        "create-table requires JDBC endpoints on both sides",
+        "Table create finished, elapsed #s"),
+      0 -> lines(
+        "+------------------------------------------------------+--------+----------+-------+",
+        "| Index                                                | Before | Appended | Total |",
+        "+------------------------------------------------------+--------+----------+-------+",
+        "| $OUT____________________________________________/ann | 500    | 0        | 500   |",
+        "+------------------------------------------------------+--------+----------+-------+",
+        "ANN append finished, elapsed #s"),
+      0 -> lines(
+        "+------------------------------------------------------+-------------+------------+",
+        "| Index                                                | FilesBefore | FilesAfter |",
+        "+------------------------------------------------------+-------------+------------+",
+        "| $OUT____________________________________________/ann | 8           | 8          |",
+        "+------------------------------------------------------+-------------+------------+",
+        "ANN compact finished, elapsed #s"),
+      0 -> lines(
+        "+-----+-----------+",
+        "| Id  | AdcDist   |",
+        "+-----+-----------+",
+        "| 7   | 10.990800 |",
+        "| 76  | 11.129200 |",
+        "| 218 | 11.129200 |",
+        "+-----+-----------+",
+        "ANN search finished, elapsed #s"),
+      0 -> lines(
+        "+----------+----------+------+---------+",
+        "| Object   | Incoming | Kept | Dropped |",
+        "+----------+----------+------+---------+",
+        "| docs_inc | 500      | 0    | 500     |",
+        "+----------+----------+------+---------+",
+        "Index append finished, elapsed #s"),
+      0 -> lines(
+        "+-------------+------------+-----------+---------+",
+        "| Object      | CorpusDocs | KeptTotal | Bloom   |",
+        "+-------------+------------+-----------+---------+",
+        "| docs_stream | 500        | 0         | sidecar |",
+        "+-------------+------------+-----------+---------+",
+        "Curate-stream finished, elapsed #s"),
+      0 -> lines(
+        "+-----------------------------------------------------+------------------+-------------+",
+        "| Store                                               | BucketsRewritten | TotalLabels |",
+        "+-----------------------------------------------------+------------------+-------------+",
+        "| $OUT____________________________________________/cc | 0                | 500         |",
+        "+-----------------------------------------------------+------------------+-------------+",
+        "CC append finished, elapsed #s"),
+      0 -> lines(
+        "+-----------------------------------------------------+--------+---------------+--------------+",
+        "| Store                                               | Labels | BucketsBefore | BucketsAfter |",
+        "+-----------------------------------------------------+--------+---------------+--------------+",
+        "| $OUT____________________________________________/cc | 500    | 64            | 4            |",
+        "+-----------------------------------------------------+--------+---------------+--------------+",
+        "CC compact finished, elapsed #s"),
+      0 -> lines(
+        "BPE merge table: 5 merges -> $OUT____________________________________________/bpe",
+        "Tokenize train finished, elapsed #s"),
+      0 -> lines(
+        "Tokenized 500 documents (bpe) -> documents_tokens",
+        "Tokenize apply finished, elapsed #s"),
+      0 -> lines(
+        "+-------+------+------+--------+---------+-------------+",
+        "| Shard | Docs | Seqs | Tokens | Util bp | Lower bound |",
+        "+-------+------+------+--------+---------+-------------+",
+        "| 0     | 265  | 8    | 14223  | 8681    | 7           |",
+        "| 1     | 235  | 7    | 13716  | 9567    | 7           |",
+        "+-------+------+------+--------+---------+-------------+",
+        "materialized sequences -> documents_sequences",
+        "Pack finished, elapsed #s, packed 500 docs (max seq 8, capacity 2048, 2 shards) -> docs_p2"),
+      0 -> lines(
+        "+-----------+------+--------+",
+        "| Status    | Docs | Chars  |",
+        "+-----------+------+--------+",
+        "| unchanged | 500  | 153156 |",
+        "+-----------+------+--------+",
+        "Manifest updated: 500 documents digested",
+        "Diff finished, elapsed #s"),
+      0 -> lines(
+        "+--------------+-----+-------+---------+-----------+",
+        "| Query        | Doc | RRF   | LexRank | DenseRank |",
+        "+--------------+-----+-------+---------+-----------+",
+        "| the data     | 153 | 32266 | 1       | 3         |",
+        "| the data     | 61  | 31054 | 2       | 7         |",
+        "| merge window | 222 | 30414 | 10      | 2         |",
+        "| merge window | 288 | 30309 | 7       | 5         |",
+        "+--------------+-----+-------+---------+-----------+",
+        "Search finished, elapsed #s, 4 hits for 2 queries (hybrid batch)"))
     got.zip(expected).foreach { case (g, e) => assert(g == e) }
     assert(got.length == expected.length)
   }
@@ -1280,6 +1684,32 @@ class MainSpec extends SparkSpec {
 
   test("unknown command exits 2") {
     assert(Main.run(Array("frobnicate"), spark) == 2)
+    // the usage line names every command the dispatcher accepts
+    val (rc, usage) = captured("frobnicate")
+    assert(rc == 2)
+    Seq("sync", "compare", "create-table", "index", "curate", "curate-stream",
+      "pack", "diff", "profile", "hll", "lm", "dsir", "audit", "embed",
+      "search", "hist", "compact", "ann", "media", "cc", "card", "tokenize",
+      "mix", "version").foreach { c =>
+      assert(s"(?<![\\w-])$c(?![\\w-])".r.findFirstIn(usage).isDefined,
+        s"usage omits '$c': $usage")
+    }
+    Seq("cc <build|append|compact|show>", "--schema", "--freshness").foreach { c =>
+      assert(usage.contains(c), s"usage omits '$c': $usage")
+    }
+  }
+
+  test("lm rejects an unknown subcommand before reading its table") {
+    val src = Files.createTempDirectory("graft_cli_lm_bare").toString
+    spark.range(3).write.parquet(s"$src/other.parquet")
+    val cfg = writeCfg(
+      s"""src:
+         |  url: parquet:$src
+         |dest:
+         |  url: parquet:$src
+         |""".stripMargin)
+    // no `documents` table: the usage error must come before any read
+    assert(Main.run(Array("lm", "frobnicate", "--config", cfg), spark) == 2)
   }
 
   test("lm score + coverage via CLI: gate table written, verdicts match the operator") {
