@@ -182,14 +182,34 @@ object Main {
     (sep +: body.head +: sep +: body.tail :+ sep).mkString("\n")
   }
 
+  private val Usage = "usage: graft <sync [--delta|--ledger d [--from-scratch]]|" +
+    "compare [--content|--schema|--freshness]|create-table [--views]|" +
+    "index <build|append|compact>|curate|curate-stream|pack|diff <build|against>|" +
+    "profile [--sketch|--key c]|hll <build|append|show>|lm <score|coverage>|dsir|audit|" +
+    "embed|search|hist <build|append|show>|compact|ann <build|append|compact|search>|" +
+    "media <build|append|compact|search|contain>|cc <build|append|compact|show>|card|" +
+    "tokenize <train|apply>|mix [--budget N]|version> --config cfg.yml"
+
   def run(args: Array[String], spark: SparkSession): Int = {
     val cmd = args.headOption.getOrElse("help")
     def opt(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(`name`, v) => v }
-    val cfg = opt("--config")
-      .map(p => SyncConfig.fromYaml(
-        new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))))
-      .getOrElse(SyncConfig(Endpoint("parquet:/root/testdata/sf0.001"), Endpoint("parquet:/tmp/graft_out")))
+    // every command but help and version reads or writes data, so it
+    // runs only against the endpoints a config names
+    val cfg = (cmd, opt("--config")) match {
+      case ("help", _) =>
+        println(Usage)
+        return 0
+      case ("version", _) =>
+        // reference parity: cmd/version.go prints the build version
+        println("graft 0.1.0 (Spark-native mysqlDataSyncTool equivalent)")
+        return 0
+      case (_, Some(p)) =>
+        SyncConfig.fromYaml(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))))
+      case (_, None) =>
+        println(s"no --config given; $Usage")
+        return 2
+    }
 
     // reference O4: cooperative cancel of in-flight work on shutdown,
     // plus server-side KILL QUERY of tagged statements still executing
@@ -1665,18 +1685,8 @@ object Main {
             Option(r.get(r.fieldIndex("epochs_milli")))
               .map(_.toString).getOrElse("-"),
             r.getAs[Long]("effective_tokens").toString))))
-      case "version" =>
-        // reference parity: cmd/version.go prints the build version
-        println("graft 0.1.0 (Spark-native mysqlDataSyncTool equivalent)")
-        0
       case other =>
-        println(s"unknown command '$other'; usage: graft <sync [--delta|--ledger d [--from-scratch]]|" +
-          "compare [--content|--schema|--freshness]|create-table [--views]|" +
-          "index <build|append|compact>|curate|curate-stream|pack|diff <build|against>|" +
-          "profile [--sketch|--key c]|hll <build|append|show>|lm <score|coverage>|dsir|audit|" +
-          "embed|search|hist <build|append|show>|compact|ann <build|append|compact|search>|" +
-          "media <build|append|compact|search|contain>|cc <build|append|compact|show>|card|" +
-          "tokenize <train|apply>|mix [--budget N]|version> --config cfg.yml")
+        println(s"unknown command '$other'; $Usage")
         2
     }
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The ONE implementation of the crash-safe directory swap every
@@ -161,15 +161,24 @@ object StagedSwap {
   /** (files, bytes) of the data files under `path`, recursively: every
     * file but Hadoop's hidden `_`/`.`-prefixed markers. */
   def dataFiles(spark: SparkSession, path: String): (Long, Long) = {
+    val files = listData(spark, path)
+    (files.size.toLong, files.map(_.getLen).sum)
+  }
+
+  /** The number of data files in each directory under `path` that
+    * holds any ([[dataFiles]]' rule). */
+  def dataFilesByDir(spark: SparkSession, path: String): Map[Path, Long] =
+    listData(spark, path).groupMapReduce(_.getPath.getParent)(_ => 1L)(_ + _)
+
+  private def listData(spark: SparkSession, path: String): Seq[LocatedFileStatus] = {
     val (fs, live) = resolve(spark, path)
     val it = fs.listFiles(live, true)
-    var n = 0L
-    var b = 0L
+    val files = Seq.newBuilder[LocatedFileStatus]
     while (it.hasNext) {
       val f = it.next()
       val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) { n += 1; b += f.getLen }
+      if (!name.startsWith("_") && !name.startsWith(".")) files += f
     }
-    (n, b)
+    files.result()
   }
 }

@@ -66,18 +66,24 @@ object IvfPq {
     * output (repartition on the partition column — one shuffle of
     * 12-byte rows), writes beside the live tree, then swaps
     * directories; content and the file-level pruning layout are
-    * unchanged (spec-asserted), only the file count collapses. Same
-    * single-writer contract as [[graft.streaming.VectorIngest]]: run
-    * it as the out-of-band maintenance job, not under a live writer.
-    * Returns (files before, files after). */
+    * unchanged (spec-asserted), only the file count collapses. An
+    * index whose every cell already holds one file is left as it is,
+    * with no shuffle and no write. Same single-writer contract as
+    * [[graft.streaming.VectorIngest]]: run it as the out-of-band
+    * maintenance job, not under a live writer. Returns (files before,
+    * files after). */
   def compactIndex(spark: SparkSession, dir: String): (Long, Long) = {
     val codes = s"$dir/codes"
     StagedSwap.exists(spark, codes) // adopt before counting
-    val before = StagedSwap.dataFiles(spark, codes)._1
-    StagedSwap.rewrite(spark, codes)(spark.read.parquet(codes)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet)
-    (before, StagedSwap.dataFiles(spark, codes)._1)
+    val perCell = StagedSwap.dataFilesByDir(spark, codes).values
+    val before = perCell.sum
+    if (perCell.forall(_ == 1L)) (before, before)
+    else {
+      StagedSwap.rewrite(spark, codes)(spark.read.parquet(codes)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet)
+      (before, StagedSwap.dataFiles(spark, codes)._1)
+    }
   }
 
   /** ADC top-k against a persisted index: restrict to the `nprobe`

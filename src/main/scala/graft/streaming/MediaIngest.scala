@@ -285,16 +285,19 @@ object MediaIngest {
     * band bloom at fresh 4× headroom — the out-of-band maintenance a
     * long-lived admission index needs (the `ann compact` discipline).
     * Returns (files before, files after). Content is unchanged: the
-    * rewrite is a coalesce of the same (id, dhash) rows. */
+    * rewrite is a coalesce of the same (id, dhash) rows, skipped when
+    * the hashes are already one file; the bloom is rebuilt either way. */
   def compactIndex(spark: SparkSession, dir: String,
       bands: Int = DefaultBands): (Long, Long) = {
     val hashes = s"$dir/hashes"
     StagedSwap.exists(spark, hashes) // adopt before counting
     val before = StagedSwap.dataFiles(spark, hashes)._1
-    val n = math.max(1L, spark.read.parquet(hashes).count() / 4000000L)
-    StagedSwap.rewrite(spark, hashes)(spark.read.parquet(hashes)
-      .coalesce(math.min(n, Int.MaxValue.toLong).toInt)
-      .write.mode("overwrite").parquet)
+    if (before > 1) {
+      val n = math.max(1L, spark.read.parquet(hashes).count() / 4000000L)
+      StagedSwap.rewrite(spark, hashes)(spark.read.parquet(hashes)
+        .coalesce(math.min(n, Int.MaxValue.toLong).toInt)
+        .write.mode("overwrite").parquet)
+    }
     writeBandBloom(spark, dir, bands)
     (before, StagedSwap.dataFiles(spark, hashes)._1)
   }

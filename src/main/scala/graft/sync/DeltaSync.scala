@@ -14,9 +14,10 @@ import graft.catalog.Catalog
   * slice's row count and row-hash sum across systems, and re-copy ONLY
   * the slices that disagree.
   *
-  * Cost shape: both tables are read into Spark once for the diff (every
-  * row crosses the JDBC wire; only the per-slice sums reach the
-  * driver). The source is read at the sync's own parallelism (one task
+  * Cost shape: both tables are read into Spark once for the diff, in
+  * one Spark stage with no shuffle (every row crosses the JDBC wire;
+  * each read task folds its rows into at most k per-slice partials,
+  * and only those reach the driver). The source is read at the sync's own parallelism (one task
   * per page of rows, each a run of adjacent diff slices), however fine
   * the diff. The repair then touches only the changed ranges, all of a
   * table's at once: a JDBC target deletes them in ONE server-side

@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.NumericType
 
 import graft.partition.KeyRangeSlicer
@@ -99,10 +99,9 @@ final class Slices(val key: SliceKey, rawCuts: => Seq[Long]) {
       throw new IllegalArgumentException(s"$key has no SQL form on $url")))
 
   /** The slice id of key value `k` (the key's column, or a column
-    * already holding it): the number of cuts at or below it; a NULL
-    * key gets 0. */
-  def id(k: Column): Column =
-    cuts.foldLeft(lit(0))((acc, c) => acc + when(k >= lit(c), 1).otherwise(0))
+    * already holding it): the number of cuts at or below it, by one
+    * binary search ([[graft.functions.SliceId]]); a NULL key gets 0. */
+  def id(k: Column): Column = graft.functions.SliceId(k, cuts)
 
   /** At most `n` slices, each a run of adjacent slices of this one (its
     * cuts are a subset of these cuts): a coarser read that still

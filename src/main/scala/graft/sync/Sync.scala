@@ -509,7 +509,8 @@ object Compare {
 
   /** Per-table CONTENT compare — the mode the reference cannot do: the
     * count check, then the row-exact [[SliceDiff]] of the whole table as
-    * one slice. Tables run in parallel, as many as the session has cores
+    * one slice: one Spark stage with no shuffle, each read task
+    * returning one (rows, sum) partial per side. Tables run in parallel, as many as the session has cores
     * (at most the [[PartitionedReader.MaxSlices]] connection ceiling);
     * rows come back in `tables` order. A destination that cannot be read
     * or lacks a source column reports NO; the counts read as in

@@ -2028,6 +2028,15 @@ class MainSpec extends SparkSpec {
       "--config", cfg), spark) == 2)
   }
 
+  test("a data command without --config prints the usage and exits 2; help needs none") {
+    val (rc, out) = captured("profile", "--table", "nation")
+    assert(rc == 2 && out.startsWith("no --config given; usage: graft <sync") &&
+      out.trim.endsWith("--config cfg.yml") && !out.contains("finished"), out)
+    val (helpRc, help) = captured("help")
+    assert(helpRc == 0 && help.startsWith("usage: graft <sync"), help)
+    assert(captured()._1 == 0)
+  }
+
   test("version exits 0 (reference cmd/version.go parity)") {
     assert(Main.run(Array("version"), spark) == 0)
   }

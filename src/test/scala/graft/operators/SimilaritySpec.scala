@@ -176,6 +176,26 @@ class SimilaritySpec extends SparkSpec {
       s"compact lost partition pruning:\n$plan")
   }
 
+  test("compacting an index whose every cell is one file submits no job and keeps its files") {
+    import graft.operators.similarity.IvfPq
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_n").toString
+    (0 until 3).foreach { i =>
+      IvfPq.appendIndex(emb.filter(col("vec_id") % 3 === i), col("embedding"), col("vec_id"), dir)
+    }
+    val (nb, na) = IvfPq.compactIndex(spark, dir)
+    assert(na < nb, s"compact did not reduce files: $nb -> $na")
+    def files = {
+      val root = new org.apache.hadoop.fs.Path(s"$dir/codes")
+      val it = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
+    val kept = files
+    val (again, jobs) = graft.sync.SparkJobs.inGroup(spark, "ivfpq-compact-again")(
+      graft.sync.Jobs.tagged(spark, "ivfpq-compact-again")(IvfPq.compactIndex(spark, dir)))
+    assert(again == ((na, na)) && jobs == 0 && files == kept, s"$again after $jobs jobs")
+  }
+
   test("batch IVFxPQ serving agrees with the single-probe path per probe") {
     import graft.operators.similarity.IvfPq
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_b").toString

@@ -88,6 +88,15 @@ class MediaIngestSpec extends SparkSpec {
     assert(af < bf, s"compact did not shrink files ($bf -> $af)")
     assert(spark.read.parquet(s"$dir/hashes").as[(Long, Long)]
       .collect().toSet == before, "compact changed index content")
+    // one hash file already: a second compaction rewrites none
+    def files = {
+      val root = new org.apache.hadoop.fs.Path(s"$dir/hashes")
+      val it = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
+    val kept = files
+    assert(af == 1L && MediaIngest.compactIndex(spark, dir) == ((1L, 1L)) && files == kept)
     // the rebuilt bloom + index still reject a replay and admit novelty
     assert(MediaIngest.appendBatch(media(Seq(10L)), dir).count() == 0)
     // pick a genuinely-far id (planted groups can collide in dHash)

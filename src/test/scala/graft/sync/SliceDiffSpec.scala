@@ -6,7 +6,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Test.{check, Parameters}
 
 import graft.{SparkSpec, Tables}
-import graft.catalog.ParquetCatalog
+import graft.catalog.{JdbcCatalog, ParquetCatalog}
 import graft.config.Endpoint
 
 /** The row-exact checksum diff and the content compare built on it:
@@ -85,6 +85,85 @@ class SliceDiffSpec extends SparkSpec {
       when(col("c_custkey") === 1, col("c_acctbal") + 0.0000000001)
         .otherwise(col("c_acctbal")))
     assert(SliceDiff(src, nudged, None).changed == Seq(0))
+  }
+
+  /** The diff as a shuffled aggregate: the slice id as one CASE term
+    * per cut, the hash summed as DECIMAL(38,0) per (side, slice).
+    * [[SliceDiff]] must agree with it on every input. */
+  private def aggregated(src: DataFrame, dst: DataFrame, slices: Option[Slices]): SliceDiff.Result = {
+    val cols = src.columns.sorted.toIndexedSeq
+    def hashed(df: DataFrame, side: Int): DataFrame = {
+      val frames = cols.map(SliceDiff.canonical(df, _)).map(v =>
+        coalesce(concat(length(v).cast("string"), lit(":"), v), lit("N")))
+      val h = conv(substring(md5(concat(frames: _*)), 1, 15), 16, 10).cast("decimal(38,0)")
+      val id = slices.fold(lit(0)) { s =>
+        s.cuts.foldLeft(lit(0))((acc, c) => acc + when(s.key.column >= lit(c), 1).otherwise(0))
+      }
+      df.select(lit(side).as("side"), id.as("slice"), h.as("h"))
+    }
+    val rows = hashed(dst, 1).union(hashed(src, 0))
+      .groupBy("side", "slice").agg(count(lit(1)), sum("h")).collect()
+    def side(i: Int): SliceDiff.Sums = rows.filter(_.getInt(0) == i).map(r =>
+      r.getInt(1) -> (r.getLong(2), BigInt(r.getDecimal(3).toBigInteger))).toMap
+    SliceDiff.Result(side(0), side(1))
+  }
+
+  private type KeyedRow = (Option[Long], Option[String], Option[Double])
+
+  private val genKeyedRow: Gen[KeyedRow] =
+    Gen.zip(Gen.option(Gen.choose(-6L, 6L)), genValue, Gen.option(Gen.oneOf(-0.5, 0.0, 2.5, 1e-11)))
+
+  /** Few rows, or one slice's worth past 63 rows, whose hash sum
+    * passes Long.MaxValue. */
+  private val genRows: Gen[List[KeyedRow]] =
+    Gen.oneOf(Gen.choose(0, 10), Gen.choose(64, 80)).flatMap(Gen.listOfN(_, genKeyedRow))
+
+  /** (source rows, destination rows, lead-key cuts, hashed-key slices):
+    * the destination empty, reordered, edited in place or unrelated. */
+  private val genSides = for {
+    src <- genRows
+    other <- genRows
+    edits <- Gen.listOf(Gen.choose(0, 80))
+    dst <- Gen.oneOf(Nil, new scala.util.Random(edits.sum).shuffle(src),
+      src.zipWithIndex.map { case (r, i) => if (edits.contains(i)) r.copy(_2 = Some("x")) else r },
+      other)
+    cuts <- Gen.listOf(Gen.choose(-6L, 6L)).map(_.take(6))
+    hashed <- Gen.choose(1, 6)
+  } yield (src, dst, cuts, hashed)
+
+  test("the one-stage diff equals the shuffled DECIMAL(38,0) aggregate on every input") {
+    var wide = false
+    val result = check(Parameters.default.withMinSuccessfulTests(25),
+      Prop.forAll(genSides) { case (srcRows, dstRows, cuts, hashed) =>
+        val src = srcRows.toDF("id", "a", "b")
+        val dst = dstRows.toDF("id", "a", "b").repartition(2)
+        Seq(None, Some(new Slices(SliceKey.Lead("id"), cuts)),
+          Some(new Slices(SliceKey.Hashed(Seq("a", "id")), HashKey.cuts(hashed)))).forall { s =>
+          val diff = SliceDiff(src, dst, s)
+          wide ||= (diff.src.values ++ diff.dst.values).exists(_._2 > Long.MaxValue)
+          diff == aggregated(src, dst, s)
+        }
+      })
+    assert(result.passed, result.status.toString)
+    assert(wide, "no generated slice summed past Long.MaxValue")
+  }
+
+  test("one SliceDiff is one Spark job that writes no shuffle bytes") {
+    val url = "jdbc:derby:memory:slicediffjobs;create=true"
+    val cat = new JdbcCatalog(Endpoint(url))
+    DdlReplay.replay(cat, Seq("CREATE TABLE jobsrc (id BIGINT NOT NULL PRIMARY KEY, v VARCHAR(16))"))
+    JdbcSink(Endpoint(url)).append((1L to 400L).map(i => (i, s"v$i")).toDF("id", "v"), "jobsrc")
+    val sink = JdbcSink(Endpoint(url))
+    sink.overwrite(cat.read(spark, "jobsrc"), "jobdst")
+    val (src, slices) = cat.readSliced(spark, "jobsrc", 16, 100L)
+    assert(slices.exists(_.count == 16) && src.rdd.getNumPartitions == 4)
+    val dst = Normalize.lowercaseColumns(sink.readBack(spark, "jobdst"))
+    for ((name, s) <- Seq("sliced" -> slices, "whole" -> None)) {
+      val (diff, jobs, shuffled) = SparkJobs.withShuffle(spark, s"slicediff-$name")(
+        Jobs.tagged(spark, s"slicediff-$name")(SliceDiff(src, dst, s)))
+      assert(diff.changed.isEmpty && diff.src.values.map(_._1).sum == 400L, s"$name: $diff")
+      assert(jobs == 1 && shuffled == 0L, s"$name: $jobs jobs, $shuffled shuffle bytes")
+    }
   }
 
   /** Source and destination parquet dirs holding `tables`. */

@@ -80,4 +80,34 @@ class SlicesSpec extends SparkSpec {
       })
     assert(result.passed, result.status.toString)
   }
+
+  /** Keys with fractions and negatives, NULL included, as exact decimals. */
+  private val typedGen = for {
+    keys <- Gen.listOf(Gen.option(Gen.oneOf(
+      Gen.choose(-1000, 1000).map(BigDecimal(_) / 100),
+      Gen.oneOf(BigDecimal("-0.5"), BigDecimal("2.5"), BigDecimal("-3"), BigDecimal("0")))))
+    cuts <- Gen.listOf(Gen.choose(-8L, 8L)).map(_.take(8))
+  } yield (keys.take(30), cuts)
+
+  test("INT, BIGINT, DOUBLE and DECIMAL(20,2) keys get the count of cuts at or below them") {
+    val result = check(Parameters.default.withMinSuccessfulTests(30),
+      Prop.forAll(typedGen) { case (keys, cuts) =>
+        val slices = new Slices(SliceKey.Lead("k"), cuts)
+        val ranges = (0 until slices.count).map(i => slices.ranges(Seq(i)).head.column)
+        Seq("int", "bigint", "double", "decimal(20,2)").forall { t =>
+          val rows = keys.toDF("raw").select(col("raw").cast(t).as("k"))
+            .select(col("k") +: slices.id(col("k")) +:
+              ranges.map(r => coalesce(r, lit(false))): _*)
+            .collect()
+          rows.forall { r =>
+            val id = r.getInt(1)
+            val expected =
+              if (r.isNullAt(0)) 0
+              else cuts.distinct.count(c => BigDecimal(c) <= BigDecimal(r.get(0).toString))
+            id == expected && ranges.indices.filter(i => r.getBoolean(2 + i)) == Seq(id)
+          }
+        }
+      })
+    assert(result.passed, result.status.toString)
+  }
 }
